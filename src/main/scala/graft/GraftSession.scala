@@ -9,21 +9,26 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   * The reference engine (see /root/reference/v1/src/main.rs:118-133) runs 16 fixed
   * tasks over a directory of parquet files; on Spark the equivalent knobs are the
   * shuffle-partition count and the file-split sizing, set here once so every entry
-  * point (tests, Verify, Bench) builds the same kind of session.
+  * point (tests, Verify, Bench, the dev tools, perfbench) builds the same kind of
+  * session — and [[build]] is the only place graft builds one.
   */
 object GraftSession {
 
-  /** Tuned local session. `cores` drives both parallelism and shuffle width —
-    * on a real cluster shuffle.partitions would instead track total executor cores
-    * (AQE coalesces the excess at runtime).
+  /** Tuned local session carrying [[GraftExtensions]] (graft's functions,
+    * optimizer rule and planner strategy). `cores` drives both parallelism and
+    * shuffle width — on a real cluster shuffle.partitions would instead track
+    * total executor cores (AQE coalesces the excess at runtime). It defaults to
+    * `SPARK_GRAFT_CPUS`, else 4.
     *
     * `extraConf` is applied LAST so callers can override any default above
     * (e.g. force-spill thresholds in tests). Note `getOrCreate` reuses a live
-    * session and ignores all configs — conf-sensitive callers (spill tests)
-    * must run with no pre-existing session, asserted here to fail loudly
-    * rather than silently drop their confs.
+    * session and ignores all configs and extensions — conf-sensitive callers
+    * (spill tests) must run with no pre-existing session, asserted here to
+    * fail loudly rather than silently drop their confs, and a reused session
+    * without the graft functions is refused the same way.
     */
-  def build(appName: String = "graft", cores: Int = 32,
+  def build(appName: String = "graft",
+            cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
             extraConf: Map[String, String] = Map.empty): SparkSession = {
     if (extraConf.nonEmpty)
       require(SparkSession.getActiveSession.isEmpty && SparkSession.getDefaultSession.isEmpty,
@@ -32,6 +37,7 @@ object GraftSession {
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -45,8 +51,11 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
     extraConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
+    if (!spark.catalog.functionExists("graft_poly_hash"))
+      throw new IllegalStateException("getOrCreate returned a SparkSession built " +
+        "without graft.GraftExtensions; stop it first, or build it with " +
+        "spark.sql.extensions=graft.GraftExtensions")
     spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     spark
   }
 
@@ -97,14 +106,12 @@ object GraftSession {
   val tableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** The SQL surface: register every fixture table as a temp view and the
-    * graft functions on the session, so `spark.sql("SELECT graft_poly_hash
-    * (text) FROM documents ...")` works directly — the way the reference's
-    * own analysis corpus is written (the datasets/snowset SQL files).
+  /** The SQL surface: register every fixture table as a temp view, so on a
+    * [[build]] session `spark.sql("SELECT graft_poly_hash(text) FROM
+    * documents ...")` works directly — the way the reference's own analysis
+    * corpus is written (the datasets/snowset SQL files).
     */
   def registerViews(spark: SparkSession, dir: String): Unit = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    org.apache.spark.sql.graft.GraftFunctions.ensureOptimizations(spark)
     tableNames.foreach { n =>
       val f = new java.io.File(s"$dir/$n.parquet")
       if (f.exists()) cachedTable(spark, dir, n).createOrReplaceTempView(n)

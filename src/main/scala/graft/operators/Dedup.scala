@@ -29,15 +29,10 @@ object Dedup {
     * hash-aggregate; at 100 TB this is the cheapest possible full-corpus op.
     */
   def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    withGraftFns(docs)
+    docs
       .select(col(idCol), expr(s"graft_poly_hash(lower(trim($textCol)))").as("fp"))
       .groupBy("fp")
       .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_dups"))
-
-  private def withGraftFns(df: DataFrame): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(df.sparkSession)
-    df
-  }
 
   /** Staging barrier for an intermediate consumed by several plan legs
     * (frequency count, prefix explode, verify join): without one Catalyst
@@ -48,14 +43,11 @@ object Dedup {
     * ContextCleaner when the RDD is unreferenced — vs lazy `cache()`,
     * which computes once per consumer *stage set* but pins the cached plan
     * in the session's storage until someone unpersists (the round-9 leak:
-    * nothing did). Checkpoint won the A/B and is the default; `cache` is
-    * kept behind `-Dgraft.stage.barrier=cache` for re-measurement. The
-    * x73 precedent (corpus-sized staged tables want the checkpoint
-    * barrier) transfers to 100 TB unchanged.
+    * nothing did). Checkpoint won the A/B. The x73 precedent (corpus-sized
+    * staged tables want the checkpoint barrier) transfers to 100 TB
+    * unchanged.
     */
-  private[graft] def stage(df: DataFrame): DataFrame =
-    if (sys.props.get("graft.stage.barrier").contains("cache")) df.cache()
-    else df.localCheckpoint()
+  private[graft] def stage(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** MinHash signature of length `k` over distinct token-`n`-gram shingle
     * hashes (native expressions: one tight loop per row — see
@@ -75,7 +67,7 @@ object Dedup {
     // paths, where a fan-out repartition per bounded micro-batch is pure
     // overhead (measured on the r18 streaming admit rows; the corpus
     // A/B lost too — OPTIMIZATION_r18.md)
-    withGraftFns(docs)
+    docs
       .select(col(idCol),
         expr(s"graft_shingle_hashes(graft_token_hashes($textCol), $shingleN)").as("shingles"))
       .select(col(idCol), col("shingles"),
@@ -159,7 +151,7 @@ object Dedup {
     * [[graft.sources.Layouts.minhashIndex]]).
     */
   def exactFingerprints(docs: DataFrame, textCol: String = "text"): DataFrame =
-    withGraftFns(docs)
+    docs
       .select(expr(s"graft_poly_hash(lower(trim($textCol)))").as("fp")).distinct()
 
   /** Incremental ingest dedup: classify each INCOMING doc against the
@@ -238,7 +230,7 @@ object Dedup {
       bands: Int = 8,
       shingleN: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    val fpIn = withGraftFns(incoming).select(col(idCol),
+    val fpIn = incoming.select(col(idCol),
       expr(s"graft_poly_hash(lower(trim($textCol)))").as("fp"))
     val exactDup = fpIn.join(fpEx, Seq("fp"), "left_semi").select(col(idCol))
     val survivors = incoming.join(exactDup, Seq(idCol), "left_anti")
@@ -354,7 +346,7 @@ object Dedup {
       n: Int = 12,
       threshold: Double = 0.5,
       gridM: Int = 4): DataFrame = {
-    val sets = stage(withGraftFns(docs)
+    val sets = stage(docs
       .select(col(idCol), expr(s"graft_char_ngram_hashes($textCol, $n)").as("grams"))
       .select(col(idCol), col("grams"),
         size(col("grams")).as("ng"), array_min(col("grams")).as("block")))
@@ -410,7 +402,7 @@ object Dedup {
     */
   private[graft] def sortedSets(
       sets: DataFrame, idCol: String, setCol: String): DataFrame =
-    withGraftFns(sets)
+    sets
       .select(col(idCol), array_sort(col(setCol)).as("s"))
       .select(col(idCol), col("s"), size(col("s")).as("ns"))
 
@@ -517,7 +509,7 @@ object Dedup {
       shingleN: Int = 3,
       threshold: Double = 0.5): DataFrame = {
     val sortedIn = stage(sortedSets(
-      withGraftFns(incoming).select(col(idCol),
+      incoming.select(col(idCol),
         expr(s"graft_shingle_hashes(graft_token_hashes($textCol), $shingleN)")
           .as("shingles")),
       idCol, "shingles"))
@@ -592,7 +584,7 @@ object Dedup {
     * per occurrence (standard frequency weight).
     */
   def simhashed(docs: DataFrame, idCol: String, textCol: String, bits: Int = 64): DataFrame =
-    withGraftFns(docs)
+    docs
       .select(col(idCol), expr(s"graft_simhash(graft_token_hashes($textCol), $bits)").as("sh"))
 
   /** Banded SimHash rows for the PERSISTED near-dup index (x173): four

@@ -87,7 +87,6 @@ object ExtensionCatalog {
     * [[graft.tools.ScaleSmoke]]'s corpus-replication curve.
     */
   private[graft] def cdcChunks(docs: DataFrame): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(docs.sparkSession)
     docs
       .select(expr("graft_token_hashes(text)").as("fps"))
       .select(col("fps"), size(col("fps")).as("n"))
@@ -113,7 +112,6 @@ object ExtensionCatalog {
     * string. Shared with [[graft.tools.ScaleSmoke]].
     */
   private[graft] def dupSpanWindows(docs: DataFrame): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(docs.sparkSession)
     // graft_window_hashes: the positional 8-token rolling-hash kernel,
     // native + codegen'd (the interpreted aggregate-over-slice HOF fold it
     // replaces was the dominant term of x123/x128 — same arithmetic,
@@ -701,7 +699,6 @@ object ExtensionCatalog {
     CatalogEntry(
       "x17_corpus_clean",
       (s, dir) => {
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val docs = t(s, dir, "documents")
         // stage 1: quality filter (same arithmetic x02 proves exact)
         val quality = docs
@@ -843,7 +840,6 @@ object ExtensionCatalog {
     CatalogEntry(
       "x21_source_sketch",
       (s, dir) => {
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val sigs = t(s, dir, "documents")
           .select(col("source"),
             expr("graft_shingle_hashes(graft_token_hashes(text), 3)").as("shingles"))
@@ -1052,7 +1048,6 @@ object ExtensionCatalog {
     CatalogEntry(
       "x28_deterministic_split",
       (s, dir) => {
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val sampled = graft.operators.Sampling.stratifiedSample(
           t(s, dir, "documents"), "doc_id", "source",
           Map("src1" -> 100, "src2" -> 50, "src3" -> 25))
@@ -1155,9 +1150,7 @@ object ExtensionCatalog {
     CatalogEntry(
       "x31_repetition_score",
       (s, dir) => {
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         // size(ngram_hashes) fuses to the count-only kernel (GraftRewrites)
-        org.apache.spark.sql.graft.GraftFunctions.ensureOptimizations(s)
         t(s, dir, "documents")
           .select(col("doc_id"),
             expr("CAST(size(graft_char_ngram_hashes(text, 8)) AS BIGINT)").as("distinct_grams"),
@@ -1757,7 +1750,6 @@ object ExtensionCatalog {
         // MinHash positional-match estimate of Jaccard vs the exact value —
         // the calibration readout that justifies a 16-perm sketch before
         // relying on it at corpus scale.
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val docs = t(s, dir, "documents")
         val sigs = Dedup.minhashSignature(docs, k = 16, shingleN = 3)
         val cands = Dedup.lshCandidates(sigs, "doc_id", bands = 8, rowsPerBand = 2)
@@ -2229,7 +2221,6 @@ object ExtensionCatalog {
         // map-side combinable, so a popular shingle costs one long per
         // partition, not a hot reducer), one back on doc_id. Docs with < 3
         // tokens have no shingles and drop out — same on both sides.
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val sh = t(s, dir, "documents").select(col("doc_id"),
           explode(expr("graft_shingle_hashes(graft_token_hashes(text), 3)")).as("sh"))
         val first = sh.groupBy("sh").agg(min("doc_id").as("first_doc"))
@@ -2912,7 +2903,6 @@ object ExtensionCatalog {
         // shape that replaces the exact-DISTINCT leg (kept here as the
         // comparison) at 100 TB. (m-b)/m is a dyadic-exact double; ln/round
         // follow the x42 idf precedent.
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val m = 65536
         t(s, dir, "documents")
           .select(col("source"),
@@ -3209,7 +3199,6 @@ object ExtensionCatalog {
         // trigram string (native kernel, one tight loop per row; the
         // shuffle moves longs). Hash collisions can only widen the
         // candidate set, and contains() verifies — output is identical.
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val pat = "table part"
         // pattern hashes from the SAME kernel the posting side runs
         // (code-point windows, distinct) — UTF-16 index arithmetic here
@@ -3260,7 +3249,6 @@ object ExtensionCatalog {
         // (per-source, per-source×lang); entropy terms are rounded to
         // integer micro-nats BEFORE the per-source sum (the x81 rule), so
         // the only float math is per-row scalar.
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val d = t(s, dir, "documents").select(col("source"), col("lang"),
           tokenCount("text").cast("long").as("nt"),
           expr("graft_poly_hash(lower(trim(text)))").as("fp"))
@@ -3637,7 +3625,6 @@ object ExtensionCatalog {
         // shuffle (map-side combined counts), one join back. Chunk fps
         // come from the native span-hash kernel (one pass over the text,
         // no rebuilt chunk strings).
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val chunks = t(s, dir, "documents")
           .select(col("doc_id"),
             explode(expr("graft_chunk_hashes(text, 16)")).as("fp"))
@@ -3774,7 +3761,6 @@ object ExtensionCatalog {
         // All inputs are exact integer counts; the interval itself is
         // per-row scalar double (sqrt precedent: cosine distances).
         val z2 = 1.96 * 1.96
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val d = t(s, dir, "documents").select(col("source"),
           expr("graft_poly_hash(lower(trim(text)))").as("fp"))
         val base = d.groupBy("source").agg(
@@ -3821,7 +3807,6 @@ object ExtensionCatalog {
         // per-source dataset card (x88's volume leg). Every stage is the
         // already-proven operator; chunk-less docs pass the boilerplate
         // stage by definition.
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val docs = t(s, dir, "documents")
         val quality = docs
           .select(col("doc_id"), col("source"), col("text"),
@@ -3959,7 +3944,6 @@ object ExtensionCatalog {
         // chunk fps come positionally from the native span-hash kernel
         // (element i+1 is chunk i's fp); only the kept chunks' TEXT still
         // needs the concat_ws rebuild — cheap codegen, no interpreted fold
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val chunkTxt = "concat_ws(' ', slice(toks, i * 16 + 1, 16))"
         val chunks = t(s, dir, "documents")
           .select(col("doc_id"), split(col("text"), " ").as("toks"),
@@ -4008,7 +3992,6 @@ object ExtensionCatalog {
         // Stage membership tables are the same frames x100 builds; the
         // manifest is four equi left-joins of their ids onto the corpus
         // spine — auditable curation, no new shuffle shapes.
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val docs = t(s, dir, "documents")
         val quality = docs
           .select(col("doc_id"), col("source"), col("text"),
@@ -4137,7 +4120,6 @@ object ExtensionCatalog {
         // id%5==0, v2 skips id%7==0 and rewrites text for id%11==0), so the
         // oracle replays them exactly. One equi-shuffle on doc_id; the
         // fingerprint compare is map-side.
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val docs = t(s, dir, "documents")
         val v1 = docs.where(col("doc_id") % 5 =!= 0)
           .select(col("doc_id"), expr("graft_poly_hash(text)").as("fp1"))
@@ -4765,7 +4747,6 @@ object ExtensionCatalog {
         // (the native token-hash kernel tokenizes and hashes in one loop
         // per row; the interpreted per-token HOF walk this replaces was
         // the query's whole cost).
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         val toks = t(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             explode(expr("graft_token_hashes(text)")).as("th"))
@@ -5120,7 +5101,6 @@ object ExtensionCatalog {
         // GUARANTEED to share a selected fingerprint. Selection is per-doc
         // array HOFs; the only shuffle is the fingerprint count. Sharing is
         // scored on distinct fingerprints per doc.
-        org.apache.spark.sql.graft.GraftFunctions.register(s)
         // fanOut: the window-hash + selection HOFs are the row's whole
         // cost and the fixture scan plans one task (guide §2.5); the
         // shared-fingerprint aggregates below are counts — value-neutral

@@ -1131,7 +1131,6 @@ object Layouts {
       pageRows: Int = 20000,
       partitions: Int = 0): Unit = {
     import graft.operators.Dedup
-    org.apache.spark.sql.graft.GraftFunctions.register(docs.sparkSession)
     val sorted = Dedup.sortedSets(
       docs.select(col(idCol),
         expr(s"graft_shingle_hashes(graft_token_hashes($textCol), $shingleN)")

@@ -25,7 +25,6 @@ object StreamDedup {
     StructField("n_chars", LongType)))
 
   def dedupByFingerprint(spark: SparkSession, dir: String, sinkName: String) = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     spark.readStream
       .schema(docSchema)
       .option("maxFilesPerTrigger", "1")

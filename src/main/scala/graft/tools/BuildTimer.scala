@@ -28,8 +28,7 @@ object BuildTimer {
     val which = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.build("graft-buildtimer", cores = cpus)
+    val spark = GraftSession.build("graft-buildtimer")
     spark.sparkContext.setLogLevel("ERROR")
     val emb = GraftSession.table(spark, sfDir, "embeddings").where(col("vec_id") >= 10)
     // x101's posting index stages over the FULL corpus; the two ingest

@@ -1,22 +1,14 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
-/** Dev tool: time one catalog query (args: name sfDir [explain]). */
+/** Dev tool: time one catalog query on the bench's session
+  * (args: name sfDir [explain]). */
 object QueryTimer {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-querytimer")
     // comma-separated names: earlier ones double as in-JVM warm-up, so the
     // last number is a warm measurement (Bench-style) not a cold-JIT one
     name.split(",").foreach { n =>

@@ -109,13 +109,12 @@ object ScaleSweep {
     val famFilter: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     def want(family: String): Boolean = famFilter.forall(_.contains(family))
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     // SWEEP_NO_COALESCE=1: A/B hook for the AQE partition-coalescing
     // hypothesis — byte-targeted coalescing under-parallelizes CPU-heavy
     // per-row stages (dot-product assignment) at middle scales where the
     // shuffled bytes are small but the compute is not
     // SWEEP_INIT_PARTITIONS=N: A/B hook for shuffle-width headroom — raise
-    // AQE's initialPartitionNum above the fixed `cores` width so large
+    // AQE's initialPartitionNum above the fixed session width so large
     // shuffles (the 100× prefix join's exploded posting lists) split into
     // bounded per-partition hash-build state instead of growing with scale
     val extra =
@@ -124,8 +123,7 @@ object ScaleSweep {
       else Map.empty[String, String]) ++
       sys.env.get("SWEEP_INIT_PARTITIONS").map(n =>
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> n)
-    val spark = GraftSession.build("graft-scalesweep", cores = cores.toInt,
-      extraConf = extra)
+    val spark = GraftSession.build("graft-scalesweep", extraConf = extra)
     spark.sparkContext.setLogLevel("ERROR")
     // SWEEP_STAGE_LOG=1: per-stage wall/task attribution on stderr — the
     // probe for "which stage starves the cores" (a cell whose timeline
@@ -203,7 +201,7 @@ object ScaleSweep {
       spark.sharedState.cacheManager.clearCache()
     }
 
-    val par = cores.toInt * 2
+    val par = spark.sparkContext.defaultParallelism * 2
     // Streaming ANN serving support (VERDICT r13 #4): per-trigger latency
     // collected from the engine's own progress events (the Bench listener
     // pattern); zero-input drain triggers excluded. The index is built

@@ -15,8 +15,7 @@ object StageProfile {
     require(args.length >= 2, "usage: StageProfile <sfDir> <name> [reps]")
     val (sfDir, name) = (args(0), args(1))
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.build("graft-stageprofile", cores = cores)
+    val spark = GraftSession.build("graft-stageprofile")
     spark.sparkContext.setLogLevel("ERROR")
     // A/B hook: comma-separated k=v runtime SQL confs, e.g.
     // SPARK_GRAFT_SQLCONF=spark.sql.adaptive.coalescePartitions.parallelismFirst=false

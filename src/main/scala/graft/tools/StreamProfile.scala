@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Per-trigger duration breakdown for one streaming serving row — the
   * diagnostic the x166 driver-cadence regression needed (VERDICT r16 #1:
@@ -16,16 +16,7 @@ object StreamProfile {
   def main(args: Array[String]): Unit = {
     val row = args.headOption.getOrElse("stream_x166_attrib_serve")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-streamprofile")
     spark.streams.addListener(
       new org.apache.spark.sql.streaming.StreamingQueryListener {
         override def onQueryStarted(

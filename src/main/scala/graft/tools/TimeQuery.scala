@@ -15,8 +15,7 @@ object TimeQuery {
     val (sfDir, name) = (args(0), args(1))
     val reps = if (args.length > 2) args(2).toInt else 3
     require(reps > 0, s"reps must be positive, got $reps")
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = GraftSession.build("graft-timequery", cores = cores)
+    val spark = GraftSession.build("graft-timequery")
     spark.sparkContext.setLogLevel("ERROR")
     // A/B hook: comma-separated k=v runtime SQL confs, e.g.
     // SPARK_GRAFT_SQLCONF=spark.sql.adaptive.coalescePartitions.parallelismFirst=false

@@ -1,63 +1,15 @@
 package org.apache.spark.sql.graft
 
-import graft.functions.expressions._
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Registers the native hash expressions as SQL functions
-  * (`graft_poly_hash`, `graft_char_ngram_hashes`, `graft_token_hashes`,
-  * `graft_shingle_hashes`, `graft_minhash_sig`, `graft_simhash`).
-  *
-  * Lives under `org.apache.spark.sql` because `SparkSession.sessionState`
-  * is `private[sql]`; this is the same access pattern a
-  * SparkSessionExtensions-injected function would get, without requiring
-  * every caller to pre-configure the session. Registration is idempotent
-  * (createOrReplace) and per-session.
+/** Column ↔ Expression bridge for graft's native expressions (classic
+  * backend; `private[sql]` surface, hence the package). The SQL names
+  * (`graft_poly_hash`, …) are registered once, by [[graft.GraftExtensions]].
   */
 object GraftFunctions {
 
-  /** Column ↔ Expression bridge (classic backend; `private[sql]` surface). */
   def column(e: Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
   def expression(c: org.apache.spark.sql.Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
-
-  private def intArg(e: Expression, fn: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal int argument, got: $other")
-  }
-
-  /** Attach [[graft.plans.GraftRewrites]] to a live session (idempotent) —
-    * the non-extensions route to the optimizer fusions.
-    */
-  def ensureOptimizations(spark: SparkSession): Unit = {
-    val es = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!es.extraOptimizations.contains(graft.plans.GraftRewrites))
-      es.extraOptimizations = es.extraOptimizations :+ graft.plans.GraftRewrites
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_poly_hash",
-      args => PolyHash(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_char_ngram_hashes",
-      args => CharNgramHashes(args.head, intArg(args(1), "graft_char_ngram_hashes")), "built-in")
-    reg.createOrReplaceTempFunction("graft_token_hashes",
-      args => TokenHashes(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      args => ShingleHashes(args.head, intArg(args(1), "graft_shingle_hashes")), "built-in")
-    reg.createOrReplaceTempFunction("graft_window_hashes",
-      args => WindowHashes(args.head, intArg(args(1), "graft_window_hashes")), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      args => MinHashSig(args.head, intArg(args(1), "graft_minhash_sig")), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      args => SimHash(args.head, intArg(args(1), "graft_simhash")), "built-in")
-    reg.createOrReplaceTempFunction("graft_intersect_size",
-      args => IntersectSize(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_chunk_hashes",
-      args => ChunkHashes(args.head, intArg(args(1), "graft_chunk_hashes")), "built-in")
-  }
 }

@@ -6,22 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Builders for graft's custom logical plans (`private[sql]` bridge, same
-  * placement rationale as [[GraftFunctions]]). The session must have
-  * [[graft.GraftExtensions]] applied (or
-  * `spark.sql.extensions=graft.GraftExtensions`) so the planner knows the
-  * strategy; [[ensureStrategy]] attaches it to an already-built session.
+  * placement rationale as [[GraftFunctions]]). The planner knows the
+  * strategy only through [[graft.GraftExtensions]], which every session
+  * from [[graft.GraftSession.build]] carries (on a cluster:
+  * `spark.sql.extensions=graft.GraftExtensions`).
   */
 object GraftPlans {
-
-  /** Attach [[graft.plans.AsOfJoinStrategy]] to a live session
-    * (idempotent) — the non-extensions registration route.
-    */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val es = ss.experimental
-    if (!es.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      es.extraStrategies = es.extraStrategies :+ graft.plans.AsOfJoinStrategy
-  }
 
   /** Plan-native as-of join: same contract as
     * [[graft.operators.AsOfJoin.lastPrior]] — each left row gains
@@ -38,7 +28,6 @@ object GraftPlans {
       carry: Seq[String],
       rightTieBreak: String): DataFrame = {
     val spark = left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    ensureStrategy(spark)
     val lp = left.queryExecution.analyzed
     val rpRaw = right.queryExecution.analyzed
     // self-join safety: when both sides descend from the same scan they

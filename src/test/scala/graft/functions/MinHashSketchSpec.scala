@@ -9,7 +9,6 @@ class MinHashSketchSpec extends AnyFunSuite with Matchers {
   private lazy val spark = SparkTestSession.spark
 
   private lazy val shingled = {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     GraftSession.table(spark, SparkTestSession.sf0001, "documents")
       .select(col("source"),
         expr("graft_shingle_hashes(graft_token_hashes(text), 3)").as("shingles"))

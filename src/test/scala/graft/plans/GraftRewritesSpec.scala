@@ -2,7 +2,6 @@ package graft.plans
 
 import graft.SparkTestSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftFunctions
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -10,8 +9,6 @@ class GraftRewritesSpec extends AnyFunSuite with Matchers {
   private lazy val spark = SparkTestSession.spark
 
   test("size(ngram_hashes) fuses to the count-only kernel, same values") {
-    GraftFunctions.register(spark)
-    GraftFunctions.ensureOptimizations(spark)
     val docs = spark.read.parquet(s"${SparkTestSession.sf0001}/documents.parquet")
     val fused = docs.selectExpr("doc_id", "size(graft_char_ngram_hashes(text, 8)) AS d")
     val plan = fused.queryExecution.optimizedPlan.toString
@@ -27,8 +24,6 @@ class GraftRewritesSpec extends AnyFunSuite with Matchers {
   }
 
   test("rule does not fire under legacy sizeOfNull semantics") {
-    GraftFunctions.register(spark)
-    GraftFunctions.ensureOptimizations(spark)
     // ANSI mode (default-on in Spark 4) forces size(NULL)=NULL regardless
     // of the legacy flag; the legacy behavior needs both toggles
     spark.conf.set("spark.sql.ansi.enabled", "false")
@@ -48,7 +43,6 @@ class GraftRewritesSpec extends AnyFunSuite with Matchers {
   }
 
   test("rule leaves other size() calls alone") {
-    GraftFunctions.ensureOptimizations(spark)
     val df = spark.range(3).selectExpr("size(array(id, id)) AS s")
     df.collect().map(_.getInt(0)).toSeq shouldBe Seq(2, 2, 2)
   }

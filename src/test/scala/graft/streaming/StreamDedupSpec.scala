@@ -10,7 +10,6 @@ class StreamDedupSpec extends AnyFunSuite with Matchers {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val in = java.nio.file.Files.createTempDirectory("fb-in").toString
     val sink = java.nio.file.Files.createTempDirectory("fb-out").toString + "/dedup"
     def land(name: String, rows: Seq[(Long, String)]): Unit = {
