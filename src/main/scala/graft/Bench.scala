@@ -430,7 +430,7 @@ object Bench {
     // reference's own metadata-phase / query-phase split
     // (v1/src/main.rs:118-133 vs 137-156).
     val buildResults = graft.queries.ExtensionCatalog.stagedBuilds
-      .map { case (label, f) => label -> runThunk(label)(f(spark, sfDir)) }
+      .map(b => b.label -> runThunk(b.label)(b(spark, sfDir)))
     val queryResults = names.map(n => n -> run(n))
     // Steady-state streaming serving rows AFTER the batch sweep (VERDICT
     // r12 #6): real Structured Streaming queries (ANN serving against the

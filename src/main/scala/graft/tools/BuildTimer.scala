@@ -3,25 +3,14 @@ package graft.tools
 import graft.GraftSession
 import org.apache.spark.sql.functions._
 
-/** Dev tool: time a staged-index BUILD repeatedly with a fresh output dir
-  * per rep (the catalog's stagedBuilds memoize per fixture dir, so Bench
-  * rows can't be re-run in one JVM — this calls the Layouts builders
-  * directly). args:
-  * <ivf|ivf2|posting|minhash|jaccard|compact|rebuild_grown> <sfDir>
-  * [reps]. Prints per-rep walls and the median, Bench-style
-  * (cache-clear + GC between reps). `compact` times ONLY the
-  * minhashCompact rebase over a per-rep fresh x155-shaped grown index
-  * (gen-0 build + gen-1 ADMITTED append, both untimed); `rebuild_grown`
-  * times the from-scratch build over the same grown corpus — together
-  * the measured form of SCALING.md's O(index)-vs-O(corpus) rebase
-  * claim.
-  *
-  * Each variant reproduces ITS bench row's exact inputs and knobs
-  * (ExtensionCatalog's staged builders: posting over the full corpus,
-  * the two ingest indexes over the EVEN doc half, all three with 256 KB
-  * groups / 2000-row pages) — this tool exists to cross-check those
-  * rows, so a mismatched corpus or layout knob would produce a wrong
-  * parity verdict (review r14).
+/** Dev tool: the measured form of SCALING.md's O(index)-vs-O(corpus)
+  * rebase claim. args: <compact|rebuild_grown> <sfDir> [reps]. `compact`
+  * times ONLY the minhashCompact rebase over a per-rep fresh x155-shaped
+  * grown index (gen-0 build + gen-1 ADMITTED append, both untimed);
+  * `rebuild_grown` times the from-scratch build over the same grown
+  * corpus. Prints per-rep walls and the median, Bench-style (cache-clear
+  * + GC between reps). To re-time a bench build row, use
+  * `StageProfile <sfDir> build_… [reps]`, which runs the real staged node.
   */
 object BuildTimer {
   def main(args: Array[String]): Unit = {
@@ -30,14 +19,9 @@ object BuildTimer {
     val reps = if (args.length > 2) args(2).toInt else 5
     val spark = GraftSession.build("graft-buildtimer")
     spark.sparkContext.setLogLevel("ERROR")
-    val emb = GraftSession.table(spark, sfDir, "embeddings").where(col("vec_id") >= 10)
-    // x101's posting index stages over the FULL corpus; the two ingest
-    // indexes (x117/x139) stage over the even "existing" half
     val docs = GraftSession.table(spark, sfDir, "documents")
-    val evenDocs = docs.where(col("doc_id") % 2 === 0)
-    def freshOut(): String = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get("target/graft-scratch")), s"buildtimer-$which").toString
+    def freshOut(): String =
+      graft.queries.ExtensionCatalog.stagedScratch(s"buildtimer-$which")
     // grown-lifecycle fixtures for the maintenance-path timings: gen-0
     // base plus a gen-1 batch, the x153/x155 staging split
     val g0 = docs.where(col("doc_id") % 3 === 0)
@@ -87,16 +71,6 @@ object BuildTimer {
       }
       val t0 = System.nanoTime()
       which match {
-        case "ivf" => graft.sources.Layouts.ivfIndex(emb, out,
-          centModulo = 50, twoLevel = Some(false))
-        case "ivf2" => graft.sources.Layouts.ivfIndex(emb, out,
-          centModulo = 50, twoLevel = Some(true))
-        case "posting" => graft.sources.Layouts.postingIndex(docs, out,
-          groupBytes = 256L * 1024, pageRows = 2000)
-        case "minhash" => graft.sources.Layouts.minhashIndex(evenDocs, out,
-          groupBytes = 256L * 1024, pageRows = 2000)
-        case "jaccard" => graft.sources.Layouts.jaccardIndex(evenDocs, out,
-          groupBytes = 256L * 1024, pageRows = 2000)
         // the x155 A/B pair: the rebase alone (corpus never rescanned)
         // vs the from-scratch rebuild over the same grown corpus — the
         // measured form of SCALING.md's O(index) vs O(corpus) claim

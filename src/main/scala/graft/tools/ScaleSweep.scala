@@ -223,15 +223,8 @@ object ScaleSweep {
           }
         }
       })
-    lazy val annIdx: String = {
-      val out = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get("target/graft-scratch")), "sweep-annidx").toString
-      graft.sources.Layouts.ivfIndex(
-        GraftSession.table(spark, sfDir, "embeddings").where(col("vec_id") >= 10),
-        out, centModulo = 50, twoLevel = Some(false))
-      out
-    }
+    lazy val annIdx: String =
+      graft.queries.ExtensionCatalog.stagedIvfIndex(spark, sfDir) // x144's index
     // per-scale p50s across ALL repeats — the flatness verdict compares
     // per-scale MEDIANS, the same noise discipline as the wall cells
     val annServeP = scala.collection.mutable.LinkedHashMap
@@ -662,16 +655,13 @@ object ScaleSweep {
           // build families' discipline — review r16: billing the c-scaled
           // recursive delete to the cell inflated every measurement);
           // repeats overwrite the same dir, which is zordered's own mode
-          val out = java.nio.file.Files.createTempDirectory(
-            java.nio.file.Files.createDirectories(
-              java.nio.file.Paths.get("target/graft-scratch")),
-            "sweep-zorder").toString
+          val out = graft.queries.ExtensionCatalog.stagedScratch("sweep-zorder")
           try record("zorder_write", c) {
             graft.sources.Layouts.zordered(
               ev.select("event_id", "user_id", "value"), out, "user_id", "value")
             spark.read.parquet(out).count()
           } finally // delete on failure too: the c-scaled Morton layout
-            // would otherwise leak under target/graft-scratch (ADVICE r16)
+            // would otherwise leak under the scratch base (ADVICE r16)
             scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
         }
         if (want("stream_attribution")) record("stream_attribution", c)(
@@ -689,8 +679,7 @@ object ScaleSweep {
         annIdx // force the one-time index build OUTSIDE the timed cell
         record("ann_serve", c) {
           annTriggers.clear()
-          val base = java.nio.file.Files.createTempDirectory(
-            java.nio.file.Paths.get("target/graft-scratch"), "sweep-annserve").toString
+          val base = graft.queries.ExtensionCatalog.stagedScratch("sweep-annserve")
           val in = s"$base/in"
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
           // ONE write job per repeat; the c byte-identical feed files are

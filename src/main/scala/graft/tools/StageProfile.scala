@@ -9,6 +9,12 @@ import graft.{GraftSession, SparkEntry}
   * TimeQuery's one wall number and the full Bench run: says WHERE a row's
   * time goes (which exchange, which scan, codegen-heavy stage) without a
   * UI. args: <sfDir> <name> [reps]
+  *
+  * A `build_…` name runs the staged node's `fresh` build on EVERY rep,
+  * into a new scratch dir, so each rep is a real build. Rep 1 also pays
+  * for any shared template the node forces (as the Bench row that first
+  * forces it does); later reps find the template built and time the node
+  * net of it.
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
@@ -45,8 +51,9 @@ object StageProfile {
 
     val thunk: () => Unit =
       if (name.startsWith("build_")) {
-        val b = graft.queries.ExtensionCatalog.stagedBuilds.toMap.apply(name)
-        () => b(spark, sfDir)
+        val b = graft.queries.ExtensionCatalog.stagedBuilds.find(_.label == name)
+          .getOrElse(sys.error(s"unknown build row '$name'"))
+        () => b.fresh(spark, sfDir)
       } else { () =>
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
