@@ -15,10 +15,9 @@ import org.apache.spark.sql.functions._
   * cross-term float sum, ties broken by doc_id. Serving cost is
   * O(matching postings), never a corpus scan; the doc length comes
   * denormalized out of the posting row so no per-doc table is joined.
-  * Each table resolves its own manifest generation when managed
-  * ([[graft.sources.Layouts.manageBm25]]); generations of a table are
-  * content-equivalent through their folds, so cross-table version skew
-  * cannot produce a state no single index version had.
+  * Each table resolves its own manifest generation; generations of a
+  * table are content-equivalent through their folds, so cross-table
+  * version skew cannot produce a state no single index version had.
   */
 object Bm25 {
 

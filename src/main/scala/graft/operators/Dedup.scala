@@ -197,10 +197,9 @@ object Dedup {
       threshold: Double): DataFrame = {
     implicit val spark: org.apache.spark.sql.SparkSession = incoming.sparkSession
     val meta = spark.read.parquet(s"$indexPath/meta").head()
-    // manifest-managed indexes resolve to the current immutable
-    // generation ONCE, so all three table reads see one consistent root
-    // even while a compact publishes (legacy flat indexes resolve to the
-    // path itself); meta stays at the index path in both layouts
+    // resolve the current immutable generation ONCE, so all three table
+    // reads see one consistent root even while a compact publishes; meta
+    // stays at the index path
     val root = graft.sources.Layouts.indexRoot(indexPath)
     incrementalDedupStaged(incoming,
       spark.read.parquet(s"$root/fp"),

@@ -346,8 +346,7 @@ object SimilaritySearch {
     implicit val s: org.apache.spark.sql.SparkSession = queries.sparkSession
     val cent = broadcast(s.read.parquet(s"$indexPath/cent")
       .select(col("cent_id"), col("centv"), norm(col("centv")).as("centn")))
-    // manifest-managed index (Layouts.manageIvf): resolve the current
-    // immutable generation once; legacy flat indexes resolve to the path
+    // resolve the current immutable generation once
     val lists = s.read.parquet(
       s"${graft.sources.Layouts.indexRoot(indexPath)}/assign")
     val probes = nearestCells(queries, cent, "query", nprobe, idCol, vecCol)
@@ -356,16 +355,10 @@ object SimilaritySearch {
       // partition column and the pruning rule can match it
       .select(col("query_id"), col("queryv"), col("queryn"),
         col("cent_id").cast(lists.schema("cent_id").dataType).as("cent_id"))
-    // pre-corpusn layouts (the write-once contract means an index can
-    // outlive the release that wrote it) fall back to recomputing the
-    // norm per candidate — correct, just the old per-pair cost
-    val cn =
-      if (lists.columns.contains("corpusn")) col("corpusn")
-      else norm(col("corpusv"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("corpus_id"))
     lists.join(broadcast(probes), "cent_id")
       .select(col("query_id"), col("corpus_id"),
-        (dot(col("queryv"), col("corpusv")) / col("queryn") / cn).as("cos"))
+        (dot(col("queryv"), col("corpusv")) / col("queryn") / col("corpusn")).as("cos"))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("query_id", "corpus_id", "cos", "rank")

@@ -341,8 +341,7 @@ object ExtensionCatalog {
   private def postingSearch(s: SparkSession, dir: String, indexDir: String): DataFrame = {
     val pat = "table part"
     val tris = (0 to pat.length - 3).map(i => pat.substring(i, i + 3)).distinct
-    // resolve the manifest pointer once per read (a no-op on the legacy
-    // flat layouts x101/x157/x164 stage; the current generation on x167's)
+    // resolve the manifest pointer once per read
     val cands = s.read.parquet(graft.sources.Layouts.indexRoot(indexDir)(s))
       .where(col("tri").isin(tris: _*))
       .groupBy("doc_id").agg(countDistinct("tri").as("nt"))
@@ -6727,7 +6726,7 @@ object ExtensionCatalog {
         // flat assignment, compared per cell. n_appended pins that the
         // appended rows landed in the RIGHT cells, not just somewhere.
         val idx = stagedIvfAppendIndex(s, dir)
-        s.read.parquet(s"$idx/assign")
+        s.read.parquet(s"${graft.sources.Layouts.indexRoot(idx)(s)}/assign")
           .groupBy(col("cent_id").cast("long").as("cent_id"))
           .agg(count(lit(1)).as("n_total"),
             sum(when(col("corpus_id") % 2 === 1, 1L).otherwise(0L)).as("n_appended"))
@@ -6799,7 +6798,7 @@ object ExtensionCatalog {
         // so a single leaked (or over-deleted) row fails per-cell counts:
         // retract-after-append ≡ never-appended, value-tested.
         val idx = stagedIvfRetractIndex(s, dir)
-        s.read.parquet(s"$idx/assign")
+        s.read.parquet(s"${graft.sources.Layouts.indexRoot(idx)(s)}/assign")
           .groupBy(col("cent_id").cast("long").as("cent_id"))
           .agg(count(lit(1)).as("n_total"),
             sum(when(col("corpus_id") % 2 === 1, 1L).otherwise(0L)).as("n_appended"))
@@ -6869,7 +6868,7 @@ object ExtensionCatalog {
         // meta untouched). Per-cell counts under x152's full-assignment
         // oracle prove the rebase dropped and duplicated nothing.
         val idx = stagedIvfCompactIndex(s, dir)
-        s.read.parquet(s"$idx/assign")
+        s.read.parquet(s"${graft.sources.Layouts.indexRoot(idx)(s)}/assign")
           .groupBy(col("cent_id").cast("long").as("cent_id"))
           .agg(count(lit(1)).as("n_total"),
             sum(when(col("corpus_id") % 2 === 1, 1L).otherwise(0L)).as("n_appended"))
@@ -6953,12 +6952,10 @@ object ExtensionCatalog {
     CatalogEntry(
       "x159_managed_compact_probe",
       (s, dir) => {
-        // x155's compaction re-run on the MANIFEST-GENERATION layout
-        // (Layouts.manageMinhash): the rebase writes a NEW immutable
-        // generation directory and publishes a create-once pointer
-        // instead of swapping the table path by rename — the layout that
-        // drops the quiesced-index requirement (readers resolve the
-        // pointer once; the previous generation survives as grace). The
+        // x155's compaction re-run with the fold's own gen-1 append: the
+        // rebase writes a NEW immutable generation directory and
+        // publishes a create-once pointer (readers resolve the pointer
+        // once; the previous generation survives as grace). The
         // gen-2 probe resolves the manifest and must match x153's
         // three-generation oracle exactly: a row the generational fold
         // drops/duplicates, a probe reading a half-published root, or a
@@ -7050,10 +7047,9 @@ object ExtensionCatalog {
     CatalogEntry(
       "x162_ivf_managed_compact",
       (s, dir) => {
-        // x156's IVF compaction on the MANIFEST-GENERATION layout
-        // (Layouts.manageIvf): the rebase folds the cell partitions into
-        // a NEW immutable generation and publishes a create-once pointer
-        // — no directory-rename swap, no quiesce, so the ANN serving
+        // x156's IVF compaction: the rebase folds the cell partitions
+        // into a NEW immutable generation and publishes a create-once
+        // pointer — no quiesce, so the ANN serving
         // stream (stream_x144) can keep probing while its index
         // compacts. The audit reads the assign table through the
         // manifest and replays x152's full-assignment oracle: a row the
@@ -7265,13 +7261,12 @@ object ExtensionCatalog {
     CatalogEntry(
       "x167_posting_managed_rebase",
       (s, dir) => {
-        // x157's append+rebase lifecycle on the MANIFEST-GENERATION
-        // layout (Layouts.managePosting) — the third and last index
-        // family gains the no-quiesce maintenance path: the rebase folds
-        // the sealed slices into a NEW immutable generation's single
-        // `base` slice and publishes the create-once pointer instead of
-        // the rename-aside swap, so a live substring-search workload
-        // never loses its table root mid-rebase. Probed under x101's
+        // x157's append+rebase lifecycle, the posting family's
+        // no-quiesce maintenance path: the rebase folds the sealed
+        // slices into a NEW immutable generation's single `base` slice
+        // and publishes the create-once pointer, so a live
+        // substring-search workload never loses its table root
+        // mid-rebase. Probed under x101's
         // full-corpus oracle through the manifest: a dropped/duplicated
         // row in the fold, a stale pointer, or a half-published
         // generation all change the candidate set.
@@ -8359,9 +8354,8 @@ object ExtensionCatalog {
       "x190_bm25_managed_serve",
       (s, dir) => {
         // BM25 under the manifest-generation protocol (VERDICT r17 #2):
-        // the staged lifecycle migrates the base index to managed
-        // (manageBm25 — each table under its own pointer manifest),
-        // lands a sealed+chased append, runs a NO-QUIESCE compact
+        // the staged lifecycle forks the base index (each table under its
+        // own pointer manifest), lands a sealed+chased append, runs a NO-QUIESCE compact
         // (postings re-sort, df deltas SUMMED per term, champion tier
         // re-selected — the aggregating folds merge-on-read tables
         // need), then lands a second append into the new generation.
@@ -8373,7 +8367,7 @@ object ExtensionCatalog {
       },
       Some(bm25ServeOracle("TRUE")),
       "BM25 lifecycle under the manifest-generation protocol, the fifth " +
-        "managed index family: migrate, sealed append, no-quiesce compact " +
+        "managed index family: managed build, sealed append, no-quiesce compact " +
         "with AGGREGATING folds (df deltas summed, champions re-selected), " +
         "append into the new generation, serve across it all — the x168 " +
         "no-quiesce story for the lexical index (extension: retrieval / " +
@@ -8621,7 +8615,7 @@ object ExtensionCatalog {
       "x194_phrase_append_serve",
       (s, dir) => {
         // The positional family's O(batch) maintenance under the value
-        // gate: base index on %2 == 0 docs, manageSortedTable migration,
+        // gate: base index on %2 == 0 docs, then a
         // sealed positionalAppend of the odd half (REPLAYED — the
         // dynamic-overwrite no-op), then the x192 phrase serve. The
         // oracle recomputes over ALL docs, so a dropped slice, a
@@ -9227,9 +9221,9 @@ object ExtensionCatalog {
       out
     })
 
-  /** x190 staging: the MANAGED BM25 lifecycle — template copy (%3 != 2
-    * base) → [[graft.sources.Layouts.manageBm25]] (three per-table
-    * manifests publish v0) → sealed append of the %6 == 2 half-batch →
+  /** x190 staging: the managed BM25 lifecycle — template copy (%3 != 2
+    * base, three per-table manifests at v0) → sealed append of the
+    * %6 == 2 half-batch →
     * [[graft.sources.Layouts.bm25Compact]] (no-quiesce generation fold:
     * postings re-sorted, df deltas SUMMED, champions re-selected) →
     * sealed append of the %6 == 5 half-batch into the NEW generation.
@@ -9240,7 +9234,6 @@ object ExtensionCatalog {
     new Staged("build_x190_bm25_managed", "graft-bm25mgd")((s, dir, out) => {
       implicit val sp: SparkSession = s
       copyIndex(stagedBm25Gen0(s, dir), out, s)
-      graft.sources.Layouts.manageBm25(out)
       graft.sources.Layouts.bm25Append(
         t(s, dir, "documents").where(col("doc_id") % 6 === 2), out,
         groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
@@ -9299,8 +9292,8 @@ object ExtensionCatalog {
       out
     })
 
-  /** x194 staging: positional index on the even half → manageSortedTable
-    * migration → sealed append of the odd half → the SAME append
+  /** x194 staging: positional index on the even half → sealed append of
+    * the odd half → the SAME append
     * REPLAYED (dynamic-overwrite no-op). Together the halves are the
     * full corpus, so the serve must equal x192's full-corpus oracle.
     */
@@ -9310,7 +9303,6 @@ object ExtensionCatalog {
       graft.sources.Layouts.positionalIndex(
         t(s, dir, "documents").where(col("doc_id") % 2 === 0), out,
         groupBytes = 256L * 1024, pageRows = 2000)
-      graft.sources.Layouts.manageSortedTable(out)
       val odd = t(s, dir, "documents").where(col("doc_id") % 2 === 1)
       graft.sources.Layouts.positionalAppend(odd, out,
         groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
@@ -9320,7 +9312,7 @@ object ExtensionCatalog {
     })
 
   /** x195 staging: the positional family's RETRACTION path — base index
-    * on the %3 != 2 docs, managed, the %3 == 2 batch appended as sealed
+    * on the %3 != 2 docs, the %3 == 2 batch appended as sealed
     * slice "g1", then dropped via [[graft.sources.Layouts.dropBatch]]
     * (the O(batch-files) directory delete, across retained generations
     * on the managed layout). The serve must equal the survivor-only
@@ -9332,7 +9324,6 @@ object ExtensionCatalog {
       graft.sources.Layouts.positionalIndex(
         t(s, dir, "documents").where(col("doc_id") % 3 =!= 2), out,
         groupBytes = 256L * 1024, pageRows = 2000)
-      graft.sources.Layouts.manageSortedTable(out)
       graft.sources.Layouts.positionalAppend(
         t(s, dir, "documents").where(col("doc_id") % 3 === 2), out,
         groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
@@ -9599,7 +9590,7 @@ object ExtensionCatalog {
 
   /** x177 staging: x154's poison scenario with the poison FOLDED before
     * the retraction — the IVF leg of the fold-surviving deletion. Built
-    * and appended with src_batch provenance; after [[manageIvf]] +
+    * and appended with src_batch provenance; after
     * [[graft.sources.Layouts.ivfCompact]] folds the odd batch and the
     * poison into base, [[graft.sources.Layouts.ivfRetractFolded]] erases
     * the poison at the row level.
@@ -9611,7 +9602,6 @@ object ExtensionCatalog {
       graft.sources.Layouts.ivfIndex(
         e.where(col("vec_id") % 2 === 0), out, centModulo = 50,
         twoLevel = Some(false), provenance = true)
-      graft.sources.Layouts.manageIvf(out)
       graft.sources.Layouts.ivfAppend(e.where(col("vec_id") % 2 === 1), out,
         batchId = Some("odd"), provenance = true)
       graft.sources.Layouts.ivfAppend(
@@ -9691,17 +9681,14 @@ object ExtensionCatalog {
       out
     })
 
-  /** x159 staging: x153's grown lifecycle on the MANIFEST-GENERATION
-    * layout — gen-0 forked from the shared template and migrated via
-    * [[graft.sources.Layouts.manageMinhash]], gen-1 probed + admitted
-    * append, then [[graft.sources.Layouts.minhashCompact]], which on a
-    * managed index folds into a NEW generation dir and publishes the
-    * pointer (v0 → v1) instead of renaming tables in place.
+  /** x159 staging: x153's grown lifecycle — gen-0 forked from the shared
+    * template, gen-1 probed + admitted append, then
+    * [[graft.sources.Layouts.minhashCompact]], which folds into a NEW
+    * generation dir and publishes the pointer (v0 → v1).
     */
   private val stagedManagedCompactIndex =
     new Staged("build_x159_managed_compact", "graft-mhmgidx")((s, dir, out) => {
       copyIndex(stagedMinhashGen0(s, dir), out, s)
-      graft.sources.Layouts.manageMinhash(out)(s)
       val docs = t(s, dir, "documents")
       val g1 = docs.where(col("doc_id") % 3 === 1)
       val st1 = Dedup.incrementalDedupStaged(g1, out, "doc_id", "text",
@@ -9719,8 +9706,8 @@ object ExtensionCatalog {
       out
     })
 
-  /** x160 staging: the x158 streaming admit loop over a manifest-managed
-    * gen-0, with [[graft.sources.Layouts.minhashCompact]] fired BETWEEN
+  /** x160 staging: the x158 streaming admit loop over the shared gen-0,
+    * with [[graft.sources.Layouts.minhashCompact]] fired BETWEEN
     * the two micro-batches while the streaming query stays live — the
     * no-quiesce maintenance story end to end. Returns the ledger path.
     */
@@ -9730,7 +9717,6 @@ object ExtensionCatalog {
       val idx = s"$base/idx"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(idx))
       copyIndex(stagedMinhashGen0(s, dir), idx, s)
-      graft.sources.Layouts.manageMinhash(idx)(s)
       val in = s"$base/in"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
       val cols = graft.streaming.StreamDedup.docSchema.fieldNames.map(col)
@@ -9742,8 +9728,7 @@ object ExtensionCatalog {
           s"$base/stage1", in, "g1")
         q.processAllAvailable()
         // compact the LIVE stream's index between batches: the query is
-        // started, its checkpoint open — the quiesce the rename layout
-        // required and the manifest layout exists to remove
+        // started, its checkpoint open — no quiesce needed
         graft.sources.Layouts.minhashCompact(idx,
           groupBytes = 256L * 1024, pageRows = 2000)(s)
         landFeedFile(docs.where(col("doc_id") % 3 === 2).select(cols: _*),
@@ -9787,7 +9772,6 @@ object ExtensionCatalog {
       val docs = t(s, dir, "documents")
       graft.sources.Layouts.minhashIndex(docs.where(col("doc_id") % 3 === 0),
         out, groupBytes = 256L * 1024, pageRows = 2000, provenance = true)
-      graft.sources.Layouts.manageMinhash(out)
       val g1 = docs.where(col("doc_id") % 3 === 1)
       val st1 = graft.operators.Dedup.incrementalDedupStaged(
         g1, out, "doc_id", "text", 0.5)
@@ -9807,18 +9791,16 @@ object ExtensionCatalog {
       out
     })
 
-  /** x162 staging: the x152 build+append lifecycle on the MANIFEST-
-    * GENERATION layout — flat build over the even half, migrated via
-    * [[graft.sources.Layouts.manageIvf]], odd half appended, then
-    * [[graft.sources.Layouts.ivfCompact]], which on a managed index
-    * folds into a new generation and publishes the pointer (the no-
-    * quiesce maintenance path the serving stream needs).
+  /** x162 staging: the x152 build+append lifecycle — flat-assignment
+    * build over the even half, odd half appended, then
+    * [[graft.sources.Layouts.ivfCompact]], which folds into a new
+    * generation and publishes the pointer (the no-quiesce maintenance
+    * path the serving stream needs).
     */
   private val stagedIvfManagedCompactIndex =
     new Staged("build_x162_ivf_managed_compact", "graft-ivfmgidx")((s, dir, out) => {
       val e = t(s, dir, "embeddings").where(col("vec_id") >= 10)
       copyIndex(stagedIvfEvenGen0(s, dir), out, s) // shared gen-0 template
-      graft.sources.Layouts.manageIvf(out)(s)
       graft.sources.Layouts.ivfAppend(e.where(col("vec_id") % 2 === 1), out,
         batchId = Some("odd"))
       graft.sources.Layouts.ivfCompact(out)(s)
@@ -9860,19 +9842,15 @@ object ExtensionCatalog {
       out
     })
 
-  /** x167 staging: x157's posting lifecycle on the MANIFEST-GENERATION
-    * layout — even half built flat, migrated via
-    * [[graft.sources.Layouts.managePosting]], odd half appended (lands
-    * sealed in the current generation), then
-    * [[graft.sources.Layouts.sortedRebase]], which on a managed index
-    * folds into a new generation and publishes the pointer (v0 → v1)
-    * instead of renaming the table aside.
+  /** x167 staging: x157's posting lifecycle — even half (the shared
+    * template), odd half appended (lands sealed in the current
+    * generation), then [[graft.sources.Layouts.sortedRebase]], which
+    * folds into a new generation and publishes the pointer (v0 → v1).
     */
   private val stagedPostingManagedIndex =
     new Staged("build_x167_posting_managed", "graft-postmgidx")((s, dir, out) => {
       val docs = t(s, dir, "documents")
       copyIndex(stagedPostingEvenGen0(s, dir), out, s) // shared gen-0
-      graft.sources.Layouts.managePosting(out)(s)
       graft.sources.Layouts.postingAppend(docs.where(col("doc_id") % 2 === 1),
         out, groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("odd"))
       graft.sources.Layouts.sortedRebase(out, Seq("tri"),
@@ -9894,7 +9872,6 @@ object ExtensionCatalog {
       val idx = s"$base/idx"
       graft.sources.Layouts.ivfIndex(e.where(col("vec_id") % 2 === 0), idx,
         centModulo = 50, twoLevel = Some(false))
-      graft.sources.Layouts.manageIvf(idx)(s)
       val in = s"$base/in"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
       val q = graft.streaming.StreamAnn.serve(
@@ -9941,8 +9918,8 @@ object ExtensionCatalog {
   /** x173 staging: the FOURTH manifest family, landed with ZERO new
     * protocol code (the r16 #6 engine's point): a banded-SimHash
     * near-dup index as a generic managed sorted table. Lifecycle
-    * exercised end-to-end: build base (evens) → manageSortedTable →
-    * sealed append (doc_id%4==1) → managed sortedRebase (fold into a new
+    * exercised end-to-end: build base (evens,
+    * [[graft.sources.Layouts.sortedTable]]) → sealed append (doc_id%4==1) → managed sortedRebase (fold into a new
     * generation) → second append (%4==3) left as a live slice. The x173
     * probe then reads base+folded+live through one manifest resolve.
     */
@@ -9950,11 +9927,10 @@ object ExtensionCatalog {
     new Staged("build_x173_simhash_index", "graft-shidx")((s, dir, out) => {
       implicit val sp: SparkSession = s
       val docs = t(s, dir, "documents")
-      graft.sources.Layouts.sortedStats(
+      graft.sources.Layouts.sortedTable(
         simhashBandRows(docs.where(col("doc_id") % 2 === 0)), out,
         simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,
-        partitions = 1, batchId = Some("base"))
-      graft.sources.Layouts.manageSortedTable(out)
+        partitions = 1)
       graft.sources.Layouts.sortedTableAppend(
         simhashBandRows(docs.where(col("doc_id") % 4 === 1)), out,
         simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,
@@ -9980,12 +9956,10 @@ object ExtensionCatalog {
     new Staged("build_x174_provenance_retract", "graft-shretract")((s, dir, out) => {
       implicit val sp: SparkSession = s
       val docs = t(s, dir, "documents")
-      graft.sources.Layouts.sortedStats(
-        simhashBandRows(docs.where(col("doc_id") % 2 === 0))
-          .withColumn("src_batch", lit("base")), out,
+      graft.sources.Layouts.sortedTable(
+        simhashBandRows(docs.where(col("doc_id") % 2 === 0)), out,
         simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,
-        partitions = 1, batchId = Some("base"))
-      graft.sources.Layouts.manageSortedTable(out)
+        partitions = 1, provenance = true)
       graft.sources.Layouts.sortedTableAppend(
         simhashBandRows(docs.where(col("doc_id") % 4 === 1)), out,
         simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,

@@ -398,9 +398,8 @@ object Layouts {
     // fanOutScan on the CORPUS build only (guide §2.5) — the append path
     // shares postingRows but feeds bounded batches where a fan-out is
     // pure overhead (measured on the streaming admit rows)
-    sortedStats(postingRows(fanOutScan(docs), idCol, textCol), path, Seq("tri"),
-      groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
-      batchId = Some("base"))
+    sortedTable(postingRows(fanOutScan(docs), idCol, textCol), path, Seq("tri"),
+      groupBytes = groupBytes, pageRows = pageRows, partitions = partitions)
 
   /** The ONE definition of a doc batch's POSITIONAL posting rows
     * (term, doc_id, pos — 1-based token position under x52's whitespace
@@ -423,12 +422,12 @@ object Layouts {
     * posting ranges (`In(term, ...)` row-group pruning) and verifies
     * adjacency with a shuffle keyed on (doc_id, start) over just those
     * rows — O(matching postings), never a corpus text scan
-    * ([[graft.operators.Phrase]]). The table is ONE batch-sliced
-    * sorted-stats table at `path`, i.e. exactly [[sortedTableAppend]]'s
+    * ([[graft.operators.Phrase]]). The table is ONE managed
+    * [[sortedTable]] at `path`, i.e. exactly [[sortedTableAppend]]'s
     * geometry: the whole manifest lifecycle comes for free —
-    * [[manageSortedTable]] to migrate, [[positionalAppend]] for sealed
-    * O(batch) appends, [[sortedRebase]]`(path, Seq("term"))` for the
-    * no-quiesce compact, [[dropBatch]] to retract. The index is
+    * [[positionalAppend]] for sealed O(batch) appends,
+    * [[sortedRebase]]`(path, Seq("term"))` for the no-quiesce compact,
+    * [[dropBatch]] to retract. The index is
     * token-count-sized (one row per token, vs one per distinct
     * (term, doc) pair for BM25); a stop-word-heavy phrase still prunes
     * to its rarest term's df after the first join — order probes by
@@ -442,9 +441,8 @@ object Layouts {
       groupBytes: Long = 128L * 1024 * 1024,
       pageRows: Int = 20000,
       partitions: Int = 0): Unit =
-    sortedStats(positionalRows(docs, idCol, textCol), path, Seq("term"),
-      groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
-      batchId = Some("base"))
+    sortedTable(positionalRows(docs, idCol, textCol), path, Seq("term"),
+      groupBytes = groupBytes, pageRows = pageRows, partitions = partitions)
 
   /** Incremental maintenance of a persisted positional index: the
     * batch's (term, doc_id, pos) rows land as their own sealed
@@ -502,9 +500,10 @@ object Layouts {
     * may briefly see the postings slice before its delta slice (new
     * docs scored under the pre-append corpus statistics — bounded
     * staleness, gone when the delta commits). There is no sidecar swap
-    * left to race. Retraction deletes slices, so on the FLAT layout it
-    * requires quiesced probes; [[manageBm25]] lifts that (immutable
-    * generations + grace). Tokenization mirrors x52's whitespace split
+    * left to race. Each table is born managed — its own `g=000000000` +
+    * manifest v0, like [[sortedTable]] — so retraction and compaction
+    * run against live probes (immutable generations + grace); `meta`
+    * stays at the index path. Tokenization mirrors x52's whitespace split
     * exactly — the probe must reproduce the full-corpus scoring bit
     * for bit, which is what the x178 oracle gates.
     */
@@ -519,6 +518,10 @@ object Layouts {
       champions: Int = 50): Unit = {
     require(champions >= 1, s"champions must be >= 1 (got $champions)")
     val spark = docs.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tables = Bm25Tables.map(t => s"$path/$t")
+    // refuse (or clear crash debris) on every table before writing any
+    val Seq(postRoot, deltaRoot, champRoot) = tables.map(gen0Root(_, conf))
     // cache: ONE tokenize+tf pass feeds all three table writes (the
     // minhashIndex barrier pattern — without it each write re-scans
     // the corpus)
@@ -528,13 +531,13 @@ object Layouts {
     // ([[inParallel]]) — they share the one cached tokenize+tf pass
     try {
       inParallel(
-        () => sortedStats(post, s"$path/postings", Seq("term"),
+        () => sortedStats(post, postRoot, Seq("term"),
           groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
           batchId = Some("base")),
-        () => sortedStats(bm25DeltaRows(post), s"$path/deltas", Seq("term"),
+        () => sortedStats(bm25DeltaRows(post), deltaRoot, Seq("term"),
           groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
           batchId = Some("base")),
-        () => sortedStats(bm25ChampionRows(post, champions), s"$path/champions",
+        () => sortedStats(bm25ChampionRows(post, champions), champRoot,
           Seq("term"),
           groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
           batchId = Some("base")),
@@ -548,9 +551,13 @@ object Layouts {
           Seq(champions).toDF("champions")
             .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.__stage")
         })
-      publishMeta(s"$path/meta", spark.sparkContext.hadoopConfiguration)
+      publishMeta(s"$path/meta", conf)
+      tables.foreach(publishGen0(_, conf))
     } finally post.unpersist()
   }
+
+  /** The three tables of a BM25 index, each under its own manifest. */
+  private val Bm25Tables = Seq("postings", "deltas", "champions")
 
   /** The ONE definition of a doc batch's BM25 posting rows (term,
     * doc_id, tf, dl), shared by [[bm25Index]], [[bm25Append]] and the
@@ -610,8 +617,7 @@ object Layouts {
   /** Incremental maintenance of a persisted BM25 index, O(batch): the
     * batch's postings, its df/(n, total) delta, and its champion tier
     * each land as their own `batch_id` slice via [[sortedTableAppend]]
-    * (so on a [[manageBm25]]-managed index the slices are sealed and
-    * manifest-chased like every other family's). NOTHING index-sized
+    * (sealed and manifest-chased like every other family's). NOTHING index-sized
     * runs: corpus statistics are merged at probe time from the delta
     * slices. Same replay semantics as [[postingAppend]] — an explicit
     * `batchId` replays as a dynamic-overwrite no-op per table; without
@@ -638,19 +644,13 @@ object Layouts {
       batchId: Option[String] = None,
       enforceNewDocs: Boolean = true): Unit = {
     val spark = docs.sparkSession
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dp = new org.apache.hadoop.fs.Path(s"$path/deltas")
-    require(dp.getFileSystem(conf).exists(dp),
-      s"refuse to append to $path: no deltas table — a pre-delta (r17 " +
-        "sidecar-layout or flat) BM25 index cannot take O(batch) " +
-        "maintenance; rebuild with bm25Index to migrate")
+    val postRoot = bm25Roots(path, spark.sparkContext.hadoopConfiguration).head
     val c = spark.read.parquet(s"$path/meta").head().getAs[Int]("champions")
     val post = bm25PostingRows(docs, idCol, textCol).cache()
     try {
       if (enforceNewDocs) {
         import org.apache.spark.sql.functions.broadcast
-        val existing = spark.read.parquet(indexRoot(s"$path/postings"))
+        val existing = spark.read.parquet(postRoot)
         val scoped = batchId.fold(existing)(b =>
           existing.where(col("batch_id") =!= b))
         val hit = scoped
@@ -705,12 +705,13 @@ object Layouts {
     n
   }
 
-  /** Migrate a BM25 index into the manifest-generation layout: each of
-    * the three tables moves under its own `g=000000000` + manifest v0
-    * (the [[manageSortedTable]] protocol, once per table; `meta` stays
-    * at the index path — parameter identity, not generation state). Run
-    * once, quiesced; idempotent. Cross-table version skew is harmless
-    * by construction: every generation of a table is content-equivalent
+  /** Check that a BM25 index is fully published: each of its three
+    * tables resolves its own manifest generation (`meta` stays at the
+    * index path — parameter identity, not generation state). Every
+    * index build already publishes them, so on an index [[bm25Index]] wrote
+    * this only reads; it throws `IllegalArgumentException` naming the
+    * table on anything else. Cross-table version skew is harmless by
+    * construction: every generation of a table is content-equivalent
     * through its folds (summed deltas, re-selected champions), so a
     * probe resolving different versions per table still serves one
     * index state — unlike the r17 sidecar pair, nothing must swap in
@@ -718,17 +719,20 @@ object Layouts {
     */
   def manageBm25(path: String)(
       implicit spark: org.apache.spark.sql.SparkSession): Unit =
-    Seq("postings", "deltas", "champions")
-      .foreach(t => manageSortedTable(s"$path/$t"))
+    bm25Roots(path, spark.sparkContext.hadoopConfiguration)
+
+  /** Current generation roots of the BM25 tables, in [[Bm25Tables]] order. */
+  private def bm25Roots(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Seq[String] =
+    Bm25Tables.map(t => currentGeneration(s"$path/$t", conf)._2)
 
   /** Compact a BM25 index back toward one `base` slice per table:
     * postings re-sort (the [[sortedRebase]] fold), deltas AGGREGATE —
     * df summed per term, the per-batch global rows summed to one (the
     * fold that keeps the merge-on-read table from growing one row set
     * per batch forever) — and champions re-select top-C over the merged
-    * slices. O(index), never a corpus rescan. On a managed index
-    * ([[manageBm25]]) each table compacts as a no-quiesce generation
-    * publish; on the flat layout it is the quiesced rename-aside swap.
+    * slices. O(index), never a corpus rescan. Each table compacts as a
+    * no-quiesce generation publish.
     */
   def bm25Compact(
       path: String,
@@ -738,6 +742,7 @@ object Layouts {
       graceGenerations: Int = 1)(
       implicit spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.functions.sum
+    manageBm25(path) // refuse an unpublished index before reading meta
     val c = spark.read.parquet(s"$path/meta").head().getAs[Int]("champions")
     def aggDeltas(df: DataFrame): DataFrame =
       df.where(col("term").isNotNull)
@@ -749,9 +754,9 @@ object Layouts {
           .select(lit(null).cast("string").as("term"),
             lit(null).cast("long").as("df"), col("n"), col("total")))
     // the three tables compact independently (each is its own managed
-    // table / rename-aside swap; cross-table generation skew is
-    // content-neutral by construction, see [[manageBm25]]) — overlap
-    // them ([[inParallel]], guide §2.6)
+    // table; cross-table generation skew is content-neutral by
+    // construction, see [[manageBm25]]) — overlap them ([[inParallel]],
+    // guide §2.6)
     inParallel(
       () => sortedRebase(s"$path/postings", Seq("term"),
         groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
@@ -770,8 +775,7 @@ object Layouts {
     * easiest maintenance contract in the index family, value-tested by
     * x157 under x101's own full-corpus oracle. Same replay semantics as
     * [[minhashAppend]]: an explicit `batchId` replays as a dynamic-
-    * overwrite no-op; without one the write is a plain append; a
-    * pre-batch_id index refuses replay-safety (rebuild to migrate).
+    * overwrite no-op; without one the batch lands as an anonymous slice.
     */
   def postingAppend(
       docs: DataFrame,
@@ -781,29 +785,47 @@ object Layouts {
       groupBytes: Long = 128L * 1024 * 1024,
       pageRows: Int = 20000,
       batchId: Option[String] = None): Unit =
-    // managed layout ([[managePosting]]): [[sortedTableAppend]] carries
-    // the whole write+seal+manifest-chase protocol; this method only
-    // supplies the posting rows
+    // [[sortedTableAppend]] carries the whole write+seal+manifest-chase
+    // protocol; this method only supplies the posting rows
     sortedTableAppend(postingRows(docs, idCol, textCol), path, Seq("tri"),
       groupBytes = groupBytes, pageRows = pageRows, partitions = 1,
       batchId = batchId)
 
-  /** Append a row batch to a single batch-partitioned sorted-stats table
-    * — [[postingAppend]]'s write+seal+manifest-chase protocol with the
-    * ROWS supplied by the caller, which makes ANY such table a full
+  /** Build a single batch-partitioned sorted-stats table, born managed:
+    * the rows land as the `base` slice of generation `g=000000000` under
+    * `path`, then manifest v0 publishes. Any such table is a full
     * lifecycle index family with zero new protocol code (the r16 #6
-    * manifest engine's point): manage via [[manageSortedTable]], compact
+    * manifest engine's point): append via [[sortedTableAppend]], compact
     * via [[sortedRebase]], retract slices via [[dropBatch]] and folded
-    * batches via [[retractFolded]]. Same replay semantics: an explicit
-    * `batchId` replays as a dynamic-overwrite no-op; none is a plain
-    * append under an anonymous slice; a pre-batch_id table refuses
-    * replay-safety. With `provenance` the slice also carries a
-    * `src_batch` DATA column equal to its batch id — the row-level
-    * lineage [[retractFolded]] needs to delete a batch AFTER a fold has
-    * erased its slice directory. Use it from the table's FIRST write or
-    * not at all: mixing provenanced and bare files forks the parquet
-    * schema (the non-merged read would drop the column for half the
-    * rows, exactly the ivfAppend corpusn hazard).
+    * batches via [[retractFolded]]. With `provenance` every row carries a
+    * `src_batch` DATA column (`base` here, the batch id on appends) — the
+    * row-level lineage [[retractFolded]] needs; it is set from the
+    * table's first write or never. Refuses a `path` that already holds a
+    * published table (see [[gen0Root]]).
+    */
+  def sortedTable(
+      rows: DataFrame,
+      path: String,
+      sortCols: Seq[String],
+      groupBytes: Long = 128L * 1024 * 1024,
+      pageRows: Int = 20000,
+      partitions: Int = 0,
+      provenance: Boolean = false): Unit = {
+    val conf = rows.sparkSession.sparkContext.hadoopConfiguration
+    val root = gen0Root(path, conf)
+    sortedStats(if (provenance) rows.withColumn("src_batch", lit("base")) else rows,
+      root, sortCols, groupBytes = groupBytes, pageRows = pageRows,
+      partitions = partitions, batchId = Some("base"))
+    publishGen0(path, conf)
+  }
+
+  /** Append a row batch to a [[sortedTable]] — [[postingAppend]]'s
+    * write+seal+manifest-chase protocol with the ROWS supplied by the
+    * caller. Same replay semantics: an explicit `batchId` replays as a
+    * dynamic-overwrite no-op; none lands under a fresh anonymous slice.
+    * `provenance` must match the table's build (mixing provenanced and
+    * bare files forks the parquet schema — the non-merged read would
+    * drop the column for half the rows).
     */
   def sortedTableAppend(
       rows: DataFrame,
@@ -817,47 +839,35 @@ object Layouts {
     val spark = rows.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     batchId.foreach(requireBatchId)
-    val gen0 = currentGeneration(path, conf)
-    val root = gen0.map(_._2).getOrElse(path)
-    val rootCols = spark.read.parquet(root).columns.toSet
-    val batched = rootCols.contains("batch_id")
-    require(batched || batchId.isEmpty,
-      s"table at $path predates batch_id partitioning — a replay-safe " +
-        "append is impossible on its flat layout; rebuild it batched")
+    val (v0, root) = currentGeneration(path, conf)
     // first-write-or-never, ENFORCED: mixed provenanced/bare files fork
     // the parquet schema (the non-merged read drops the column for half
-    // the rows — the ivfAppend corpusn hazard)
+    // the rows)
+    val rootCols = spark.read.parquet(root).columns.toSet
     require(provenance == rootCols.contains("src_batch"),
       s"provenance mismatch at $path: the table " +
         (if (rootCols.contains("src_batch")) "carries" else "lacks") +
         " src_batch — append with the same provenance setting")
-    val (bid, mode, dyn) = batchId match {
-      case Some(b)         => (Some(b), "overwrite", true)
-      case None if batched => (Some("anon-" + java.util.UUID.randomUUID), "append", false)
-      case None            => (None, "append", false)
-    }
-    val payload = (provenance, bid) match {
-      case (true, Some(b)) => rows.withColumn("src_batch", lit(b))
-      case _               => rows
-    }
+    val bid = batchId.getOrElse("anon-" + java.util.UUID.randomUUID)
+    val payload =
+      if (provenance) rows.withColumn("src_batch", lit(bid)) else rows
     sortedStats(payload, root, sortCols,
       groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
-      mode = mode, batchId = bid, dynamicOverwrite = dyn)
-    for ((v0, _) <- gen0; b <- bid)
-      chaseManifest(path, v0, root, b,
-        sortedTableFamily(sortCols, groupBytes, pageRows, partitions)(spark),
-        conf)
+      mode = if (batchId.isDefined) "overwrite" else "append",
+      batchId = Some(bid), dynamicOverwrite = batchId.isDefined)
+    chaseManifest(path, v0, root, bid,
+      sortedTableFamily(sortCols, groupBytes, pageRows, partitions)(spark),
+      conf)
   }
 
-  /** Rebase a single batch-partitioned sorted-stats TABLE (the posting
-    * index's layout — the table lives AT `path`, unlike the minhash
-    * index's three subdirectories) back to one `base` generation:
-    * re-read, de-batch, range-sort, rewrite, rename-aside swap. O(table),
-    * no corpus rescan — the generic form of [[minhashCompact]]'s
-    * per-table step for any sortedStats layout. A `src_batch` provenance
-    * column (see [[sortedTableAppend]]) is ordinary payload and survives
-    * the fold — that is what keeps [[retractFolded]] possible after the
-    * batch's slice directory is gone.
+  /** Rebase a [[sortedTable]] (the table lives AT `path`, unlike the
+    * minhash index's three subdirectories) back to one `base` slice of a
+    * new generation: re-read, de-batch, range-sort, rewrite, publish.
+    * O(table), no corpus rescan — the generic form of
+    * [[minhashCompact]]'s per-table step for any sortedStats layout. A
+    * `src_batch` provenance column (see [[sortedTableAppend]]) is
+    * ordinary payload and survives the fold — that is what keeps
+    * [[retractFolded]] possible after the batch's slice directory is gone.
     */
   def sortedRebase(
       path: String,
@@ -888,26 +898,11 @@ object Layouts {
       graceGenerations: Int)(
       implicit spark: org.apache.spark.sql.SparkSession): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    currentGeneration(path, conf) match {
-      case Some((v, rootG)) =>
-        // ---- managed ([[managePosting]]): the shared manifest protocol
-        // over ONE table living AT the generation root
-        managedCompact(path, v, rootG,
-          sortedTableFamily(sortCols, groupBytes, pageRows, partitions,
-            shape = shape),
-          graceGenerations, conf)
-      case None =>
-        // ---- legacy flat layout: rewrite-aside + rename (quiesced only)
-        recoverCrashedSwap(path, conf)
-        val df = spark.read.parquet(path)
-        require(df.columns.contains("batch_id"),
-          s"$path predates batch_id partitioning — nothing to rebase")
-        val tmp = s"$path.__compact"
-        sortedStats(shape(df.drop("batch_id")), tmp, sortCols,
-          groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
-          batchId = Some("base"))
-        swapIn(path, tmp, conf)
-    }
+    val (v, rootG) = currentGeneration(path, conf)
+    managedCompact(path, v, rootG,
+      sortedTableFamily(sortCols, groupBytes, pageRows, partitions,
+        shape = shape),
+      graceGenerations, conf)
   }
 
   /** Persisted MinHash ingest index: the three existing-side tables
@@ -919,7 +914,9 @@ object Layouts {
     * corpus release; each ingest batch then computes only its own
     * shard-side signatures — the corpus is never re-scanned per ingest,
     * which is the whole case for persisting the index (x101's
-    * write-once / probe-many split, applied to dedup).
+    * write-once / probe-many split, applied to dedup). The tables are
+    * born managed under `g=000000000` + manifest v0; `meta` stays at the
+    * index path.
     */
   def minhashIndex(
       docs: DataFrame,
@@ -953,6 +950,8 @@ object Layouts {
     // across batches must survive its co-batches' retraction).
     def prov(df: DataFrame): DataFrame =
       if (provenance) df.withColumn("src_batch", lit("base")) else df
+    val conf = docs.sparkSession.sparkContext.hadoopConfiguration
+    val root = gen0Root(path, conf)
     // cache: the tokenize+shingle+minhash pipeline is the dominant build
     // cost and feeds BOTH the banded and shingles writes (the jaccardIndex
     // pattern below) — without the barrier each write re-scans the corpus
@@ -963,15 +962,15 @@ object Layouts {
     try {
       inParallel(
         () => sortedStats(prov(Dedup.exactFingerprints(docs, textCol)),
-          s"$path/fp", Seq("fp"),
+          s"$root/fp", Seq("fp"),
           groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
           batchId = Some("base")),
         () => sortedStats(prov(Dedup.bandedHashes(sigs, idCol, bands, k / bands)),
-          s"$path/banded", Seq("bh"),
+          s"$root/banded", Seq("bh"),
           groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
           batchId = Some("base")),
         () => sortedStats(prov(sigs.select(col(idCol), col("shingles"))),
-          s"$path/shingles", Seq(idCol),
+          s"$root/shingles", Seq(idCol),
           groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
           batchId = Some("base")),
         // one-row meta: the banded table only matches probes computed with
@@ -988,8 +987,8 @@ object Layouts {
           Seq((k, bands, shingleN)).toDF("k", "bands", "shingle_n")
             .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.__stage")
         })
-      publishMeta(s"$path/meta",
-        docs.sparkSession.sparkContext.hadoopConfiguration)
+      publishMeta(s"$path/meta", conf)
+      publishGen0(path, conf)
     } finally sigs.unpersist()
   }
 
@@ -1010,10 +1009,8 @@ object Layouts {
     * slice, so append(b); append(b) ≡ append(b) (DedupSpec pins probe
     * equality). Distinct batches MUST carry distinct ids: reusing an id
     * for different rows silently replaces the earlier batch's slice.
-    * Without `batchId` the write is a plain parquet append (legacy
-    * behavior, NOT idempotent — feed exactly-once batches or rebuild).
-    * A pre-batch_id index (flat files) only supports the plain append;
-    * asking it for replay safety throws — rebuild via [[minhashIndex]].
+    * Without `batchId` the batch lands under a fresh anonymous slice
+    * (NOT idempotent — feed exactly-once batches or rebuild).
     *
     * Each batch writes ONE ranged+sorted file per table (per-file stats
     * still prune; a session-default shuffle width here would scatter a
@@ -1034,39 +1031,30 @@ object Layouts {
     import graft.operators.Dedup
     val spark = docs.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
+    batchId.foreach(requireBatchId)
+    // slices land in the CURRENT generation; the fix-up loop after the
+    // writes handles a compact publishing concurrently
+    val (v0, root) = currentGeneration(path, conf)
     val m = spark.read.parquet(s"$path/meta").head()
     val (k, bands, shingleN) =
       (m.getAs[Int]("k"), m.getAs[Int]("bands"), m.getAs[Int]("shingle_n"))
-    batchId.foreach(requireBatchId)
-    // managed layout: slices land in the CURRENT generation; the fix-up
-    // loop after the writes handles a compact publishing concurrently
-    val gen0 = currentGeneration(path, conf)
-    val root = gen0.map(_._2).getOrElse(path)
     val fpCols = spark.read.parquet(s"$root/fp").columns.toSet
-    val batched = fpCols.contains("batch_id")
-    require(batched || batchId.isEmpty,
-      s"index at $path predates batch_id partitioning — a replay-safe " +
-        "append is impossible on its flat layout; rebuild via minhashIndex")
     // first-write-or-never, ENFORCED (the sortedTableAppend contract):
     // mixed provenanced/bare slices would fork the parquet schema
     require(provenance == fpCols.contains("src_batch"),
       s"provenance mismatch at $path: the index " +
         (if (fpCols.contains("src_batch")) "carries" else "lacks") +
         " src_batch — build and append with the same provenance setting")
-    // batched layout: a batch without an explicit id still needs SOME
-    // batch_id directory — draw a unique one (append-mode, so nothing is
+    // a batch without an explicit id still needs SOME batch_id
+    // directory — draw a unique one (append-mode, so nothing is
     // overwritten; uniqueness keeps two anonymous batches from colliding)
-    val (bid, mode, dyn) = batchId match {
-      case Some(b)          => (Some(b), "overwrite", true)
-      case None if batched  => (Some("anon-" + java.util.UUID.randomUUID), "append", false)
-      case None             => (None, "append", false)
-    }
+    val bid = batchId.getOrElse("anon-" + java.util.UUID.randomUUID)
+    val (mode, dyn) =
+      if (batchId.isDefined) ("overwrite", true) else ("append", false)
     // provenance: fold-surviving row lineage for [[minhashRetractFolded]]
     // (same first-write-or-never contract as the build side)
-    def prov(df: DataFrame): DataFrame = (provenance, bid) match {
-      case (true, Some(b)) => df.withColumn("src_batch", lit(b))
-      case _               => df
-    }
+    def prov(df: DataFrame): DataFrame =
+      if (provenance) df.withColumn("src_batch", lit(bid)) else df
     // the three per-table writes overlap ([[inParallel]] — visibility of
     // a mid-append partial slice is unchanged: readers could already
     // observe any single table's files before the others' under the
@@ -1079,24 +1067,23 @@ object Layouts {
       () => sortedStats(prov(Dedup.exactFingerprints(docs, textCol)),
         s"$root/fp", Seq("fp"),
         groupBytes = groupBytes, pageRows = pageRows, partitions = 1,
-        mode = mode, batchId = bid, dynamicOverwrite = dyn),
+        mode = mode, batchId = Some(bid), dynamicOverwrite = dyn),
       () => sortedStats(prov(Dedup.bandedHashes(sigs, idCol, bands, k / bands)),
         s"$root/banded", Seq("bh"),
         groupBytes = groupBytes, pageRows = pageRows, partitions = 1,
-        mode = mode, batchId = bid, dynamicOverwrite = dyn),
+        mode = mode, batchId = Some(bid), dynamicOverwrite = dyn),
       () => sortedStats(prov(sigs.select(col(idCol), col("shingles"))),
         s"$root/shingles", Seq(idCol),
         groupBytes = groupBytes, pageRows = pageRows, partitions = 1,
-        mode = mode, batchId = bid, dynamicOverwrite = dyn))
+        mode = mode, batchId = Some(bid), dynamicOverwrite = dyn))
     finally sigs.unpersist()
-    // managed layout: seal the slices (the fold skips unsealed = in-flight
-    // appends), then chase the manifest — if a compact published a new
-    // generation while this append was writing, copy the slices forward
-    // and re-check until the version holds still (see the protocol note
-    // above currentGeneration)
-    for ((v0, _) <- gen0; b <- bid)
-      chaseManifest(path, v0, root, b,
-        minhashFamily(groupBytes, pageRows, 1)(spark), conf)
+    // seal the slices (the fold skips unsealed = in-flight appends), then
+    // chase the manifest — if a compact published a new generation while
+    // this append was writing, copy the slices forward and re-check until
+    // the version holds still (see the protocol note above
+    // currentGeneration)
+    chaseManifest(path, v0, root, bid,
+      minhashFamily(groupBytes, pageRows, 1)(spark), conf)
   }
 
   /** Persisted EXACT-Jaccard corpus index — the no-miss dual of
@@ -1196,7 +1183,9 @@ object Layouts {
     * A production deployment swaps the modulo sample for
     * [[graft.operators.SimilaritySearch.kmeansIterate]] output; the index
     * contract (cell-partitioned lists + broadcast centroid table) is
-    * identical.
+    * identical. `assign` is born managed under `g=000000000` + manifest
+    * v0; `cent` and `meta` stay at the index path (centroids are frozen
+    * by the append contract — parameter identity, like the MinHash meta).
     */
   /** Centroid count above which [[ivfIndex]]'s default (auto) build
     * switches from the flat n·k assignment to the two-level n·√k coarse
@@ -1219,6 +1208,9 @@ object Layouts {
       twoLevel: Option[Boolean] = None,
       provenance: Boolean = false): Unit = {
     import graft.operators.SimilaritySearch
+    val spark = corpus.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = gen0Root(path, conf)
     // modulo sampling CAN select zero rows (offset/odd id lattices, or a
     // non-numeric idCol where `id % m` is NULL) — an index with an empty
     // centroid table would be written without error and every later
@@ -1242,7 +1234,6 @@ object Layouts {
     // exists (VERDICT r12 watch-item #1); the persisted layout and the
     // probe are identical either way, and meta records the RESOLVED
     // choice so a rebuild is reproducible.
-    val spark = corpus.sparkSession
     // the assignment pass reads the centroids BACK from the just-written
     // one-file table instead of re-deriving them with a second full
     // corpus scan+filter (review r13: at the 100 TB regime that scan
@@ -1283,7 +1274,7 @@ object Layouts {
       () => listed.withColumn("batch_id", lit("base"))
         .repartition(col("cent_id"))
         .write.mode("overwrite").partitionBy("cent_id", "batch_id")
-        .parquet(s"$path/assign"),
+        .parquet(s"$root/assign"),
       // meta written to a STAGED name inside the overlap, published by
       // rename after the assign tree commits (the ADVICE r18 sentinel
       // applied to the IVF family — ivfAppend/probes read meta for
@@ -1293,7 +1284,8 @@ object Layouts {
         Seq((centModulo, useTwoLevel)).toDF("cent_modulo", "two_level")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.__stage")
       })
-    publishMeta(s"$path/meta", spark.sparkContext.hadoopConfiguration)
+    publishMeta(s"$path/meta", conf)
+    publishGen0(path, conf)
   }
 
   /** Incremental maintenance of a persisted IVF index: assign ONLY the
@@ -1314,11 +1306,7 @@ object Layouts {
     * skew from drift warrants it (x131's balance audit is the monitor).
     *
     * The assignment pass reuses the build's RESOLVED flat/two-level
-    * choice from the index meta, so append and build shard the same way
-    * (a pre-two_level meta — the x144-era generation — is necessarily a
-    * flat build, since the coarse pass postdates it; the guard below
-    * resolves it to flat instead of throwing on exactly the legacy
-    * indexes the schema alignment exists for).
+    * choice from the index meta, so append and build shard the same way.
     *
     * Replay safety: pass `batchId` and the batch writes `(cent_id,
     * batch_id)` leaf partitions via a dynamic partition overwrite — a
@@ -1326,10 +1314,8 @@ object Layouts {
     * deterministic against frozen centroids, so the replacement is
     * byte-identical), making append(b); append(b) ≡ append(b)
     * (IvfIndexSpec pins probe equality). Distinct batches MUST carry
-    * distinct ids. Without `batchId` the write is a plain parquet append
-    * (NOT idempotent — feed exactly-once batches). A pre-batch_id index
-    * layout only supports the plain append; asking it for replay safety
-    * throws — rebuild via [[ivfIndex]].
+    * distinct ids. Without `batchId` the batch lands under a fresh
+    * anonymous slice (NOT idempotent — feed exactly-once batches).
     */
   def ivfAppend(
       batch: DataFrame,
@@ -1341,71 +1327,45 @@ object Layouts {
     import graft.operators.SimilaritySearch
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
+    batchId.foreach(requireBatchId)
+    // slices land in the CURRENT generation's assign table; the
+    // post-write manifest chase below handles a compact publishing
+    // concurrently (MinHash protocol)
+    val (v0, root) = currentGeneration(path, conf)
+    val assign = s"$root/assign"
     val centsFor = spark.read.parquet(s"$path/cent")
       .select(col("cent_id").as(idCol), col("centv").as(vecCol))
-    val meta = spark.read.parquet(s"$path/meta")
-    val useTwoLevel = meta.columns.contains("two_level") &&
-      meta.head().getAs[Boolean]("two_level")
-    // managed layout ([[manageIvf]]): slices land in the CURRENT
-    // generation's assign table; the post-write manifest chase below
-    // handles a compact publishing concurrently (MinHash protocol)
-    val gen0 = currentGeneration(path, conf)
-    val assign = s"${gen0.map(_._2).getOrElse(path)}/assign"
+    val useTwoLevel =
+      spark.read.parquet(s"$path/meta").head().getAs[Boolean]("two_level")
     val lists =
       if (useTwoLevel) SimilaritySearch.invertedListsTwoLevel(batch, centsFor, idCol, vecCol)
       else SimilaritySearch.invertedLists(batch, centsFor, idCol, vecCol)
-    // schema-match the EXISTING files: a pre-corpusn index (the probe's
-    // documented legacy fallback) must not become a mixed-schema directory
-    // — parquet's non-merged read would take one file's schema and either
-    // null out corpusn for every base row (base corpus silently vanishes
-    // from top-k under desc-nulls-last) or drop it for the new rows
-    val existingCols = spark.read.parquet(assign).columns.toSet
-    val aligned =
-      if (existingCols.contains("corpusn")) lists
-      else lists.drop("corpusn")
-    val batched = existingCols.contains("batch_id")
-    batchId.foreach(requireBatchId)
-    require(batched || batchId.isEmpty,
-      s"index at $path predates batch_id partitioning — a replay-safe " +
-        "append is impossible on its layout; rebuild via ivfIndex")
     // provenance must MATCH the table (first-write-or-never): a bare
     // append into a provenanced assign tree (or vice versa) forks the
-    // parquet schema exactly like the corpusn hazard above
+    // parquet schema — the non-merged read would drop the column for
+    // half the rows
+    val existingCols = spark.read.parquet(assign).columns.toSet
     require(provenance == existingCols.contains("src_batch"),
       s"provenance mismatch at $path: the assign table " +
         (if (existingCols.contains("src_batch")) "carries" else "lacks") +
         " src_batch — build with the same provenance setting")
-    def prov(df: DataFrame, b: String): DataFrame =
-      if (provenance) df.withColumn("src_batch", lit(b)) else df
+    val bid = batchId.getOrElse("anon-" + java.util.UUID.randomUUID)
     // NOT cell-colocated like the build/fold: an append batch is bounded
     // (few files per touched cell already) and the extra hash shuffle per
     // ingest batch measured as a net loss on the r18 A/B windows
-    val colocated = aligned
-    val bid = (batchId, batched) match {
-      case (Some(b), _) =>
-        prov(colocated, b).withColumn("batch_id", lit(b))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cent_id", "batch_id").parquet(assign)
-        Some(b)
-      case (None, true) =>
-        val anon = "anon-" + java.util.UUID.randomUUID
-        prov(colocated, anon).withColumn("batch_id", lit(anon))
-          .write.mode("append").partitionBy("cent_id", "batch_id")
-          .parquet(assign)
-        Some(anon)
-      case (None, false) =>
-        colocated.write.mode("append").partitionBy("cent_id").parquet(assign)
-        None
-    }
-    // managed layout: seal, then chase the manifest — the MinHash
-    // append's fix-up protocol with the cell-level slice dirs
-    for ((v0, r0) <- gen0; b <- bid)
-      chaseManifest(path, v0, r0, b, ivfFamily()(spark), conf)
+    val sliced = (if (provenance) lists.withColumn("src_batch", lit(bid)) else lists)
+      .withColumn("batch_id", lit(bid)).write.partitionBy("cent_id", "batch_id")
+    if (batchId.isDefined)
+      sliced.mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(assign)
+    else sliced.mode("append").parquet(assign)
+    // seal, then chase the manifest — the MinHash append's fix-up
+    // protocol with the cell-level slice dirs
+    chaseManifest(path, v0, root, bid, ivfFamily()(spark), conf)
   }
 
   /** Retract one ingest batch from a batch_id-partitioned index: delete
     * its `batch_id=<id>` partition directories under every index table
-    * (the minhash tables at depth 1, the IVF cell partitions at depth 2)
+    * (every table of the index, every retained generation)
     * — the Hive DROP PARTITION of this layout, and the recovery path when
     * a bad batch (poisoned, mislabeled, legally retracted) must leave the
     * corpus. O(files in the batch), no rewrite of any other generation;
@@ -1425,20 +1385,26 @@ object Layouts {
     // Same charset contract as requireBatchId on the append side.
     requireBatchId(batchId)
     val conf = spark.sparkContext.hadoopConfiguration
-    // four depths: a single sorted table AT path (posting index), the
-    // minhash tables one level down, the IVF cell partitions two down,
-    // and the same two shapes one generation-dir deeper under a managed
-    // layout (g=N/tbl/... — retraction hits every retained generation,
-    // which is correct: a retracted batch must vanish from the grace
-    // generation's readers too)
-    Seq(s"$path/batch_id=$batchId",
-        s"$path/*/batch_id=$batchId", s"$path/*/*/batch_id=$batchId",
+    def glob(pattern: String): Array[org.apache.hadoop.fs.FileStatus] = {
+      val g = new org.apache.hadoop.fs.Path(pattern)
+      Option(g.getFileSystem(conf).globStatus(g)).getOrElse(Array.empty)
+    }
+    // a managed table/index at path, or an index of managed tables one
+    // level down (the BM25 trio)
+    require(Seq(path, s"$path/*").exists(p => glob(s"$p/$ManifestDirName/v*").nonEmpty),
+      s"no index manifest at $path (nor one level down) — build the index " +
+        "with this library first")
+    // three depths: a single sorted table's slices under its generation
+    // dirs (g=N/batch_id=X), the minhash and BM25 tables one level deeper
+    // (g=N/fp/... and postings/g=N/...), the IVF cell partitions two
+    // deeper. Retraction hits every retained generation, which is
+    // correct: a retracted batch must vanish from the grace generation's
+    // readers too
+    Seq(s"$path/*/batch_id=$batchId", s"$path/*/*/batch_id=$batchId",
         s"$path/*/*/*/batch_id=$batchId")
-      .map { glob =>
-        val g = new org.apache.hadoop.fs.Path(glob)
-        val fs = g.getFileSystem(conf)
-        val hits = Option(fs.globStatus(g)).getOrElse(Array.empty)
-        hits.foreach(h => fs.delete(h.getPath, true))
+      .map { pattern =>
+        val hits = glob(pattern)
+        hits.foreach(h => h.getPath.getFileSystem(conf).delete(h.getPath, true))
         hits.length
       }.sum
   }
@@ -1456,24 +1422,16 @@ object Layouts {
     * are invariant (x155 pins that through the driver oracle); `fp` is
     * deduplicated in passing (duplicate fingerprints across generations
     * are probe-neutral through the semi-join but pure dead weight).
-    * Each table swaps in via rewrite-aside + rename; at 100 TB the same
-    * two-phase shape lands behind a catalog/manifest pointer swap.
     *
-    * Operational constraint with the streaming admit loop
-    * ([[graft.streaming.StreamDedup.ingestAdmitLoop]]): on the LEGACY
-    * flat layout, compact only a QUIESCED index — the rename-aside swap
-    * can race a live probe's root, and rebasing folds every slice into
-    * `base`, so a pending at-least-once replay of the last batch would
-    * no longer find its own slice to self-exclude, classify its docs
-    * against their own rebased rows (all self-dups), and write a wrong
-    * ledger slice for that batch. A MANIFEST-MANAGED index
-    * ([[manageMinhash]]) removes the constraint: generations are
-    * immutable, the swap is a pointer publish, each stream's newest
-    * slice stays live through the fold (replay self-exclusion intact),
-    * and slices landing mid-compact reach the new generation via the
-    * compactor's post-publish re-list or the writer's own fix-up —
-    * ManagedCompactionSpec runs admit batches across a concurrent
-    * compact and pins probe/ledger invariance.
+    * The fold writes a NEW immutable generation and publishes its
+    * manifest pointer, so the streaming admit loop
+    * ([[graft.streaming.StreamDedup.ingestAdmitLoop]]) keeps running
+    * through it: each stream's newest slice stays live through the fold
+    * (a pending at-least-once replay of the last batch still finds its
+    * own slice to self-exclude), and slices landing mid-compact reach
+    * the new generation via the compactor's post-publish re-list or the
+    * writer's own fix-up — ManagedCompactionSpec runs admit batches
+    * across a concurrent compact and pins probe/ledger invariance.
     */
   def minhashCompact(
       path: String,
@@ -1483,120 +1441,38 @@ object Layouts {
       graceGenerations: Int = 1)(
       implicit spark: org.apache.spark.sql.SparkSession): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    // sort keys are structural per table (the build's own choices):
-    // fp on the fingerprint, banded on the bucket hash, shingles on the
-    // id column — whatever the caller named it, it is the non-payload
-    // column left over (the managed path's copy lives in
-    // [[minhashFamily]].fold)
-    def shape(tbl: String, flat: DataFrame): (DataFrame, Seq[String]) =
-      tbl match {
-        case "fp"     => (flat.distinct(), Seq("fp"))
-        case "banded" => (flat, Seq("bh"))
-        case _        =>
-          (flat, flat.columns.filterNot(_ == "shingles").take(1).toSeq)
-      }
-    currentGeneration(path, conf) match {
-      case Some((v, rootG)) =>
-        // ---- managed: the shared manifest protocol; the snapshot is
-        // taken ONCE across all three tables (inside the engine, via the
-        // family's union sliceStates) so the fold/live split is
-        // consistent per batch — a batch folded in fp but live in banded
-        // would half-break its replay self-exclusion
-        managedCompact(path, v, rootG,
-          minhashFamily(groupBytes, pageRows, partitions),
-          graceGenerations, conf)
-      case None =>
-        // ---- legacy flat layout: rewrite-aside + rename (quiesced only;
-        // the three tables rewrite independently — [[inParallel]])
-        inParallel(Seq("fp", "banded", "shingles").map(tbl => () => {
-          val tblPath = s"$path/$tbl"
-          recoverCrashedSwap(tblPath, conf)
-          val df = spark.read.parquet(tblPath)
-          require(df.columns.contains("batch_id"),
-            s"$tblPath predates batch_id partitioning — nothing to compact; " +
-              "rebuild via minhashIndex to migrate")
-          val (shaped, sortCols) = shape(tbl, df.drop("batch_id"))
-          val tmp = s"$tblPath.__compact"
-          sortedStats(shaped, tmp, sortCols,
-            groupBytes = groupBytes, pageRows = pageRows,
-            partitions = partitions, batchId = Some("base"))
-          swapIn(tblPath, tmp, conf)
-        }): _*)
-    }
-  }
-
-  /** Rename-aside table swap, never delete-then-rename: while the process
-    * lives, a failure leaves a readable table (a failed FIRST rename
-    * leaves the old table untouched; a failed SECOND rolls the old one
-    * back in). A hard CRASH between the two renames, however, leaves NO
-    * table at the canonical path — the previous generation is stranded at
-    * `<tblPath>.__old` (ADVICE r15: the old comment overclaimed
-    * "readable at every instant"). Recovery is the rename back, and this
-    * method performs it automatically on entry, so the next compaction
-    * self-heals a crashed predecessor — and because every rename-swap
-    * CALLER reads the table before swapping, each calls
-    * [[recoverCrashedSwap]] first, before that read can throw on the
-    * missing path (review r16: recovery placed only inside swapIn was
-    * unreachable behind the callers' own reads). A READER hitting the
-    * window still sees a missing-path error until any compaction runs
-    * (or the operator restores `.__old` by hand). The
-    * manifest-generation layout below exists precisely to close this
-    * window — its pointer swap is a single atomic file create and
-    * readers never lose a root.
-    */
-  private def swapIn(tblPath: String, tmp: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(tblPath).getFileSystem(conf)
-    val cur = new org.apache.hadoop.fs.Path(tblPath)
-    val old = new org.apache.hadoop.fs.Path(s"$tblPath.__old")
-    recoverCrashedSwap(tblPath, conf)
-    fs.delete(old, true) // stale debris from an earlier crashed swap
-    require(fs.rename(cur, old),
-      s"compaction swap failed moving $tblPath aside — table untouched")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), cur)) {
-      fs.rename(old, cur) // roll the previous generation back in
-      sys.error(s"compaction swap failed installing $tmp at $tblPath — " +
-        "previous generation restored")
-    }
-    fs.delete(old, true)
-  }
-
-  /** Restore a table stranded at `<tblPath>.__old` by a process that
-    * crashed between [[swapIn]]'s two renames. Called by every
-    * rename-swap compaction BEFORE it first reads the table (the read
-    * would otherwise throw on the missing canonical path and the
-    * recovery inside swapIn could never run).
-    */
-  private def recoverCrashedSwap(tblPath: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(tblPath).getFileSystem(conf)
-    val cur = new org.apache.hadoop.fs.Path(tblPath)
-    val old = new org.apache.hadoop.fs.Path(s"$tblPath.__old")
-    if (!fs.exists(cur) && fs.exists(old)) {
-      require(fs.rename(old, cur),
-        s"found crashed-swap debris at $old but could not restore it")
-    }
+    val (v, rootG) = currentGeneration(path, conf)
+    // the snapshot is taken ONCE across all three tables (inside the
+    // engine, via the family's union sliceStates) so the fold/live split
+    // is consistent per batch — a batch folded in fp but live in banded
+    // would half-break its replay self-exclusion
+    managedCompact(path, v, rootG,
+      minhashFamily(groupBytes, pageRows, partitions),
+      graceGenerations, conf)
   }
 
   // ---- manifest-generation index layout (VERDICT r15 #5) --------------
   //
-  // The rename-aside swap above requires a QUIESCED index: the canonical
-  // table path is briefly absent mid-swap, and a compaction that folds
-  // batch slices into `base` races a live admit loop two ways — a probe
-  // can lose its root mid-read, and a slice that lands while the fold
-  // runs is either half-folded or stranded in a directory the fold
-  // already read past. The manifest layout removes the shared mutable
-  // path: table generations are IMMUTABLE sibling directories
-  // (`<path>/g=NNNNNNNNN/{fp,banded,shingles}`) and the only mutation is
-  // publishing a new pointer file (`<path>/_manifest/vNNNNNNNNN`,
-  // create-once; highest version wins). Readers resolve the pointer once
-  // per probe and read an immutable root; the previous generation is
-  // retained as grace for one compaction cycle, so in-flight readers
-  // finish on the root they resolved. At 100 TB this is the catalog/
-  // manifest pattern (Iceberg-style) the directory rename was standing
-  // in for.
+  // Every index family with an append/compact lifecycle has ONE on-disk
+  // layout, from its build on: table generations are IMMUTABLE sibling
+  // directories (`<path>/g=NNNNNNNNN/{fp,banded,shingles}`) and the only
+  // mutation is publishing a new pointer file (`<path>/_manifest/
+  // vNNNNNNNNN`, create-once; highest version wins). No shared table
+  // path is ever renamed or briefly absent — on object stores a
+  // directory rename is a copy — so a compaction never races a live
+  // probe or admit loop. Readers resolve the pointer once per probe and
+  // read an immutable root; the previous generation is retained as grace
+  // for one compaction cycle, so in-flight readers finish on the root
+  // they resolved. At 100 TB this is the catalog/manifest pattern
+  // (Iceberg-style).
   //
-  // Writer/compactor protocol (no locks, single compactor assumed):
+  // Build/writer/compactor protocol (no locks, single compactor
+  // assumed):
+  //   - a BUILD writes generation 0 (`g=000000000`) and publishes v0 as
+  //     its LAST step, so "a manifest exists" means "the index is
+  //     complete". A build refuses a path that already holds a manifest
+  //     (see [[gen0Root]]); one that crashed before its publish left only
+  //     an unpublished `g=000000000`, which the re-run clears.
   //   - an APPEND resolves the current generation, writes its slices
   //     there, SEALS each slice (a `_SEALED` marker file — the fold
   //     never touches unsealed, i.e. in-flight, slices), then re-reads
@@ -1626,11 +1502,11 @@ object Layouts {
   private val SealName = "_SEALED"
   private def genName(v: Long): String = f"g=$v%09d"
 
-  /** Current (version, generation root) of a manifest-managed index, or
-    * None for the legacy flat layout (every API below falls back to the
-    * flat path in that case, so unmanaged indexes keep working unchanged).
+  /** Highest published (version, generation root) of the table or index
+    * at `path`, or None when nothing is published there yet — the lookup
+    * only the index builds use, to refuse a published target.
     */
-  def currentGeneration(path: String,
+  private def findGeneration(path: String,
       conf: org.apache.hadoop.conf.Configuration): Option[(Long, String)] = {
     val md = new org.apache.hadoop.fs.Path(s"$path/$ManifestDirName")
     val fs = md.getFileSystem(conf)
@@ -1646,16 +1522,49 @@ object Layouts {
     }
   }
 
+  /** Current (version, generation root) of the table or index at `path`.
+    * Throws `IllegalArgumentException` naming the path when it holds no
+    * published manifest — every lifecycle call resolves through this, so
+    * a hand-made or half-built directory is refused before anything
+    * reads or writes it.
+    */
+  def currentGeneration(path: String,
+      conf: org.apache.hadoop.conf.Configuration): (Long, String) =
+    findGeneration(path, conf).getOrElse(throw new IllegalArgumentException(
+      s"no index manifest at $path — build the index with this library " +
+        "first (a build publishes its manifest as its last step)"))
+
   /** Resolve the directory the index's TABLES live under: the current
-    * generation for a managed index, the path itself for a legacy flat
-    * one. Probes resolve ONCE and read all tables from the same immutable
-    * root — `meta` stays at the index path (it is parameter identity, not
-    * generation state).
+    * generation. Probes resolve ONCE and read all tables from the same
+    * immutable root — `meta` stays at the index path (it is parameter
+    * identity, not generation state).
     */
   def indexRoot(path: String)(
       implicit spark: org.apache.spark.sql.SparkSession): String =
-    currentGeneration(path, spark.sparkContext.hadoopConfiguration)
-      .map(_._2).getOrElse(path)
+    currentGeneration(path, spark.sparkContext.hadoopConfiguration)._2
+
+  /** Generation-0 root an index build writes into. Refuses a `path` that
+    * already holds a published manifest: rewriting only the table dirs
+    * would leave readers on the old generation (and an IVF `cent` paired
+    * with the old lists) — build into a new path instead. An unpublished
+    * `g=000000000` is the debris of a build that crashed before its
+    * publish; it is cleared so the re-run starts clean.
+    */
+  private def gen0Root(path: String,
+      conf: org.apache.hadoop.conf.Configuration): String = {
+    require(findGeneration(path, conf).isEmpty,
+      s"refuse to build into $path: it already holds a published index " +
+        "(_manifest) — build into a new path")
+    val root = s"$path/${genName(0L)}"
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(conf).delete(p, true)
+    root
+  }
+
+  /** An index build's last step: publish manifest v0 over `g=000000000`. */
+  private def publishGen0(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Unit =
+    publishGeneration(path, 0L, genName(0L), conf)
 
   /** Publish manifest version `v` pointing at generation dir `gen`
     * (name relative to the index path). Create-once: two racing
@@ -1670,33 +1579,6 @@ object Layouts {
     val out = fs.create(target, /*overwrite=*/ false)
     try out.write(gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-  }
-
-  /** Migrate a flat MinHash index (as [[minhashIndex]] writes it) into
-    * the manifest-generation layout: the three tables MOVE into
-    * `g=000000000` and manifest v0 is published. Run this once, quiesced
-    * (it is a setup-time migration — the whole point is that everything
-    * AFTER it never needs quiescence again); `meta` stays at the index
-    * path. Idempotent: a second call on a managed index is a no-op.
-    */
-  def manageMinhash(path: String)(
-      implicit spark: org.apache.spark.sql.SparkSession): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // the family's fold params are irrelevant to a migration (only the
-    // slice geometry — enumerate + seal — is exercised)
-    migrateToManaged(path, minhashFamily(), conf) { (fs, genDir) =>
-      Seq("fp", "banded", "shingles").foreach { tbl =>
-        val src = new org.apache.hadoop.fs.Path(s"$path/$tbl")
-        val dst = new org.apache.hadoop.fs.Path(s"$genDir/$tbl")
-        // resumable (review r16): a crash between the moves and the
-        // publish leaves some tables already inside g=000000000 — a
-        // re-run finishes the migration instead of demanding a rebuild
-        if (fs.exists(src))
-          require(fs.rename(src, dst), s"could not move $src into $genDir")
-        else require(fs.exists(dst),
-          s"no $tbl table at $path — build minhashIndex first")
-      }
-    }
   }
 
   /** Batch slice directories (`batch_id=X`) of one table; (id, sealed). */
@@ -1945,41 +1827,19 @@ object Layouts {
       conf: org.apache.hadoop.conf.Configuration): Unit = {
     fam.sealSlices(root0, bid, conf)
     var prev = (v0, root0)
-    var cur = currentGeneration(path, conf).getOrElse(prev)
+    var cur = currentGeneration(path, conf)
     while (cur._1 != prev._1) {
       if (!foldedSince(path, prev._1, cur._1, conf).contains(bid))
         fam.forceCopySlice(prev._2, cur._2, bid, conf)
       prev = cur
-      cur = currentGeneration(path, conf).getOrElse(prev)
+      cur = currentGeneration(path, conf)
     }
-  }
-
-  /** The MIGRATE side: move a quiesced flat index into `g=000000000` via
-    * the family-specific `move`, then SEAL every migrated slice (flat
-    * appends never seal, and the managed fold absorbs only sealed slices
-    * — without this the first compact silently drops pre-migration
-    * batches, ADVICE r16), then publish v0. Idempotent on a managed
-    * index; resumable after a crash between the moves and the publish.
-    */
-  private def migrateToManaged(path: String, fam: ManifestFamily,
-      conf: org.apache.hadoop.conf.Configuration)(
-      move: (org.apache.hadoop.fs.FileSystem, String) => Unit): Unit = {
-    if (currentGeneration(path, conf).isDefined) return
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val gen = genName(0L)
-    val genDir = s"$path/$gen"
-    fs.mkdirs(new org.apache.hadoop.fs.Path(genDir))
-    move(fs, genDir)
-    fam.sliceStates(genDir, conf).collect { case (id, false) => id }
-      .foreach(b => fam.sealSlices(genDir, b, conf))
-    publishGeneration(path, 0L, gen, conf)
   }
 
   /** The MinHash trio's geometry: three sorted-stats tables one level
     * under the generation root, slices as `batch_id=X` dirs per table.
     */
-  private def minhashFamily(groupBytes: Long = 128L * 1024 * 1024,
-      pageRows: Int = 20000, partitions: Int = 0,
+  private def minhashFamily(groupBytes: Long, pageRows: Int, partitions: Int,
       foldFilter: Column = lit(true))(
       implicit spark: org.apache.spark.sql.SparkSession): ManifestFamily =
     new ManifestFamily {
@@ -2027,8 +1887,8 @@ object Layouts {
     * BM25 deltas sum, the champion tier re-selects — [[rebaseShaped]]).
     */
   private def sortedTableFamily(sortCols: Seq[String],
-      groupBytes: Long = 128L * 1024 * 1024, pageRows: Int = 20000,
-      partitions: Int = 0, foldFilter: Column = lit(true),
+      groupBytes: Long, pageRows: Int, partitions: Int,
+      foldFilter: Column = lit(true),
       shape: DataFrame => DataFrame = identity)(
       implicit spark: org.apache.spark.sql.SparkSession): ManifestFamily =
     new ManifestFamily {
@@ -2110,100 +1970,15 @@ object Layouts {
     * rescan. Probe results are invariant, including the dynamic
     * partition pruning on cent_id (x156 value-tests both through x152's
     * per-cell oracle; IvfIndexSpec pins probe equality + the pruned
-    * plan).
+    * plan). The shared manifest protocol with slices living one level
+    * deeper (cent_id=X/batch_id=b leaf dirs, one per touched cell —
+    * [[ivfFamily]]).
     */
   def ivfCompact(path: String, graceGenerations: Int = 1)(
       implicit spark: org.apache.spark.sql.SparkSession): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    currentGeneration(path, conf) match {
-      case Some((v, rootG)) =>
-        // ---- managed (see [[manageIvf]]): the shared manifest protocol
-        // with slices living one level deeper (cent_id=X/batch_id=b leaf
-        // dirs, one per touched cell — [[ivfFamily]])
-        managedCompact(path, v, rootG, ivfFamily(), graceGenerations, conf)
-      case None =>
-        // ---- legacy flat layout: rewrite-aside + rename (quiesced
-        // only); same one-shuffle-on-cent_id fold shape as the family's
-        val assignPath = s"$path/assign"
-        recoverCrashedSwap(assignPath, conf)
-        val df = spark.read.parquet(assignPath)
-        require(df.columns.contains("batch_id"),
-          s"$assignPath predates batch_id partitioning — nothing to compact; " +
-            "rebuild via ivfIndex to migrate")
-        val tmp = s"$assignPath.__compact"
-        df.drop("batch_id").withColumn("batch_id", lit("base"))
-          .repartition(col("cent_id"))
-          .write.mode("overwrite").partitionBy("cent_id", "batch_id")
-          .parquet(tmp)
-        swapIn(assignPath, tmp, conf)
-    }
-  }
-
-  /** Migrate a flat IVF index into the manifest-generation layout: the
-    * `assign` table MOVES into `g=000000000` and manifest v0 publishes;
-    * `cent` and `meta` stay at the index path (centroids are frozen by
-    * the append contract — they are parameter identity, like the MinHash
-    * meta). Run once, quiesced, like [[manageMinhash]]; everything after
-    * it — probes, [[ivfAppend]], [[ivfCompact]] — runs without quiescing
-    * again. Idempotent on a managed index.
-    */
-  def manageIvf(path: String)(
-      implicit spark: org.apache.spark.sql.SparkSession): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    migrateToManaged(path, ivfFamily(), conf) { (fs, genDir) =>
-      val src = new org.apache.hadoop.fs.Path(s"$path/assign")
-      val dst = new org.apache.hadoop.fs.Path(s"$genDir/assign")
-      // resumable (review r16): finish a crashed predecessor's publish
-      if (fs.exists(src))
-        require(fs.rename(src, dst), s"could not move $src into $genDir")
-      else require(fs.exists(dst),
-        s"no assign table at $path — build ivfIndex first")
-    }
-  }
-
-  /** Migrate a flat posting index into the manifest-generation layout:
-    * its batch slices MOVE into `g=000000000` and manifest v0 publishes —
-    * the table lives AT the generation root (the posting index is one
-    * sorted-stats table, unlike the MinHash trio / IVF assign tree). Run
-    * once, quiesced, like [[manageMinhash]]; everything after it —
-    * probes through [[indexRoot]], [[postingAppend]], [[sortedRebase]] —
-    * runs without quiescing again. Idempotent on a managed index.
-    */
-  def managePosting(path: String)(
-      implicit spark: org.apache.spark.sql.SparkSession): Unit =
-    manageSortedTable(path)
-
-  /** Migrate ANY flat batch-partitioned sorted-stats table into the
-    * manifest-generation layout — [[managePosting]] generalized (the
-    * geometry is the table's, not the posting index's). Run once,
-    * quiesced; idempotent on a managed table.
-    */
-  def manageSortedTable(path: String)(
-      implicit spark: org.apache.spark.sql.SparkSession): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // fold params are irrelevant to a migration — only the geometry runs
-    migrateToManaged(path, sortedTableFamily(Seq.empty), conf) {
-      (fs, genDir) =>
-        def slicesUnder(p: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          if (!fs.exists(hp)) Seq.empty
-          else fs.listStatus(hp).toSeq.filter(s =>
-            s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-        }
-        // resumable (review r16): a crash after the moves but before the
-        // publish leaves slices already inside g=000000000 and no
-        // manifest — a re-run must finish the publish, not demand a
-        // rebuild. Any slices still at the root (fresh migration, or a
-        // crash mid-move) move first; then the generation must be
-        // non-empty to publish.
-        val atRoot = slicesUnder(path)
-        require(atRoot.nonEmpty || slicesUnder(genDir).nonEmpty,
-          s"no batch_id slices at $path — build the table first")
-        atRoot.foreach(s =>
-          require(fs.rename(s.getPath, new org.apache.hadoop.fs.Path(
-            s"$genDir/${s.getPath.getName}")),
-            s"could not move ${s.getPath} into $genDir"))
-    }
+    val (v, rootG) = currentGeneration(path, conf)
+    managedCompact(path, v, rootG, ivfFamily(), graceGenerations, conf)
   }
 
   /** Retract a batch whose SLICE DIRECTORY no longer exists because a
@@ -2233,25 +2008,18 @@ object Layouts {
       "refuse to retract the base generation — rebuild the table instead")
     requireBatchId(batchId)
     val conf = spark.sparkContext.hadoopConfiguration
-    currentGeneration(path, conf) match {
-      case Some((v, rootG)) =>
-        require(spark.read.parquet(rootG).columns.contains("src_batch"),
-          s"$path carries no fold provenance (src_batch) — only slice-" +
-            "level retraction (dropBatch) is possible; append with " +
-            "provenance = true from the table's first write to enable this")
-        // null-safe filter: a row with NULL provenance (contract
-        // violation — a bare append into a provenanced table) must be
-        // KEPT, not silently deleted along with the retracted batch
-        retractRefold(path, batchId, v, rootG,
-          sortedTableFamily(sortCols, groupBytes, pageRows, partitions,
-            foldFilter = !(col("src_batch") <=> lit(batchId))),
-          graceGenerations, conf)
-      case None => sys.error(
-        s"retractFolded requires a manifest-managed table at $path — on " +
-          "the flat layout a folded batch is unrecoverable by id (rebase " +
-          "erases slice dirs); use dropBatch before rebasing, or migrate " +
-          "via manageSortedTable")
-    }
+    val (v, rootG) = currentGeneration(path, conf)
+    require(spark.read.parquet(rootG).columns.contains("src_batch"),
+      s"$path carries no fold provenance (src_batch) — only slice-" +
+        "level retraction (dropBatch) is possible; build and append with " +
+        "provenance = true to enable this")
+    // null-safe filter: a row with NULL provenance (contract violation —
+    // a bare append into a provenanced table) must be KEPT, not silently
+    // deleted along with the retracted batch
+    retractRefold(path, batchId, v, rootG,
+      sortedTableFamily(sortCols, groupBytes, pageRows, partitions,
+        foldFilter = !(col("src_batch") <=> lit(batchId))),
+      graceGenerations, conf)
   }
 
   /** [[retractFolded]] for the MinHash trio: the same fold-surviving
@@ -2274,21 +2042,15 @@ object Layouts {
       "refuse to retract the base generation — rebuild the index instead")
     requireBatchId(batchId)
     val conf = spark.sparkContext.hadoopConfiguration
-    currentGeneration(path, conf) match {
-      case Some((v, rootG)) =>
-        require(spark.read.parquet(s"$rootG/fp").columns.contains("src_batch"),
-          s"$path carries no fold provenance (src_batch) — only slice-" +
-            "level retraction (dropBatch) is possible; build and append " +
-            "with provenance = true to enable this")
-        retractRefold(path, batchId, v, rootG,
-          minhashFamily(groupBytes, pageRows, partitions,
-            foldFilter = !(col("src_batch") <=> lit(batchId))),
-          graceGenerations, conf)
-      case None => sys.error(
-        s"minhashRetractFolded requires a manifest-managed index at $path " +
-          "— on the flat layout a folded batch is unrecoverable by id; " +
-          "use dropBatch before compacting, or migrate via manageMinhash")
-    }
+    val (v, rootG) = currentGeneration(path, conf)
+    require(spark.read.parquet(s"$rootG/fp").columns.contains("src_batch"),
+      s"$path carries no fold provenance (src_batch) — only slice-" +
+        "level retraction (dropBatch) is possible; build and append " +
+        "with provenance = true to enable this")
+    retractRefold(path, batchId, v, rootG,
+      minhashFamily(groupBytes, pageRows, partitions,
+        foldFilter = !(col("src_batch") <=> lit(batchId))),
+      graceGenerations, conf)
   }
 
   /** [[retractFolded]] for the IVF assign tree — the vector-index leg of
@@ -2306,21 +2068,15 @@ object Layouts {
       "refuse to retract the base generation — rebuild the index instead")
     requireBatchId(batchId)
     val conf = spark.sparkContext.hadoopConfiguration
-    currentGeneration(path, conf) match {
-      case Some((v, rootG)) =>
-        require(
-          spark.read.parquet(s"$rootG/assign").columns.contains("src_batch"),
-          s"$path carries no fold provenance (src_batch) — only slice-" +
-            "level retraction (dropBatch) is possible; build and append " +
-            "with provenance = true to enable this")
-        retractRefold(path, batchId, v, rootG,
-          ivfFamily(foldFilter = !(col("src_batch") <=> lit(batchId))),
-          graceGenerations, conf)
-      case None => sys.error(
-        s"ivfRetractFolded requires a manifest-managed index at $path — " +
-          "on the flat layout a folded batch is unrecoverable by id; " +
-          "use dropBatch before compacting, or migrate via manageIvf")
-    }
+    val (v, rootG) = currentGeneration(path, conf)
+    require(
+      spark.read.parquet(s"$rootG/assign").columns.contains("src_batch"),
+      s"$path carries no fold provenance (src_batch) — only slice-" +
+        "level retraction (dropBatch) is possible; build and append " +
+        "with provenance = true to enable this")
+    retractRefold(path, batchId, v, rootG,
+      ivfFamily(foldFilter = !(col("src_batch") <=> lit(batchId))),
+      graceGenerations, conf)
   }
 
   /** The RETRACT side of the manifest protocol: a managed compact whose

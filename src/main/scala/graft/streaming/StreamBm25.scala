@@ -17,10 +17,8 @@ import org.apache.spark.sql.types._
   * serves the slices committed before its trigger, the reader-side
   * no-quiesce story x168 pins for the vector family, here for the
   * lexical one (x187). Retraction and compaction DELETE or replace
-  * slices: run them against a [[graft.sources.Layouts.manageBm25]]-
-  * managed index (immutable generations + grace window) to keep this
-  * stream up through them; on the flat layout they require quiesced
-  * probes.
+  * slices of immutable manifest generations (the previous generation
+  * stays as grace), so this stream stays up through them.
   */
 object StreamBm25 {
 

@@ -179,9 +179,7 @@ object StreamDedup {
     * batches cannot exist yet — foreachBatch commits in order), computes
     * byte-identical statuses, and the slice/ledger overwrites are
     * no-ops. StreamDedupSpec pins admit(b); admit(b) ≡ admit(b) on
-    * statuses, index rows, AND a follow-up probe. Requires a
-    * batch_id-partitioned (round-15) index layout — the append refuses a
-    * legacy flat index.
+    * statuses, index rows, AND a follow-up probe.
     *
     * Slice identity: the engine's batchId is unique only WITHIN one
     * checkpoint lineage — a reset checkpoint (or a second stream feeding
@@ -249,11 +247,8 @@ object StreamDedup {
     // self-exclusion: never probe against this batch's own slice (see
     // the replay contract above); first-run batches have no slice and
     // the filter is a no-op
-    def tbl(name: String) = {
-      val t = spark.read.parquet(s"$root/$name")
-      if (t.columns.contains("batch_id")) t.where(col("batch_id") =!= bid)
-      else t
-    }
+    def tbl(name: String) =
+      spark.read.parquet(s"$root/$name").where(col("batch_id") =!= bid)
     // statuses MATERIALIZE before the append below mutates the very
     // tables the probe reads — left lazy, the ledger write would
     // re-probe the GROWN index and misclassify the batch against itself

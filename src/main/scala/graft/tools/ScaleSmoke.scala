@@ -77,7 +77,8 @@ object ScaleSmoke {
     val idxDir = java.nio.file.Files.createTempDirectory("scale-posting").toString
     time("posting index build")(
       graft.sources.Layouts.postingIndex(big, idxDir, partitions = 8))
-    val posting = spark.read.parquet(idxDir)
+    val posting = spark.read.parquet(
+      graft.sources.Layouts.indexRoot(idxDir)(spark))
     val candsProbe = posting.where(col("tri").isin(tris: _*))
       .groupBy("doc_id").agg(countDistinct("tri").as("nt"))
       .where(col("nt") === tris.size)
@@ -166,11 +167,12 @@ object ScaleSmoke {
     val mhDir = java.nio.file.Files.createTempDirectory("scale-mhidx").toString
     time("minhash index build")(
       graft.sources.Layouts.minhashIndex(big, mhDir, partitions = 8))
+    val mhRoot = graft.sources.Layouts.indexRoot(mhDir)(spark)
     val ledger = time("ingest probe (classify shard)")(
       graft.operators.Dedup.incrementalDedupStaged(shard,
-        spark.read.parquet(s"$mhDir/fp"),
-        spark.read.parquet(s"$mhDir/banded"),
-        spark.read.parquet(s"$mhDir/shingles"))
+        spark.read.parquet(s"$mhRoot/fp"),
+        spark.read.parquet(s"$mhRoot/banded"),
+        spark.read.parquet(s"$mhRoot/shingles"))
         .groupBy("status").count().collect())
     println(s"[scale] ingest ledger: " +
       ledger.map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(", "))

@@ -165,6 +165,11 @@ object ScaleSweep {
     // family -> (scale -> (seconds, driver count))
     val results = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.LinkedHashMap[Int, (Double, Long)]]
+    // index builds refuse a path that already holds a published index
+    // and `record` may repeat its body, so every build writes a fresh
+    // subdir of its cell's temp dir (deleted with it)
+    var builds = 0
+    def fresh(dir: String): String = { builds += 1; s"$dir/b$builds" }
     def record(family: String, c: Int)(body: => Long): Unit = if (want(family)) {
       telem.foreach(_.mark(s"$family"))
       val runs = (1 to repeat).map { i =>
@@ -298,11 +303,16 @@ object ScaleSweep {
           .otherwise(concat(col("text"), lit(" xtra"))).as("text"))
       if (want("minhash_index_build") || want("ingest_probe_banded")) {
         val mhDir = java.nio.file.Files.createTempDirectory(s"sweep-mh$c").toString
+        var mhIdx = ""
+        def buildIt(): Unit = {
+          mhIdx = fresh(mhDir)
+          graft.sources.Layouts.minhashIndex(docs, mhIdx, partitions = 16)
+        }
         if (want("minhash_index_build")) record("minhash_index_build", c) {
-          graft.sources.Layouts.minhashIndex(docs, mhDir, partitions = 16); n0 * c
-        } else graft.sources.Layouts.minhashIndex(docs, mhDir, partitions = 16)
+          buildIt(); n0 * c
+        } else buildIt()
         record("ingest_probe_banded", c)(
-          Dedup.incrementalDedupStaged(shard, mhDir,
+          Dedup.incrementalDedupStaged(shard, mhIdx,
             "doc_id", "text", threshold = 0.5).count())
         scala.reflect.io.Directory(new java.io.File(mhDir)).deleteRecursively()
       }
@@ -330,16 +340,18 @@ object ScaleSweep {
         val shCols = Seq("band_no", "band_val")
         try {
           def bands(df: DataFrame) = Dedup.simhashBanded(df)
-          def buildIt(): Unit = graft.sources.Layouts.sortedStats(
-            bands(docs).withColumn("src_batch", lit("base")), shDir, shCols,
-            partitions = 16, batchId = Some("base"))
+          var shIdx = ""
+          def buildIt(): Unit = {
+            shIdx = fresh(shDir)
+            graft.sources.Layouts.sortedTable(
+              bands(docs), shIdx, shCols, partitions = 16, provenance = true)
+          }
           if (want("simhash_index_build"))
             record("simhash_index_build", c) { buildIt(); n0 * c }
           else buildIt()
-          graft.sources.Layouts.manageSortedTable(shDir)(spark)
           if (want("simhash_probe")) record("simhash_probe", c) {
             val ib = spark.read.parquet(
-              graft.sources.Layouts.indexRoot(shDir)(spark))
+              graft.sources.Layouts.indexRoot(shIdx)(spark))
             bands(shard).as("p").join(ib.as("i"),
                 col("p.band_no") === col("i.band_no") &&
                   col("p.band_val") === col("i.band_val") &&
@@ -349,15 +361,15 @@ object ScaleSweep {
               .distinct().where(col("h") <= 3).count()
           }
           if (want("retract_folded")) {
-            graft.sources.Layouts.sortedTableAppend(bands(shard), shDir,
+            graft.sources.Layouts.sortedTableAppend(bands(shard), shIdx,
               shCols, batchId = Some("rx"), provenance = true)
-            graft.sources.Layouts.sortedRebase(shDir, shCols,
+            graft.sources.Layouts.sortedRebase(shIdx, shCols,
               partitions = 16)(spark)
             record("retract_folded", c) {
-              graft.sources.Layouts.retractFolded(shDir, "rx", shCols,
+              graft.sources.Layouts.retractFolded(shIdx, "rx", shCols,
                 partitions = 16)(spark)
               spark.read.parquet(
-                graft.sources.Layouts.indexRoot(shDir)(spark)).count()
+                graft.sources.Layouts.indexRoot(shIdx)(spark)).count()
             }
           }
         } finally scala.reflect.io.Directory(
@@ -373,14 +385,17 @@ object ScaleSweep {
       if (want("bm25_index_build") || want("bm25_serve")) {
         val bmDir = java.nio.file.Files.createTempDirectory(s"sweep-bm$c").toString
         try {
-          def buildIt(): Unit =
-            graft.sources.Layouts.bm25Index(docs, bmDir, partitions = 16)
+          var bmIdx = ""
+          def buildIt(): Unit = {
+            bmIdx = fresh(bmDir)
+            graft.sources.Layouts.bm25Index(docs, bmIdx, partitions = 16)
+          }
           if (want("bm25_index_build"))
             record("bm25_index_build", c) { buildIt(); n0 * c }
           else buildIt()
           if (want("bm25_serve")) record("bm25_serve", c) {
             graft.operators.Bm25
-              .topK(spark, bmDir, Seq("scan", "merge", "vector")).count()
+              .topK(spark, bmIdx, Seq("scan", "merge", "vector")).count()
           }
         } finally scala.reflect.io.Directory(
           new java.io.File(bmDir)).deleteRecursively()
@@ -396,14 +411,17 @@ object ScaleSweep {
           || want("positional_append")) {
         val pDir = java.nio.file.Files.createTempDirectory(s"sweep-pos$c").toString
         try {
-          def buildIt(): Unit =
-            graft.sources.Layouts.positionalIndex(docs, pDir, partitions = 16)
+          var pIdx = ""
+          def buildIt(): Unit = {
+            pIdx = fresh(pDir)
+            graft.sources.Layouts.positionalIndex(docs, pIdx, partitions = 16)
+          }
           if (want("positional_index_build"))
             record("positional_index_build", c) { buildIt(); n0 * c }
           else buildIt()
           if (want("phrase_serve")) record("phrase_serve", c) {
             graft.operators.Phrase
-              .topK(spark, pDir, Seq("table", "hash")).count()
+              .topK(spark, pIdx, Seq("table", "hash")).count()
           }
           // Span-near and gapped-template probes (x196/x197) ride the
           // same pruned posting ranges: expected flat-band like
@@ -411,14 +429,14 @@ object ScaleSweep {
           // the FIXED query terms' postings, never the corpus.
           if (want("near_serve")) record("near_serve", c) {
             graft.operators.Phrase
-              .near(spark, pDir, Seq("hash", "join", "sort"), 3).count()
+              .near(spark, pIdx, Seq("hash", "join", "sort"), 3).count()
           }
           if (want("gapped_serve")) record("gapped_serve", c) {
             graft.operators.Phrase
-              .gapped(spark, pDir, Seq(0 -> "merge", 2 -> "join"), 3).count()
+              .gapped(spark, pIdx, Seq(0 -> "merge", 2 -> "join"), 3).count()
           }
           if (want("positional_append")) record("positional_append", c) {
-            graft.sources.Layouts.positionalAppend(shard, pDir,
+            graft.sources.Layouts.positionalAppend(shard, pIdx,
               batchId = Some("rx")); n0
           }
         } finally scala.reflect.io.Directory(
@@ -432,7 +450,9 @@ object ScaleSweep {
       if (want("chunk_bm25_build") || want("passage_serve")) {
         val cbDir = java.nio.file.Files.createTempDirectory(s"sweep-cbm$c").toString
         try {
+          var cbIdx = ""
           def buildIt(): Unit = {
+            cbIdx = fresh(cbDir)
             val chunks = docs
               .select(col("doc_id"), split(col("text"), " ").as("toks"))
               .withColumn("n", size(col("toks")).cast("long"))
@@ -442,7 +462,7 @@ object ScaleSweep {
                 array_join(slice(col("toks"),
                   (col("chunk_no") * 8 + 1).cast("int"), lit(8)), " ")
                   .as("chunk_text"))
-            graft.sources.Layouts.bm25Index(chunks, cbDir,
+            graft.sources.Layouts.bm25Index(chunks, cbIdx,
               idCol = "chunk_id", textCol = "chunk_text", partitions = 16)
           }
           if (want("chunk_bm25_build"))
@@ -450,7 +470,7 @@ object ScaleSweep {
           else buildIt()
           if (want("passage_serve")) record("passage_serve", c) {
             graft.operators.Bm25
-              .scored(spark, cbDir, Seq("scan", "merge", "vector"))
+              .scored(spark, cbIdx, Seq("scan", "merge", "vector"))
               .withColumn("doc", expr("doc_id div 1000"))
               .groupBy("term", "doc")
               .agg(max("score").as("best_score")).count()
@@ -530,12 +550,17 @@ object ScaleSweep {
           // DEFAULT path (twoLevel auto-select) — the row a naive user's
           // build measures; above the centroid threshold this now rides
           // the n·√k two-level assignment (VERDICT r12 watch-item #1)
+          var ivfIdx = ""
+          def buildIt(): Unit = {
+            ivfIdx = fresh(ivfDir)
+            graft.sources.Layouts.ivfIndex(emb, ivfIdx, centModulo = centMod)
+          }
           if (want("ivf_index_build")) record("ivf_index_build", c) {
-            graft.sources.Layouts.ivfIndex(emb, ivfDir, centModulo = centMod); nEmb
-          } else graft.sources.Layouts.ivfIndex(emb, ivfDir, centModulo = centMod)
+            buildIt(); nEmb
+          } else buildIt()
           record("ivf_probe_staged", c)(
             SimilaritySearch.ivfTopKStaged(
-              embBase.where(col("vec_id") < 100), ivfDir, k = 5, nprobe = 2).count())
+              embBase.where(col("vec_id") < 100), ivfIdx, k = 5, nprobe = 2).count())
           scala.reflect.io.Directory(new java.io.File(ivfDir)).deleteRecursively()
         }
         // the n·√k two-level build at the SAME centroid density — the
@@ -544,7 +569,7 @@ object ScaleSweep {
         if (want("ivf_index_build_2l")) {
           val ivf2 = java.nio.file.Files.createTempDirectory(s"sweep-ivf2l$c").toString
           record("ivf_index_build_2l", c) {
-            graft.sources.Layouts.ivfIndex(emb, ivf2, centModulo = centMod,
+            graft.sources.Layouts.ivfIndex(emb, fresh(ivf2), centModulo = centMod,
               twoLevel = Some(true)); nEmb
           }
           scala.reflect.io.Directory(new java.io.File(ivf2)).deleteRecursively()
@@ -554,7 +579,7 @@ object ScaleSweep {
         if (want("ivf_index_build_flat")) {
           val ivff = java.nio.file.Files.createTempDirectory(s"sweep-ivffl$c").toString
           record("ivf_index_build_flat", c) {
-            graft.sources.Layouts.ivfIndex(emb, ivff, centModulo = centMod,
+            graft.sources.Layouts.ivfIndex(emb, fresh(ivff), centModulo = centMod,
               twoLevel = Some(false)); nEmb
           }
           scala.reflect.io.Directory(new java.io.File(ivff)).deleteRecursively()

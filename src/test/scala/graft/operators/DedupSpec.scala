@@ -196,18 +196,19 @@ class DedupSpec extends AnyFunSuite with Matchers {
     val viaPath = Dedup.incrementalDedupStaged(shard, idx, "doc_id", "text", 0.5)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     // truth: the DF form WITH the matching parameters
+    val root = graft.sources.Layouts.indexRoot(idx)(spark)
     val viaDf = Dedup.incrementalDedupStaged(shard,
-      spark.read.parquet(s"$idx/fp"),
-      spark.read.parquet(s"$idx/banded"),
-      spark.read.parquet(s"$idx/shingles"),
+      spark.read.parquet(s"$root/fp"),
+      spark.read.parquet(s"$root/banded"),
+      spark.read.parquet(s"$root/shingles"),
       k = 32, bands = 16, shingleN = 2)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     viaPath shouldBe viaDf
     // a mismatched-parameter probe (the old silent failure) finds NO dups
     val mismatched = Dedup.incrementalDedupStaged(shard,
-      spark.read.parquet(s"$idx/fp"),
-      spark.read.parquet(s"$idx/banded"),
-      spark.read.parquet(s"$idx/shingles")) // defaults: k=16, bands=8, n=3
+      spark.read.parquet(s"$root/fp"),
+      spark.read.parquet(s"$root/banded"),
+      spark.read.parquet(s"$root/shingles")) // defaults: k=16, bands=8, n=3
       .collect().map(_.getString(1))
     mismatched.count(_ == "near_dup") shouldBe 0
   }
@@ -259,8 +260,9 @@ class DedupSpec extends AnyFunSuite with Matchers {
     // row-level pin, not probe-level: the probe ABSORBS duplicated index
     // rows (fp semi-join, candidate distinct), so only table row counts
     // can distinguish a replaced slice from a doubled one
+    val root = graft.sources.Layouts.indexRoot(idx)(spark)
     def counts() = Seq("fp", "banded", "shingles")
-      .map(tbl => tbl -> spark.read.parquet(s"$idx/$tbl").count()).toMap
+      .map(tbl => tbl -> spark.read.parquet(s"$root/$tbl").count()).toMap
     def probe() = Dedup.incrementalDedupStaged(g2, idx, "doc_id", "text", 0.5)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val (countsOnce, probeOnce) = (counts(), probe())
@@ -269,19 +271,14 @@ class DedupSpec extends AnyFunSuite with Matchers {
       groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("b1"))
     counts() shouldBe countsOnce
     probe() shouldBe probeOnce
-    // a replay-safe append on a pre-batch_id (flat) index must refuse: its
-    // layout has no slice to overwrite
+    // a hand-made pre-batch_id (flat, unmanaged) index must refuse: it
+    // has no manifest to resolve and no slice to overwrite
     val legacy = java.nio.file.Files.createTempDirectory("mh-legacyflat").toString
-    graft.sources.Layouts.minhashIndex(g0, legacy,
-      groupBytes = 256L * 1024, pageRows = 2000)
-    // strip the batch level back off fp to simulate the old generation
-    val flatFp = spark.read.parquet(s"$legacy/fp").select("fp")
-      .localCheckpoint()
-    flatFp.write.mode("overwrite").parquet(s"$legacy/fp")
+    spark.read.parquet(s"$root/fp").select("fp").write.parquet(s"$legacy/fp")
     intercept[IllegalArgumentException] {
       graft.sources.Layouts.minhashAppend(g1, legacy,
         groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("b1"))
-    }
+    }.getMessage should include(legacy)
   }
 
   test("minhashCompact: probe-invariant rebase, fewer files, fp deduplicated") {
@@ -303,23 +300,25 @@ class DedupSpec extends AnyFunSuite with Matchers {
       groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("b2"))
     def probe() = Dedup.incrementalDedupStaged(g2, idx, "doc_id", "text", 0.5)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def fp() = s"${graft.sources.Layouts.indexRoot(idx)(spark)}/fp"
     def files(tbl: String) = {
       import scala.jdk.CollectionConverters._
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$idx/$tbl"))
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(
+        s"${graft.sources.Layouts.indexRoot(idx)(spark)}/$tbl"))
       try w.iterator().asScala.count(p =>
         p.toString.endsWith(".parquet") &&
           java.nio.file.Files.isRegularFile(p))
       finally w.close()
     }
     val (probeBefore, fpFilesBefore) = (probe(), files("fp"))
-    val fpRowsBefore = spark.read.parquet(s"$idx/fp").count()
+    val fpRowsBefore = spark.read.parquet(fp()).count()
     graft.sources.Layouts.minhashCompact(idx,
       groupBytes = 256L * 1024, pageRows = 2000)(spark)
     probeBefore.size should be > 0
     probe() shouldBe probeBefore // the rebase is invisible to probes
     files("fp") should be < fpFilesBefore // generations merged
-    spark.read.parquet(s"$idx/fp").count() should be < fpRowsBefore // dup fps gone
+    spark.read.parquet(fp()).count() should be < fpRowsBefore // dup fps gone
     // compacted index keeps its batch dimension: future appends still work
-    spark.read.parquet(s"$idx/fp").columns should contain("batch_id")
+    spark.read.parquet(fp()).columns should contain("batch_id")
   }
 }

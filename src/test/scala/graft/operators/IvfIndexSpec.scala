@@ -17,6 +17,10 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
   private lazy val e =
     spark.read.parquet(s"${SparkTestSession.sf0001}/embeddings.parquet")
 
+  /** The index's current `assign` generation. */
+  private def assignAt(p: String): String =
+    s"${graft.sources.Layouts.indexRoot(p)(spark)}/assign"
+
   private lazy val indexDir: String = {
     val out = java.nio.file.Files.createTempDirectory("ivfspec").toString
     graft.sources.Layouts.ivfIndex(
@@ -36,7 +40,7 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
     val rebuilt = java.nio.file.Files.createTempDirectory("ivfrebuild").toString
     graft.sources.Layouts.ivfIndex(corpus, rebuilt, centModulo = 50,
       twoLevel = Some(false))
-    def cells(p: String) = spark.read.parquet(s"$p/assign")
+    def cells(p: String) = spark.read.parquet(assignAt(p))
       .select(col("cent_id").cast("long"), col("corpus_id"))
       .orderBy("cent_id", "corpus_id").collect().toSeq
     val ac = cells(appended)
@@ -57,7 +61,7 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
       corpus.where(col("vec_id") % 2 === 0), dir, centModulo = 50,
       twoLevel = Some(false))
     val odd = corpus.where(col("vec_id") % 2 === 1)
-    def cells() = spark.read.parquet(s"$dir/assign")
+    def cells() = spark.read.parquet(assignAt(dir))
       .select(col("cent_id").cast("long"), col("corpus_id"))
       .orderBy("cent_id", "corpus_id").collect().toSeq
     def probe() = SimilaritySearch
@@ -73,11 +77,10 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
     probe() shouldBe probeOnce
   }
 
-  test("legacy index generation: pre-two_level meta resolves flat, replay-safety refused") {
+  test("a hand-made unmanaged IVF dir is refused by every append") {
     // hand-built x144-era layout: no corpusn column, assign partitioned on
-    // cent_id only, meta carrying ONLY cent_modulo — the generation the
-    // schema-alignment fallbacks exist for (ADVICE r14: the meta read must
-    // not throw on it)
+    // cent_id only, meta carrying ONLY cent_modulo, and no manifest — no
+    // build of this library writes it, so no append may grow it
     val corpus = e.where(col("vec_id") >= 10)
     val dir = java.nio.file.Files.createTempDirectory("ivflegacy").toString
     corpus.where(col("vec_id") % 50 === 0)
@@ -92,24 +95,11 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
     import spark.implicits._
     Seq(50L).toDF("cent_modulo").coalesce(1).write.parquet(s"$dir/meta")
     val odd = corpus.where(col("vec_id") % 2 === 1)
-    // a replay-safe append is impossible on the flat layout — refuse loudly
-    intercept[IllegalArgumentException] {
-      graft.sources.Layouts.ivfAppend(odd, dir, batchId = Some("b1"))
+    Seq(Some("b1"), None).foreach { bid =>
+      intercept[IllegalArgumentException] {
+        graft.sources.Layouts.ivfAppend(odd, dir, batchId = bid)
+      }.getMessage should include(dir)
     }
-    // the plain append must work, resolve to the FLAT assignment (the only
-    // one that generation could have been built with), and keep the legacy
-    // schema — equivalence to a flat rebuild on (cent_id, corpus_id)
-    graft.sources.Layouts.ivfAppend(odd, dir)
-    spark.read.parquet(s"$dir/assign").columns should not contain "corpusn"
-    val rebuilt = java.nio.file.Files.createTempDirectory("ivflegacyrb").toString
-    graft.sources.Layouts.ivfIndex(corpus, rebuilt, centModulo = 50,
-      twoLevel = Some(false))
-    def cells(p: String) = spark.read.parquet(s"$p/assign")
-      .select(col("cent_id").cast("long"), col("corpus_id"))
-      .orderBy("cent_id", "corpus_id").collect().toSeq
-    val lc = cells(dir)
-    lc.length should be > 0
-    lc shouldBe cells(rebuilt)
   }
 
   test("dropBatch retracts exactly one batch; base generation refused") {
@@ -120,7 +110,7 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
       twoLevel = Some(false))
     graft.sources.Layouts.ivfAppend(corpus.where(col("vec_id") % 2 === 1), dir,
       batchId = Some("odd"))
-    def cells() = spark.read.parquet(s"$dir/assign")
+    def cells() = spark.read.parquet(assignAt(dir))
       .select(col("cent_id").cast("long"), col("corpus_id"))
       .orderBy("cent_id", "corpus_id").collect().toSeq
     val clean = cells()
@@ -147,14 +137,14 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
       twoLevel = Some(false))
     graft.sources.Layouts.ivfAppend(corpus.where(col("vec_id") % 2 === 1), dir,
       batchId = Some("odd"))
-    def cells() = spark.read.parquet(s"$dir/assign")
+    def cells() = spark.read.parquet(assignAt(dir))
       .select(col("cent_id").cast("long"), col("corpus_id"))
       .orderBy("cent_id", "corpus_id").collect().toSeq
     def probe() = SimilaritySearch
       .ivfTopKStaged(e.where(col("vec_id") < 10), dir, k = 5, nprobe = 2)
     def files() = {
       import scala.jdk.CollectionConverters._
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/assign"))
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(assignAt(dir)))
       try w.iterator().asScala.count(p =>
         p.toString.endsWith(".parquet") && java.nio.file.Files.isRegularFile(p))
       finally w.close()
@@ -172,7 +162,7 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"no dynamic partition pruning after compaction:\n$plan")
     // batch dimension preserved: future appends still slice
-    spark.read.parquet(s"$dir/assign").columns should contain("batch_id")
+    spark.read.parquet(assignAt(dir)).columns should contain("batch_id")
   }
 
   test("ivfAppend honors the index's TWO-LEVEL assignment form from meta") {
@@ -187,7 +177,7 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
       twoLevel = Some(true))
     // the two-level assignment is a pure function of (row, centroid
     // table), so append ≡ rebuild must hold on this branch too
-    def cells(p: String) = spark.read.parquet(s"$p/assign")
+    def cells(p: String) = spark.read.parquet(assignAt(p))
       .select(col("cent_id").cast("long"), col("corpus_id"))
       .orderBy("cent_id", "corpus_id").collect().toSeq
     val ac = cells(appended)
@@ -240,7 +230,7 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
     val meta = spark.read.parquet(s"$out/meta").collect()
     meta.map(_.getAs[Boolean]("two_level")).toList shouldBe List(true)
     // layout contract unchanged: every vector listed exactly once
-    val assign = spark.read.parquet(s"$out/assign")
+    val assign = spark.read.parquet(assignAt(out))
     assert(assign.count() == corpus.count())
   }
 
@@ -248,7 +238,7 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
     val out = java.nio.file.Files.createTempDirectory("ivfspec2l").toString
     val corpus = e.where(col("vec_id") >= 10)
     graft.sources.Layouts.ivfIndex(corpus, out, centModulo = 50, twoLevel = Some(true))
-    val assign = spark.read.parquet(s"$out/assign")
+    val assign = spark.read.parquet(assignAt(out))
     // every corpus vector exactly once, every cell id a real centroid
     assert(assign.count() == corpus.count())
     assert(assign.select("corpus_id").distinct().count() == corpus.count())

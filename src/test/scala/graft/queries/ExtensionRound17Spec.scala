@@ -123,7 +123,6 @@ class ExtensionRound17Spec extends AnyFunSuite with Matchers {
     val docs = spark.read.parquet(s"${simhashDocs()}/documents.parquet")
     val idx = java.nio.file.Files.createTempDirectory("mh-noprov").toString
     Layouts.minhashIndex(docs, idx, groupBytes = 256L * 1024, pageRows = 2000)
-    Layouts.manageMinhash(idx)
     intercept[IllegalArgumentException] {
       Layouts.minhashRetractFolded(idx, "g1")
     }
@@ -138,7 +137,6 @@ class ExtensionRound17Spec extends AnyFunSuite with Matchers {
       .where(org.apache.spark.sql.functions.col("vec_id") >= 10)
     val idx = java.nio.file.Files.createTempDirectory("ivf-noprov").toString
     Layouts.ivfIndex(emb, idx, centModulo = 50, twoLevel = Some(false))
-    Layouts.manageIvf(idx)
     intercept[IllegalArgumentException] {
       Layouts.ivfRetractFolded(idx, "g1")
     }
@@ -155,12 +153,11 @@ class ExtensionRound17Spec extends AnyFunSuite with Matchers {
     val rows = docs.selectExpr("doc_id", "doc_id % 7 AS k")
     // managed but provenance-less: the fold left no src_batch to filter
     val bare = java.nio.file.Files.createTempDirectory("rf-bare").toString
-    Layouts.sortedStats(rows, bare, Seq("k"), batchId = Some("base"))
-    Layouts.manageSortedTable(bare)
+    Layouts.sortedTable(rows, bare, Seq("k"))
     intercept[IllegalArgumentException] {
       Layouts.retractFolded(bare, "g1", Seq("k"))
     }
-    // flat (unmanaged): a folded batch is unrecoverable by id
+    // hand-made flat (unmanaged): no manifest to resolve — refused
     val flat = java.nio.file.Files.createTempDirectory("rf-flat").toString
     Layouts.sortedStats(rows, flat, Seq("k"), batchId = Some("base"))
     intercept[RuntimeException] {
@@ -295,7 +292,8 @@ class ExtensionRound17Spec extends AnyFunSuite with Matchers {
     val idx = java.nio.file.Files.createTempDirectory("bm25-guard").toString
     Layouts.bm25Index(docs, idx, groupBytes = 256L * 1024, pageRows = 2000)
     intercept[IllegalArgumentException] { Layouts.bm25Retract(idx, "base") }
-    // a pre-delta layout (no deltas table) refuses O(batch) maintenance
+    // a hand-made pre-delta layout (no deltas table, no manifests)
+    // refuses O(batch) maintenance
     val flat = java.nio.file.Files.createTempDirectory("bm25-flat").toString
     docs.selectExpr("'scan' AS term", "doc_id", "1L AS tf", "2L AS dl")
       .write.parquet(s"$flat/postings")
@@ -397,7 +395,7 @@ class ExtensionRound17Spec extends AnyFunSuite with Matchers {
     val idx = java.nio.file.Files.createTempDirectory("bm25-io").toString
     Layouts.bm25Index(docs, idx, groupBytes = 16L * 1024, pageRows = 200,
       partitions = 4)
-    val postings = s"$idx/postings"
+    val postings = Layouts.indexRoot(s"$idx/postings")
     def recordsFor(pred: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Long = {
       spark.sharedState.cacheManager.clearCache()
       val (_, rep) = IoMetrics.measure(spark, Seq(postings))(

@@ -41,7 +41,7 @@ class ExtensionRound18Spec extends AnyFunSuite with Matchers {
     val idx = java.nio.file.Files.createTempDirectory("bm25-delta").toString
     Layouts.bm25Index(spark.read.parquet(s"${writeDocs(base)}/documents.parquet"),
       idx, groupBytes = 256L * 1024, pageRows = 2000)
-    val deltas = spark.read.parquet(s"$idx/deltas")
+    val deltas = spark.read.parquet(Layouts.indexRoot(s"$idx/deltas"))
     // df rows: scan 2, merge 1, vector 1 (term non-null, n/total null)
     deltas.where(col("term").isNotNull)
       .select("term", "df").collect()
@@ -57,7 +57,7 @@ class ExtensionRound18Spec extends AnyFunSuite with Matchers {
       Seq((3L, "merge vector other", "en", "s0", 18L))
         .toDF("doc_id", "text", "lang", "source", "n_chars"),
       idx, groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
-    val merged = spark.read.parquet(s"$idx/deltas")
+    val merged = spark.read.parquet(Layouts.indexRoot(s"$idx/deltas"))
     merged.where(col("term").isNotNull)
       .groupBy("term").agg(org.apache.spark.sql.functions.sum("df").as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe
@@ -98,11 +98,12 @@ class ExtensionRound18Spec extends AnyFunSuite with Matchers {
     before.foreach { case (rel, size) =>
       withClue(rel) { after.get(rel) shouldBe Some(size) }
     }
-    // the growth is exactly the batch's three slices, one data file each
+    // the growth is exactly the batch's three slices (in each table's
+    // current generation), one data file each
     val fresh = after.keySet -- before.keySet
     Seq("postings", "deltas", "champions").foreach { t =>
       withClue(t) {
-        fresh.count(f => f.startsWith(s"$t/batch_id=g1")
+        fresh.count(f => f.startsWith(s"$t/g=000000000/batch_id=g1")
           && f.endsWith(".parquet")) shouldBe 1
       }
     }
@@ -234,7 +235,6 @@ class ExtensionRound18Spec extends AnyFunSuite with Matchers {
     val idx = java.nio.file.Files.createTempDirectory("bm25-refold").toString
     Layouts.bm25Index(spark.read.parquet(s"${writeDocs(base)}/documents.parquet"),
       idx, groupBytes = 256L * 1024, pageRows = 2000)
-    Layouts.manageBm25(idx)
     val batch = Seq((9L, "merge fresh", "en", "s0", 11L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     Layouts.bm25Append(batch, idx,
@@ -260,7 +260,6 @@ class ExtensionRound18Spec extends AnyFunSuite with Matchers {
     val idx = java.nio.file.Files.createTempDirectory("bm25-life").toString
     Layouts.bm25Index(part(0), idx,
       groupBytes = 256L * 1024, pageRows = 2000)
-    Layouts.manageBm25(idx)
     Layouts.bm25Append(part(1), idx,
       groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
     Layouts.bm25Append(part(2), idx,

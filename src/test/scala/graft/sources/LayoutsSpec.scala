@@ -72,9 +72,10 @@ class LayoutsSpec extends AnyFunSuite with Matchers {
     val dir = java.nio.file.Files.createTempDirectory("layout-posting").toString
     Layouts.postingIndex(docs, dir, groupBytes = 16 * 1024, pageRows = 500,
       partitions = 2)
+    val root = Layouts.indexRoot(dir)(spark)
 
     // the index is term-sorted, so a single-trigram probe keeps a sliver
-    val rg = BytePlanner.plan(dir, Seq("doc_id", "tri"), Some("tri == tab"))
+    val rg = BytePlanner.plan(root, Seq("doc_id", "tri"), Some("tri == tab"))
     rg.rowGroups should be > 2
     rg.survivingGroups should be < rg.rowGroups
     rg.survivingGroups should be > 0
@@ -82,7 +83,7 @@ class LayoutsSpec extends AnyFunSuite with Matchers {
     // the probe plan reads the index parquet only: no `text` column exists
     // in it to scan — the corpus is touched later, and only for candidates
     // (batch_id is the r15 maintenance partition level, not payload)
-    val posting = spark.read.parquet(dir)
+    val posting = spark.read.parquet(root)
     posting.columns.toSeq should contain theSameElementsAs Seq("doc_id", "tri", "batch_id")
 
     // probing the persisted index reproduces the inline x87 candidate set
@@ -112,7 +113,8 @@ class LayoutsSpec extends AnyFunSuite with Matchers {
     Layouts.postingIndex(even, grown, groupBytes = 256L * 1024, pageRows = 2000)
     Layouts.postingAppend(odd, grown,
       groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("odd"))
-    def rows(p: String) = spark.read.parquet(p).select("doc_id", "tri")
+    def root(p: String) = Layouts.indexRoot(p)(spark)
+    def rows(p: String) = spark.read.parquet(root(p)).select("doc_id", "tri")
       .orderBy("doc_id", "tri").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val rebuilt = java.nio.file.Files.createTempDirectory("posting-rebuild").toString
     Layouts.postingIndex(docs, rebuilt, groupBytes = 256L * 1024, pageRows = 2000)
@@ -128,14 +130,14 @@ class LayoutsSpec extends AnyFunSuite with Matchers {
     Layouts.sortedRebase(grown, Seq("tri"),
       groupBytes = 16 * 1024, pageRows = 500)(spark)
     rows(grown) shouldBe grownRows
-    spark.read.parquet(grown).select("batch_id").distinct()
+    spark.read.parquet(root(grown)).select("batch_id").distinct()
       .collect().map(_.getString(0)).toSeq shouldBe Seq("base")
-    val rg = BytePlanner.plan(grown, Seq("doc_id", "tri"), Some("tri == tab"))
+    val rg = BytePlanner.plan(root(grown), Seq("doc_id", "tri"), Some("tri == tab"))
     rg.rowGroups should be > 2
     rg.survivingGroups should be < rg.rowGroups
-    // legacy flat index refuses a replay-safe append
+    // a hand-made flat (unmanaged) index refuses a replay-safe append
     val legacy = java.nio.file.Files.createTempDirectory("posting-legacy").toString
-    spark.read.parquet(grown).select("doc_id", "tri")
+    spark.read.parquet(root(grown)).select("doc_id", "tri")
       .write.mode("overwrite").parquet(legacy)
     intercept[IllegalArgumentException] {
       Layouts.postingAppend(odd, legacy, batchId = Some("b"))

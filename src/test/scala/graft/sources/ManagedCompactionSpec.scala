@@ -5,11 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.SparkTestSession
 
-/** The manifest-generation MinHash layout (VERDICT r15 #5): compaction as
-  * an immutable-generation publish instead of a directory-rename swap, so
-  * a LIVE admit loop and a compact can run concurrently — the quiesced-
-  * index constraint the rename swap carried (ddcc9ae) is closed for
-  * managed indexes.
+/** The manifest-generation index layout (VERDICT r15 #5), the only
+  * layout every lifecycle index family has: index builds publish generation
+  * 0 under a manifest, and compaction is an immutable-generation publish,
+  * so a LIVE admit loop and a compact can run concurrently.
   */
 class ManagedCompactionSpec extends AnyFunSuite with Matchers {
   private def spark = SparkTestSession.spark
@@ -17,11 +16,9 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     .parquet(s"${SparkTestSession.sf0001}/documents.parquet")
 
   private def freshManagedIndex(): String = {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
     val idx = java.nio.file.Files.createTempDirectory("mgd-idx").toString
     Layouts.minhashIndex(docs.where(col("doc_id") % 4 === 0), idx,
       groupBytes = 256L * 1024, pageRows = 2000)
-    Layouts.manageMinhash(idx)
     idx
   }
 
@@ -29,23 +26,6 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     .incrementalDedupStaged(docs.where(col("doc_id") % 4 === mod),
       idx, "doc_id", "text", 0.5)
     .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-
-  test("manageMinhash migration is probe-invariant and idempotent") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val idx = java.nio.file.Files.createTempDirectory("mig-idx").toString
-    Layouts.minhashIndex(docs.where(col("doc_id") % 4 === 0), idx,
-      groupBytes = 256L * 1024, pageRows = 2000)
-    val before = probe(idx, 1)
-    Layouts.manageMinhash(idx)
-    val (v, root) = Layouts.currentGeneration(
-      idx, spark.sparkContext.hadoopConfiguration).get
-    v shouldBe 0L
-    root should endWith("g=000000000")
-    probe(idx, 1) shouldBe before
-    Layouts.manageMinhash(idx) // second call: no-op, still v0
-    Layouts.currentGeneration(
-      idx, spark.sparkContext.hadoopConfiguration).get._1 shouldBe 0L
-  }
 
   test("managed compact folds committed slices, keeps the stream tail live, " +
       "and is probe-invariant") {
@@ -65,7 +45,7 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
       t -> spark.read.parquet(s"${Layouts.indexRoot(idx)}/$t")
         .drop("batch_id").distinct().count()).toMap
     Layouts.minhashCompact(idx, groupBytes = 256L * 1024, pageRows = 2000)
-    val (v, root) = Layouts.currentGeneration(idx, conf).get
+    val (v, root) = Layouts.currentGeneration(idx, conf)
     v shouldBe 1L
     // base + the live stream tail only; rel2 and s1-b0 folded into base
     val slices = spark.read.parquet(s"$root/banded")
@@ -81,7 +61,7 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     fs.exists(new org.apache.hadoop.fs.Path(s"$idx/g=000000000")) shouldBe true
     // ... and retired by the NEXT compact
     Layouts.minhashCompact(idx, groupBytes = 256L * 1024, pageRows = 2000)
-    Layouts.currentGeneration(idx, conf).get._1 shouldBe 2L
+    Layouts.currentGeneration(idx, conf)._1 shouldBe 2L
     fs.exists(new org.apache.hadoop.fs.Path(s"$idx/g=000000000")) shouldBe false
     fs.exists(new org.apache.hadoop.fs.Path(s"$idx/g=000000001")) shouldBe true
   }
@@ -125,7 +105,6 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     val idx = java.nio.file.Files.createTempDirectory("mgd-ivf").toString
     Layouts.ivfIndex(emb.where(col("vec_id") % 2 === 0), idx,
       centModulo = 50, twoLevel = Some(false))
-    Layouts.manageIvf(idx)
     val odd = emb.where(col("vec_id") % 2 === 1)
     Layouts.ivfAppend(odd, idx, batchId = Some("s1-b0"))
     val queries = spark.read
@@ -141,7 +120,7 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     val (p1, rows1) = (topk(), assignRows())
     p1 should not be empty
     Layouts.ivfCompact(idx)
-    Layouts.currentGeneration(idx, conf).get._1 shouldBe 1L
+    Layouts.currentGeneration(idx, conf)._1 shouldBe 1L
     // stream-shaped batch stays live through the fold; "base" absorbed
     // the build generation
     spark.read.parquet(s"${Layouts.indexRoot(idx)}/assign")
@@ -154,25 +133,6 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     Layouts.ivfAppend(odd, idx, batchId = Some("s1-b0"))
     topk() shouldBe p1
     assignRows() shouldBe rows1
-  }
-
-  test("legacy crashed swap self-heals on the next compact") {
-    // simulate a process death between swapIn's two renames: the table
-    // is stranded at .__old and the canonical path is missing. The next
-    // compact must restore it BEFORE its own read (review r16: recovery
-    // placed only inside swapIn sat behind the caller's read and was
-    // unreachable).
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val idx = java.nio.file.Files.createTempDirectory("crash-idx").toString
-    Layouts.minhashIndex(docs.where(col("doc_id") % 4 === 0), idx,
-      groupBytes = 256L * 1024, pageRows = 2000)
-    val before = probe(idx, 1)
-    val fp = java.nio.file.Paths.get(s"$idx/fp")
-    java.nio.file.Files.move(fp, java.nio.file.Paths.get(s"$idx/fp.__old"))
-    java.nio.file.Files.exists(fp) shouldBe false
-    Layouts.minhashCompact(idx, groupBytes = 256L * 1024, pageRows = 2000)
-    java.nio.file.Files.exists(fp) shouldBe true
-    probe(idx, 1) shouldBe before
   }
 
   test("managed compact records its fold set for the writer fix-up") {
@@ -259,20 +219,15 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     }
     Layouts.postingIndex(docs.where(col("doc_id") % 2 === 0), idx,
       groupBytes = 256L * 1024, pageRows = 2000)
-    val flat = hits()
-    flat should not be empty
-    // migration: probe-invariant, idempotent
-    Layouts.managePosting(idx)
-    Layouts.currentGeneration(idx, conf).get._1 shouldBe 0L
-    hits() shouldBe flat
-    Layouts.managePosting(idx)
-    Layouts.currentGeneration(idx, conf).get._1 shouldBe 0L
+    val base = hits()
+    base should not be empty
+    Layouts.currentGeneration(idx, conf)._1 shouldBe 0L
     // append lands SEALED in the current generation and changes the hits
     val odd = docs.where(col("doc_id") % 2 === 1)
     Layouts.postingAppend(odd, idx,
       groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("odd"))
     val grown = hits()
-    grown should not equal flat
+    grown should not equal base
     val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(conf)
     fs.exists(new org.apache.hadoop.fs.Path(
       s"${Layouts.indexRoot(idx)}/batch_id=odd/_SEALED")) shouldBe true
@@ -287,7 +242,7 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     // rebase: folds everything into one base slice of a NEW generation
     Layouts.sortedRebase(idx, Seq("tri"),
       groupBytes = 256L * 1024, pageRows = 2000)
-    val (v1, root1) = Layouts.currentGeneration(idx, conf).get
+    val (v1, root1) = Layouts.currentGeneration(idx, conf)
     v1 shouldBe 1L
     spark.read.parquet(root1).select("batch_id").distinct()
       .collect().map(_.getString(0)).toSet shouldBe Set("base")
@@ -298,69 +253,10 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     fs.exists(new org.apache.hadoop.fs.Path(s"$idx/g=000000000")) shouldBe true
     Layouts.sortedRebase(idx, Seq("tri"),
       groupBytes = 256L * 1024, pageRows = 2000)
-    Layouts.currentGeneration(idx, conf).get._1 shouldBe 2L
+    Layouts.currentGeneration(idx, conf)._1 shouldBe 2L
     fs.exists(new org.apache.hadoop.fs.Path(s"$idx/g=000000000")) shouldBe false
     fs.exists(new org.apache.hadoop.fs.Path(s"$idx/g=000000001")) shouldBe true
     hits() shouldBe grown
-  }
-
-  test("slices appended on the FLAT layout survive migration + first " +
-      "managed compact (migration seals them)") {
-    // flat-layout appends never seal (_SEALED belongs to the managed
-    // protocol), and the managed fold absorbs only sealed slices — so
-    // the migration itself must seal what it moves, or pre-migration
-    // batches vanish from the first compact's generation (ADVICE r16).
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val conf = spark.sparkContext.hadoopConfiguration
-
-    // -- minhash trio
-    val idx = java.nio.file.Files.createTempDirectory("mig-seal").toString
-    Layouts.minhashIndex(docs.where(col("doc_id") % 4 === 0), idx,
-      groupBytes = 256L * 1024, pageRows = 2000)
-    Layouts.minhashAppend(docs.where(col("doc_id") % 4 === 1), idx,
-      groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("flatb"))
-    val before = probe(idx, 2)
-    val rowsBefore = spark.read.parquet(s"$idx/banded")
-      .drop("batch_id").distinct().count()
-    Layouts.manageMinhash(idx)
-    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(conf)
-    fs.exists(new org.apache.hadoop.fs.Path(
-      s"${Layouts.indexRoot(idx)}/banded/batch_id=flatb/_SEALED")) shouldBe true
-    Layouts.minhashCompact(idx, groupBytes = 256L * 1024, pageRows = 2000)
-    // flatb folded into base — its rows must still be there
-    spark.read.parquet(s"${Layouts.indexRoot(idx)}/banded")
-      .drop("batch_id").distinct().count() shouldBe rowsBefore
-    probe(idx, 2) shouldBe before
-
-    // -- posting table
-    val pidx = java.nio.file.Files.createTempDirectory("mig-seal-p").toString
-    Layouts.postingIndex(docs.where(col("doc_id") % 2 === 0), pidx,
-      groupBytes = 256L * 1024, pageRows = 2000)
-    Layouts.postingAppend(docs.where(col("doc_id") % 2 === 1), pidx,
-      groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("flatp"))
-    val pRows = spark.read.parquet(pidx).drop("batch_id").count()
-    Layouts.managePosting(pidx)
-    Layouts.sortedRebase(pidx, Seq("tri"),
-      groupBytes = 256L * 1024, pageRows = 2000)
-    spark.read.parquet(Layouts.indexRoot(pidx))
-      .drop("batch_id").count() shouldBe pRows
-
-    // -- IVF assign tree
-    val emb = spark.read
-      .parquet(s"${SparkTestSession.sf0001}/embeddings.parquet")
-      .where(col("vec_id") >= 10)
-    val vidx = java.nio.file.Files.createTempDirectory("mig-seal-v").toString
-    Layouts.ivfIndex(emb.where(col("vec_id") % 2 === 0), vidx,
-      centModulo = 50, twoLevel = Some(false))
-    Layouts.ivfAppend(emb.where(col("vec_id") % 2 === 1), vidx,
-      batchId = Some("flatv"))
-    val vRows = spark.read.parquet(s"$vidx/assign")
-      .select("corpus_id").collect().map(_.getLong(0)).sorted.toSeq
-    Layouts.manageIvf(vidx)
-    Layouts.ivfCompact(vidx)
-    spark.read.parquet(s"${Layouts.indexRoot(vidx)}/assign")
-      .select("corpus_id").collect()
-      .map(_.getLong(0)).sorted.toSeq shouldBe vRows
   }
 
   test("managed BM25: appends land sealed across a CONCURRENT aggregating " +
@@ -378,7 +274,6 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
       val idx = java.nio.file.Files.createTempDirectory("mgd-bm25").toString
       Layouts.bm25Index(docs.where(col("doc_id") % 4 === 0), idx,
         groupBytes = 256L * 1024, pageRows = 2000)
-      Layouts.manageBm25(idx)
       Layouts.bm25Append(docs.where(col("doc_id") % 4 === 1), idx,
         groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("r1-b0"))
       val compact = if (compactDuring) Some(Future {
@@ -398,26 +293,119 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     run(compactDuring = true) shouldBe control
   }
 
-  test("managePosting finishes a crashed predecessor's publish") {
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def emb = spark.read
+    .parquet(s"${SparkTestSession.sf0001}/embeddings.parquet")
+
+  test("every lifecycle index build is born managed: v0 published, tables at g=000000000") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val conf = spark.sparkContext.hadoopConfiguration
-    val idx = java.nio.file.Files.createTempDirectory("mgd-crash").toString
-    Layouts.postingIndex(docs.where(col("doc_id") % 4 === 0), idx,
+    val few = docs.where(col("doc_id") % 8 === 0)
+    val (post, pos, bm, mh, ivf, tbl) =
+      (tmp("born-post"), tmp("born-pos"), tmp("born-bm25"), tmp("born-mh"),
+        tmp("born-ivf"), tmp("born-tbl"))
+    Layouts.postingIndex(few, post, groupBytes = 256L * 1024, pageRows = 2000)
+    Layouts.positionalIndex(few, pos, groupBytes = 256L * 1024, pageRows = 2000)
+    Layouts.bm25Index(few, bm, groupBytes = 256L * 1024, pageRows = 2000)
+    Layouts.minhashIndex(few, mh, groupBytes = 256L * 1024, pageRows = 2000)
+    Layouts.ivfIndex(emb.where(col("vec_id") >= 10), ivf, centModulo = 50)
+    Layouts.sortedTable(few.select("doc_id", "source"), tbl, Seq("doc_id"),
+      provenance = true)
+    val tables = Seq(post, pos, mh, ivf, tbl) ++
+      Seq("postings", "deltas", "champions").map(t => s"$bm/$t")
+    tables.foreach { t =>
+      Layouts.currentGeneration(t, conf) shouldBe (0L -> s"$t/g=000000000")
+      Layouts.indexRoot(t) shouldBe s"$t/g=000000000"
+    }
+    Layouts.manageBm25(bm) // every table resolves: a no-op check
+    // parameter identity stays at the index path
+    Seq(bm, mh, ivf).foreach(p =>
+      new java.io.File(s"$p/meta").isDirectory shouldBe true)
+    new java.io.File(s"$ivf/cent").isDirectory shouldBe true
+    spark.read.parquet(Layouts.indexRoot(tbl)).columns should contain("src_batch")
+    spark.read.parquet(Layouts.indexRoot(post)).count() should be > 0L
+  }
+
+  test("a build that crashed before its publish: indexRoot throws, the re-run " +
+      "clears the unpublished generation and publishes") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val idx = tmp("crash-build")
+    Layouts.postingIndex(docs.where(col("doc_id") % 2 === 0), idx,
       groupBytes = 256L * 1024, pageRows = 2000)
-    val before = spark.read.parquet(idx).count()
-    // simulate the crash window: slices already moved into g=000000000,
-    // manifest never published
-    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(conf)
-    val gen = new org.apache.hadoop.fs.Path(s"$idx/g=000000000")
-    fs.mkdirs(gen)
-    fs.listStatus(new org.apache.hadoop.fs.Path(idx)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-      .foreach(st => assert(fs.rename(st.getPath,
-        new org.apache.hadoop.fs.Path(gen, st.getPath.getName))))
-    Layouts.currentGeneration(idx, conf) shouldBe None
-    // the re-run must finish the publish, not demand a rebuild
-    Layouts.managePosting(idx)
-    Layouts.currentGeneration(idx, conf).get._1 shouldBe 0L
-    spark.read.parquet(Layouts.indexRoot(idx)).count() shouldBe before
+    // the disk state of a crash between the gen-0 write and the publish
+    scala.reflect.io.Directory(new java.io.File(s"$idx/_manifest"))
+      .deleteRecursively() shouldBe true
+    new java.io.File(s"$idx/g=000000000").isDirectory shouldBe true
+    val e = intercept[IllegalArgumentException](Layouts.indexRoot(idx))
+    e.getMessage should include(idx)
+    // the re-run (over a different row set) must not keep the debris
+    val quarter = docs.where(col("doc_id") % 4 === 0)
+    Layouts.postingIndex(quarter, idx, groupBytes = 256L * 1024, pageRows = 2000)
+    Layouts.currentGeneration(idx, spark.sparkContext.hadoopConfiguration)._1 shouldBe 0L
+    val rebuilt = tmp("crash-ref")
+    Layouts.postingIndex(quarter, rebuilt, groupBytes = 256L * 1024, pageRows = 2000)
+    def rows(p: String) = spark.read.parquet(Layouts.indexRoot(p))
+      .select("doc_id", "tri").orderBy("doc_id", "tri").collect().toSeq
+    rows(idx) shouldBe rows(rebuilt)
+  }
+
+  test("a build into a path that already holds a published index is refused") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val conf = spark.sparkContext.hadoopConfiguration
+    // IVF: rewriting cent over the published lists would pair new
+    // centroids with the old generation's cells
+    val ivf = tmp("refuse-ivf")
+    val e0 = emb.where(col("vec_id") >= 10)
+    Layouts.ivfIndex(e0, ivf, centModulo = 50, twoLevel = Some(false))
+    val cents = spark.read.parquet(s"$ivf/cent").collect().toSet
+    val e1 = intercept[IllegalArgumentException] {
+      Layouts.ivfIndex(e0, ivf, centModulo = 25, twoLevel = Some(false))
+    }
+    e1.getMessage should (include(ivf) and include("new path"))
+    spark.read.parquet(s"$ivf/cent").collect().toSet shouldBe cents
+    Layouts.currentGeneration(ivf, conf)._1 shouldBe 0L
+    // MinHash: the rebuild would have rewritten only the table dirs while
+    // indexRoot kept resolving the old generation
+    val mh = freshManagedIndex()
+    val e2 = intercept[IllegalArgumentException] {
+      Layouts.minhashIndex(docs, mh, groupBytes = 256L * 1024, pageRows = 2000)
+    }
+    e2.getMessage should include(mh)
+    // BM25: any published table refuses the whole build
+    val bm = tmp("refuse-bm25")
+    Layouts.bm25Index(docs.where(col("doc_id") % 8 === 0), bm,
+      groupBytes = 256L * 1024, pageRows = 2000)
+    intercept[IllegalArgumentException] {
+      Layouts.bm25Index(docs, bm, groupBytes = 256L * 1024, pageRows = 2000)
+    }.getMessage should include(bm)
+  }
+
+  test("append, compact, retract and dropBatch refuse a directory without a " +
+      "manifest, naming it") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    // hand-made dirs: the right table names and columns, no manifest
+    val few = docs.where(col("doc_id") % 8 === 0)
+    val dir = tmp("unmanaged")
+    few.select("doc_id").withColumn("batch_id", lit("base"))
+      .write.partitionBy("batch_id").parquet(s"$dir/fp")
+    few.select("doc_id").write.parquet(s"$dir/postings")
+    def refused(what: String)(call: => Any): Unit =
+      withClue(what) {
+        intercept[IllegalArgumentException](call).getMessage should include(dir)
+      }
+    refused("postingAppend")(Layouts.postingAppend(few, dir, batchId = Some("b")))
+    refused("sortedRebase")(Layouts.sortedRebase(dir, Seq("tri")))
+    refused("retractFolded")(Layouts.retractFolded(dir, "b", Seq("tri")))
+    refused("minhashAppend")(Layouts.minhashAppend(few, dir, batchId = Some("b")))
+    refused("minhashCompact")(Layouts.minhashCompact(dir))
+    refused("ivfAppend")(Layouts.ivfAppend(emb, dir, batchId = Some("b")))
+    refused("ivfCompact")(Layouts.ivfCompact(dir))
+    refused("bm25Append")(Layouts.bm25Append(few, dir, batchId = Some("b")))
+    refused("bm25Compact")(Layouts.bm25Compact(dir))
+    refused("manageBm25")(Layouts.manageBm25(dir))
+    refused("bm25Retract")(Layouts.bm25Retract(dir, "b"))
+    refused("dropBatch")(Layouts.dropBatch(dir, "b"))
+    refused("indexRoot")(Layouts.indexRoot(dir))
   }
 }

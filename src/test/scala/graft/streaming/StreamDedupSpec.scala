@@ -235,7 +235,8 @@ class StreamDedupSpec extends AnyFunSuite with Matchers {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
       .sorted.toSeq
     def idxCounts() = Seq("fp", "banded", "shingles")
-      .map(t => t -> spark.read.parquet(s"$idx/$t").count()).toMap
+      .map(t => t -> spark.read.parquet(
+        s"${graft.sources.Layouts.indexRoot(idx)(spark)}/$t").count()).toMap
     def probeG2() = graft.operators.Dedup.incrementalDedupStaged(
       docs.where(col("doc_id") % 3 === 2).limit(80), idx, "doc_id", "text", 0.5)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
