@@ -5,10 +5,14 @@ import graft.functions.Predicates._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 
 import scala.jdk.CollectionConverters._
 
@@ -26,14 +30,21 @@ import scala.jdk.CollectionConverters._
   * "bytes read / selectivity" headline numbers.
   */
 object BytePlanner {
+  import RangedReader.ByteRange
 
+  /** One file's planned scan. `ranges` are the byte ranges a pruned scan
+    * reads, in file order and not yet coalesced: every surviving chunk of
+    * a wanted column, then the footer (length word + magic included, S1).
+    */
   final case class FilePlan(
       path: String,
       fileBytes: Long,
       footerBytes: Long,
       rowGroups: Int,
       survivingGroups: Int,
-      plannedBytes: Long)
+      ranges: Seq[ByteRange]) {
+    def plannedBytes: Long = ranges.map(_.length).sum
+  }
 
   final case class Plan(files: Seq[FilePlan]) {
     def totalBytes: Long = files.map(_.fileBytes).sum
@@ -45,7 +56,9 @@ object BytePlanner {
   }
 
   /** Plan a scan of `columns` (empty ⇒ all) under the reference-grammar
-    * `predicate` over one parquet file or a directory of them.
+    * `predicate` over one parquet file or a directory of them. Footers
+    * come from [[footers]]: a file's footer is parsed once per file
+    * version, and a warm plan opens no file.
     * `floatEpsilonEq` opts into v1's F6 behavior
     * (v1/src/main.rs:711-756): the NEGATED float Equal prunes a group
     * when min and max are both within machine epsilon of the literal —
@@ -63,7 +76,8 @@ object BytePlanner {
     * UTF-8 decode, trailing-NUL trim). The truncated max UNDERESTIMATES
     * the true max, so `>`/`>=`/`==` against a literal sharing the
     * 8-byte prefix can wrongly prune a group that contains matches.
-    * Like F6 this is a reference-exact ablation, never the default.
+    * Like F6 this is a reference-exact ablation, never the default; the
+    * cache keeps the exact bounds and truncates when comparing.
     */
   def plan(
       path: String,
@@ -72,15 +86,18 @@ object BytePlanner {
       floatEpsilonEq: Boolean = false,
       truncStringStats: Int = 0): Plan = {
     val expr = predicate.map(Predicates.parse)
-    val files = listParquet(new java.io.File(path))
-    Plan(files.map(planFile(_, columns, expr, floatEpsilonEq, truncStringStats)))
+    lazy val conf = new Configuration() // made on the first miss, shared by the rest
+    Plan(listParquet(new java.io.File(path)).map { file =>
+      val (v, footer) = footers.get(file, conf)
+      filePlan(file, v.size, footer, columns, g => expr.forall(e =>
+        keepRowGroup(e, footer.stats(g), not = false, floatEpsilonEq, truncStringStats)))
+    })
   }
 
-  // shared with RangedReader.run and tools.V2Runner so the planner and
-  // its executable analogs can never disagree about which files a path
-  // means (review r15: the recursion below would otherwise have left
-  // them flat-listing a batch-partitioned index to an empty file set)
-  private[graft] def listParquet(f: java.io.File): Seq[String] =
+  // the one listing behind every planner entry point, which RangedReader
+  // and tools.V2Runner reach through `plan`, so they can never disagree
+  // about which files a path means
+  private[metrics] def listParquet(f: java.io.File): Seq[String] =
     if (f.isDirectory)
       // recursive: partition-directory layouts (hivePartitioned tables,
       // the batch_id-sliced index generations of round 15) keep their
@@ -93,32 +110,23 @@ object BytePlanner {
       }.sorted
     else Seq(f.getPath)
 
-  private def planFile(
+  /** The surviving chunks of the wanted columns plus the footer, for the
+    * row groups `keep` accepts.
+    */
+  private def filePlan(
       file: String,
+      fileBytes: Long,
+      footer: Footer,
       columns: Seq[String],
-      expr: Option[Expr],
-      epsEq: Boolean = false,
-      truncStr: Int = 0): FilePlan = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), new Configuration()))
-    try {
-      val footer = reader.getFooter
-      val blocks = footer.getBlocks.asScala.toSeq
-      val footerBytes = readFooterLength(file) + 8L // footer + length word + magic (S1)
-      val surviving = blocks.filter { b =>
-        val stats = b.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
-        expr.forall(e => keepRowGroup(e, stats, not = false, epsEq, truncStr))
-      }
-      val wanted: ColumnChunkMetaData => Boolean =
-        if (columns.isEmpty) _ => true
-        else c => columns.contains(c.getPath.toDotString)
-      val planned = surviving
-        .flatMap(_.getColumns.asScala.filter(wanted))
-        .map(_.getTotalSize)
-        .sum + footerBytes
-      FilePlan(file, new java.io.File(file).length(), footerBytes,
-        blocks.size, surviving.size, planned)
-    } finally reader.close()
+      keep: Int => Boolean): FilePlan = {
+    val wanted = footer.columns.indices
+      .filter(c => columns.isEmpty || columns.contains(footer.columns(c)))
+    val surviving = footer.groups.indices.filter(keep)
+    val chunks = for (g <- surviving; c <- wanted; ch = footer.groups(g)(c))
+      yield ByteRange(ch.start, ch.size)
+    val footerBytes = footer.footerLen + 8L
+    FilePlan(file, fileBytes, footerBytes, footer.groups.size, surviving.size,
+      chunks :+ ByteRange(fileBytes - footerBytes, footerBytes))
   }
 
   /** Trailer parse, byte-for-byte what the reference does (S1,
@@ -136,6 +144,133 @@ object BytePlanner {
     } finally raf.close()
   }
 
+  // ---- the footer-stats cache (the reference loads every footer into a
+  // compact stats cache before its query loop, v2/src/main.rs:225-398)
+
+  /** A file as of one write: a rewrite or replacement changes its size,
+    * its mtime or its file key (the inode on Linux).
+    */
+  private[graft] final case class FileVersion(path: String, size: Long, mtime: FileTime, key: AnyRef)
+
+  private[graft] def version(file: String): FileVersion = {
+    val a = Files.readAttributes(Paths.get(file), classOf[BasicFileAttributes])
+    FileVersion(file, a.size, a.lastModifiedTime, a.fileKey)
+  }
+
+  /** One column chunk as cached: its byte range, its column's type and
+    * its exact min/max (both null when the chunk has no usable stats).
+    */
+  private[metrics] final case class Chunk(start: Long, size: Long, tpe: PrimitiveType, min: Any, max: Any)
+
+  /** One file's footer as cached: the footer length, the column paths in
+    * schema order, and `groups(g)(c)`, row group g's chunk of column c.
+    */
+  private[metrics] final case class Footer(
+      footerLen: Long,
+      columns: IndexedSeq[String],
+      groups: IndexedSeq[IndexedSeq[Chunk]]) {
+    private lazy val ordinal = columns.zipWithIndex.toMap
+    def stats(g: Int): String => Option[Chunk] = c => ordinal.get(c).map(groups(g)(_))
+
+    /** Heap estimate: per column its path and map entry, per chunk the
+      * object, two boxed bounds and its array slot, plus BINARY bounds.
+      */
+    def estBytes: Long = 256L + columns.map(64L + 2L * _.length).sum +
+      groups.map(_.map(ch => 80L + (ch.min match {
+        case b: Binary => 2L * (b.length + 40)
+        case _ => 0L
+      })).sum).sum
+  }
+
+  private[metrics] object Footer {
+    def of(meta: ParquetMetadata, footerLen: Long): Footer = {
+      val blocks = meta.getBlocks.asScala.toIndexedSeq
+      def exact(a: Any): Any = a match {
+        case b: Binary => Binary.fromConstantByteArray(b.getBytes) // own, exact-length copy
+        case x => x
+      }
+      Footer(footerLen,
+        blocks.headOption.toIndexedSeq.flatMap(_.getColumns.asScala.map(_.getPath.toDotString)),
+        blocks.map(_.getColumns.asScala.toIndexedSeq.map { c =>
+          val s: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
+          val has = s != null && s.hasNonNullValue
+          Chunk(c.getStartingPos, c.getTotalSize, c.getPrimitiveType,
+            if (has) exact(s.genericGetMin) else null, if (has) exact(s.genericGetMax) else null)
+        }))
+    }
+  }
+
+  /** Driver-side footer cache, keyed by path. Every lookup stats the file
+    * and compares its [[FileVersion]], so a rewritten or replaced file
+    * misses and no plan is made from a stale footer. Bounded by the
+    * entries' estimated bytes; least recently used entries go first.
+    * Thread-safe: concurrent misses on one file may both parse it.
+    */
+  private[metrics] final class FooterCache(maxBytes: Long) {
+    private val entries = new java.util.LinkedHashMap[String, (FileVersion, Footer)](16, 0.75f, true)
+    private var bytes = 0L
+    private val missCount = new java.util.concurrent.atomic.AtomicLong
+
+    def get(file: String, conf: => Configuration): (FileVersion, Footer) = {
+      val v = version(file)
+      synchronized(Option(entries.get(file))).filter(_._1 == v).getOrElse {
+        missCount.incrementAndGet()
+        val footer = parse(file, conf)
+        // a file replaced while it was parsed is parsed again: an entry's
+        // version must be the one its footer was read from
+        if (version(file) != v) get(file, conf)
+        else synchronized {
+          Option(entries.put(file, (v, footer))).foreach(old => bytes -= old._2.estBytes)
+          bytes += footer.estBytes
+          val eldest = entries.values.iterator
+          while (bytes > maxBytes && eldest.hasNext) {
+            bytes -= eldest.next()._2.estBytes
+            eldest.remove()
+          }
+          (v, footer)
+        }
+      }
+    }
+
+    /** Footers parsed so far, one per miss. */
+    def misses: Long = missCount.get
+    def estBytes: Long = synchronized(bytes)
+
+    private def parse(file: String, conf: Configuration): Footer = {
+      val reader = open(file, conf)
+      try Footer.of(reader.getFooter, readFooterLength(file))
+      finally reader.close()
+    }
+  }
+
+  /** Bound of [[footers]]: a quarter of the heap. The estimate is ~80
+    * bytes per chunk, so 100 TB of 128 MiB row groups at 16 columns needs
+    * ~1.1 GB, i.e. a driver heap of ~4.5 GB (SCALING.md).
+    */
+  private[metrics] val FooterCacheBytes: Long = Runtime.getRuntime.maxMemory / 4
+
+  private[metrics] val footers = new FooterCache(FooterCacheBytes)
+
+  /** Footers parsed by [[plan]] since the JVM started; a warm plan adds 0. */
+  private[graft] def footerMisses: Long = footers.misses
+
+  /** Smallest min and largest max of numeric `column` over every row
+    * group under `path`, from the cached footers; None when no group has
+    * stats for it.
+    */
+  private[graft] def columnRange(path: String, column: String): Option[(Double, Double)] = {
+    lazy val conf = new Configuration()
+    val bounds = listParquet(new java.io.File(path)).flatMap { file =>
+      val footer = footers.get(file, conf)._2
+      footer.groups.indices.flatMap(footer.stats(_)(column))
+        .collect { case ch if ch.min != null => (num(ch.min), num(ch.max)) }
+    }
+    if (bounds.isEmpty) None else Some((bounds.map(_._1).min, bounds.map(_._2).max))
+  }
+
+  private def open(file: String, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+
   /** [[plan]] + bloom-filter consultation (the OTHER half of the
     * reference's dead-code Feature ladder, v1/src/main.rs:387-393): an
     * equality condition on a chunk whose bloom filter reports the value
@@ -148,30 +283,24 @@ object BytePlanner {
     * bloom when a chunk stays fully dictionary-encoded (the dictionary is
     * already an exact membership structure there); real key columns at
     * corpus scale overflow the dictionary and get the filter.
+    * The file must be opened for its filters, so the min/max test reads
+    * the footer that open parsed, in the cached form, rather than a cache
+    * entry that could be of another file version.
     */
   def planBloom(path: String, columns: Seq[String], predicate: Option[String]): Plan = {
     val expr = predicate.map(Predicates.parse)
+    val conf = new Configuration()
     Plan(listParquet(new java.io.File(path)).map { file =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(file), new Configuration()))
+      val reader = open(file, conf)
       try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val footerBytes = readFooterLength(file) + 8L
-        val surviving = blocks.filter { b =>
-          val stats = b.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
-          val blooms = reader.getBloomFilterDataReader(b)
-          expr.forall(e => keepRowGroup(e, stats, not = false) &&
-            keepBloom(e, stats, c => Option(blooms.readBloomFilter(c)), not = false))
-        }
-        val wanted: ColumnChunkMetaData => Boolean =
-          if (columns.isEmpty) _ => true
-          else c => columns.contains(c.getPath.toDotString)
-        val planned = surviving
-          .flatMap(_.getColumns.asScala.filter(wanted))
-          .map(_.getTotalSize)
-          .sum + footerBytes
-        FilePlan(file, new java.io.File(file).length(), footerBytes,
-          blocks.size, surviving.size, planned)
+        val blocks = reader.getFooter.getBlocks.asScala.toIndexedSeq
+        val footer = Footer.of(reader.getFooter, readFooterLength(file))
+        filePlan(file, new java.io.File(file).length(), footer, columns, { g =>
+          val meta = blocks(g).getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
+          val blooms = reader.getBloomFilterDataReader(blocks(g))
+          expr.forall(e => keepRowGroup(e, footer.stats(g), not = false) &&
+            keepBloom(e, meta, c => Option(blooms.readBloomFilter(c)), not = false))
+        })
       } finally reader.close()
     })
   }
@@ -281,28 +410,29 @@ object BytePlanner {
     */
   def planPages(path: String, columns: Seq[String], predicate: String): PagePlans = {
     val expr = Predicates.parse(predicate)
-    PagePlans(listParquet(new java.io.File(path)).map(planFilePages(_, columns, expr)))
+    val conf = new Configuration()
+    PagePlans(listParquet(new java.io.File(path)).map(planFilePages(_, columns, expr, conf)))
   }
 
-  private def planFilePages(file: String, columns: Seq[String], expr: Expr): PagePlan = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), new Configuration()))
+  private def planFilePages(
+      file: String, columns: Seq[String], expr: Expr, conf: Configuration): PagePlan = {
+    val reader = open(file, conf)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val footerBytes = readFooterLength(file) + 8L
+      val footer = Footer.of(reader.getFooter, readFooterLength(file))
       val wanted: ColumnChunkMetaData => Boolean =
         if (columns.isEmpty) _ => true
         else c => columns.contains(c.getPath.toDotString)
       var pages = 0
       var survivingPages = 0
-      var planned = footerBytes
-      blocks.foreach { b =>
+      var planned = footer.footerLen + 8L
+      blocks.zipWithIndex.foreach { case (b, g) =>
         val chunks = b.getColumns.asScala.toSeq
         val stats = chunks.map(c => c.getPath.toDotString -> c).toMap
         val oiAll = chunks.filter(wanted)
           .map(c => c -> Option(reader.readOffsetIndex(c))).toMap
         pages += oiAll.valuesIterator.map(_.map(_.getPageCount).getOrElse(1)).sum
-        if (keepRowGroup(expr, stats, not = false)) {
+        if (keepRowGroup(expr, footer.stats(g), not = false)) {
           val rowCount = b.getRowCount
           val all: RowRanges = Seq((0L, rowCount - 1))
 
@@ -397,9 +527,9 @@ object BytePlanner {
     * contain matching rows. `not` carries negation through AND/OR
     * (De Morgan) exactly like the reference's flag.
     */
-  private[metrics] def keepRowGroup(
+  private def keepRowGroup(
       e: Expr,
-      stats: Map[String, ColumnChunkMetaData],
+      stats: String => Option[Chunk],
       not: Boolean,
       epsEq: Boolean = false,
       truncStr: Int = 0): Boolean = e match {
@@ -415,9 +545,9 @@ object BytePlanner {
         keepRowGroup(r, stats, not, epsEq, truncStr)
     case Not(x) => keepRowGroup(x, stats, !not, epsEq, truncStr)
     case Cond(c, op, v) =>
-      stats.get(c) match {
+      stats(c) match {
         case None => true // unknown column name here ⇒ conservative
-        case Some(meta) => keepCond(meta, if (not) negate(op) else op, v, epsEq, truncStr)
+        case Some(chunk) => keepCond(chunk, if (not) negate(op) else op, v, epsEq, truncStr)
       }
   }
 
@@ -438,12 +568,9 @@ object BytePlanner {
     * logic stays sound.
     */
   private def keepCond(
-      meta: ColumnChunkMetaData, op: String, v: Value, epsEq: Boolean = false,
-      truncStr: Int = 0): Boolean = {
-    val s = meta.getStatistics
-    if (s == null || !s.hasNonNullValue) return true
-    keepBounds(meta.getPrimitiveType, s.genericGetMin, s.genericGetMax, op, v, epsEq, truncStr)
-  }
+      chunk: Chunk, op: String, v: Value, epsEq: Boolean, truncStr: Int): Boolean =
+    chunk.min == null ||
+      keepBounds(chunk.tpe, chunk.min, chunk.max, op, v, epsEq, truncStr)
 
   /** Interval check for one (min, max) bound pair — the shared kernel of
     * chunk-level [[keepCond]] and page-level [[keepPage]].

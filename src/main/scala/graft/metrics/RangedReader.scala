@@ -1,14 +1,5 @@
 package graft.metrics
 
-import graft.functions.Predicates
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
-import org.apache.parquet.hadoop.util.HadoopInputFile
-
-import scala.jdk.CollectionConverters._
-
 /** Ranged-read EXECUTOR for [[BytePlanner]] plans — the second half of the
   * v2 engine (/root/reference/v2/src/main.rs:400-499): where BytePlanner
   * reports what a pruned scan WOULD read, this performs the reads and
@@ -28,9 +19,9 @@ import scala.jdk.CollectionConverters._
   * group — sequential I/O, not a seek per chunk.
   *
   * Invariant (spec-checked, and asserted per sweep row in TierBench):
-  * bytes actually read == BytePlanner.plannedBytes, exactly — both sides
-  * count surviving chunk bytes + footer bytes, and coalescing only fuses
-  * adjacency, never admits gap bytes. On object storage each merged range
+  * bytes actually read == BytePlanner.plannedBytes, exactly — the reader
+  * reads the plan's own ranges, and coalescing only fuses adjacency,
+  * never admits gap bytes. On object storage each merged range
   * maps to one GET with an HTTP Range header; block size then trades
   * request count against time-to-first-byte, which is why it is a
   * parameter and not hard-coded at the v2 value.
@@ -71,32 +62,6 @@ object RangedReader {
     out.result()
   }
 
-  /** Byte ranges a pruned scan of `columns` under `predicate` must read
-    * from one parquet file: surviving chunks (row groups kept by the same
-    * min/max interval logic BytePlanner uses) plus the footer, coalesced.
-    */
-  def planRanges(file: String, columns: Seq[String], predicate: Option[String]): Seq[ByteRange] = {
-    val expr = predicate.map(Predicates.parse)
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), new Configuration()))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val footerLen = BytePlanner.readFooterLength(file)
-      val fileLen = new java.io.File(file).length()
-      val wanted: ColumnChunkMetaData => Boolean =
-        if (columns.isEmpty) _ => true
-        else c => columns.contains(c.getPath.toDotString)
-      val chunkRanges = blocks.filter { b =>
-        val stats = b.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
-        expr.forall(e => BytePlanner.keepRowGroup(e, stats, not = false))
-      }.flatMap(_.getColumns.asScala.filter(wanted))
-        .map(c => ByteRange(c.getStartingPos, c.getTotalSize))
-      // footer + 4-byte length word + PAR1 magic, same accounting as
-      // BytePlanner.footerBytes
-      coalesce(chunkRanges :+ ByteRange(fileLen - footerLen - 8, footerLen + 8))
-    } finally reader.close()
-  }
-
   /** Stream `ranges` of `file` through positioned `blockSize` reads,
     * returning bytes read (the v2 unfold loop, v2/src/main.rs:424-499).
     * The block buffer is reused across ranges like the reference's.
@@ -121,19 +86,17 @@ object RangedReader {
     } finally raf.close()
   }
 
-  /** Plan + execute a pruned ranged scan over a parquet file or directory;
-    * the executable analog of `BytePlanner.plan(path, columns, predicate)`.
+  /** Plan + execute a pruned ranged scan over a parquet file or directory:
+    * runs `BytePlanner.plan(path, columns, predicate)` and reads each
+    * file's planned ranges, coalesced, so bytes read == planned bytes by
+    * construction. `elapsedSec` covers both.
     */
   def run(path: String, columns: Seq[String], predicate: Option[String],
       blockSize: Int = DefaultBlockSize): Report = {
-    // BytePlanner's own (recursive) listing: a partition-directory layout
-    // flat-listed here would read 0 files while plan() reports full bytes
-    // — a silent break of the measured == planned invariant (review r15)
-    val files = BytePlanner.listParquet(new java.io.File(path))
     val t0 = System.nanoTime()
-    val reads = files.map { f =>
-      val ranges = planRanges(f, columns, predicate)
-      FileRead(f, ranges.size, readRanges(f, ranges, blockSize))
+    val reads = BytePlanner.plan(path, columns, predicate).files.map { f =>
+      val ranges = coalesce(f.ranges)
+      FileRead(f.path, ranges.size, readRanges(f.path, ranges, blockSize))
     }
     Report(reads, (System.nanoTime() - t0) / 1e9)
   }

@@ -170,7 +170,9 @@ object ScaleSweep {
     // subdir of its cell's temp dir (deleted with it)
     var builds = 0
     def fresh(dir: String): String = { builds += 1; s"$dir/b$builds" }
-    def record(family: String, c: Int)(body: => Long): Unit = if (want(family)) {
+    // `prelude` runs untimed before every repeat: it re-stages what a
+    // destructive body consumed, so each repeat times the same work
+    def record(family: String, c: Int, prelude: => Unit = ())(body: => Long): Unit = if (want(family)) {
       telem.foreach(_.mark(s"$family"))
       val runs = (1 to repeat).map { i =>
         // clean slate between repeats: cached/checkpointed blocks from the
@@ -178,6 +180,7 @@ object ScaleSweep {
         // between-queries discipline; a repeat-3 100× prefix run exhausted
         // an 8g heap on accumulated checkpoint blocks without it)
         if (i > 1) { spark.sharedState.cacheManager.clearCache(); System.gc() }
+        prelude
         val spinFrom = telem.map(_.nowSec).getOrElse(0.0)
         val t0 = System.nanoTime()
         val count = body
@@ -333,7 +336,7 @@ object ScaleSweep {
       // buckets bound candidates, replicated texts are distinct by
       // construction); retract_folded times ONLY the filtered re-fold,
       // the O(index)-not-O(corpus) claim (append + rebase run untimed
-      // outside the cell).
+      // before every repeat).
       if (want("simhash_index_build") || want("simhash_probe") ||
           want("retract_folded")) {
         val shDir = java.nio.file.Files.createTempDirectory(s"sweep-sh$c").toString
@@ -360,17 +363,17 @@ object ScaleSweep {
                 bit_count(col("p.sh").bitwiseXOR(col("i.sh"))).as("h"))
               .distinct().where(col("h") <= 3).count()
           }
-          if (want("retract_folded")) {
+          // every repeat folds batch rx in again, so each retract erases it
+          if (want("retract_folded")) record("retract_folded", c, prelude = {
             graft.sources.Layouts.sortedTableAppend(bands(shard), shIdx,
               shCols, batchId = Some("rx"), provenance = true)
             graft.sources.Layouts.sortedRebase(shIdx, shCols,
               partitions = 16)(spark)
-            record("retract_folded", c) {
-              graft.sources.Layouts.retractFolded(shIdx, "rx", shCols,
-                partitions = 16)(spark)
-              spark.read.parquet(
-                graft.sources.Layouts.indexRoot(shIdx)(spark)).count()
-            }
+          }) {
+            graft.sources.Layouts.retractFolded(shIdx, "rx", shCols,
+              partitions = 16)(spark)
+            spark.read.parquet(
+              graft.sources.Layouts.indexRoot(shIdx)(spark)).count()
           }
         } finally scala.reflect.io.Directory(
           new java.io.File(shDir)).deleteRecursively()

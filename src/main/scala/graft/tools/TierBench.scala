@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   *  - BytePlanner numbers (the v2 metadata-only observable): surviving
   *    row groups and planned bytes = surviving chunks of the projected
   *    column + footer.
+  *  - the v2 op (plan + ranged read) in ms and the footers it parsed.
+  *    A last line sets the first tier's op, which fills the footer cache,
+  *    beside the p50 of the warm ones that follow.
   */
 object TierBench {
   def main(args: Array[String]): Unit = {
@@ -56,7 +59,9 @@ object TierBench {
       "q25" -> qs(1), "q50" -> qs(2), "q75" -> qs(3), "q90" -> qs(4),
       "best" -> (maxV + 1.0)) // retain none; all row groups pruned
 
-    tiers.foreach { case (name, w) =>
+    // one v2 op (plan + ranged read of `staged`) per tier: the first runs
+    // on a cold footer cache, the rest warm; (ms, footers parsed) each
+    val v2Ops = tiers.map { case (name, w) =>
       val pred = s"l_extendedprice > $w"
       val q = ParquetQuery(spark, staged)
         .where(pred)
@@ -65,13 +70,16 @@ object TierBench {
       val (rows, rep) = IoMetrics.measure(spark, Seq(staged)) {
         q.df.collect().head.getLong(4)
       }
+      val misses0 = BytePlanner.footerMisses
+      val t0 = System.nanoTime()
       val plan = BytePlanner.plan(staged, Seq("l_extendedprice"), Some(pred))
+      val measured = RangedReader.run(staged, Seq("l_extendedprice"), Some(pred))
+      val v2Op = ((System.nanoTime() - t0) / 1e6, BytePlanner.footerMisses - misses0)
       val rgPi = BytePlanner.plan(stagedPi, Seq("l_extendedprice"), Some(pred))
       val pi = BytePlanner.planPages(stagedPi, Seq("l_extendedprice"), pred)
-      // execute the plan: coalesced 512 KiB ranged reads (v2's second half);
-      // measured == planned is the invariant RangedReaderSpec proves, and
-      // the sweep asserts it on every row so a drifting planner fails here
-      val measured = RangedReader.run(staged, Seq("l_extendedprice"), Some(pred))
+      // the executed plan: coalesced 512 KiB ranged reads (v2's second
+      // half); measured == planned is the invariant RangedReaderSpec
+      // proves, and the sweep asserts it on every row
       require(measured.bytesRead == plan.plannedBytes,
         s"ranged read ${measured.bytesRead} != planned ${plan.plannedBytes} at tier $name")
       println(
@@ -85,8 +93,14 @@ object TierBench {
           s""""pi_rowgroup_planned_bytes":${rgPi.plannedBytes},""" +
           s""""pi_pages":${pi.pages},"pi_surviving_pages":${pi.survivingPages},""" +
           s""""pi_planned_bytes":${pi.plannedBytes},""" +
-          f""""pi_planned_selectivity":${pi.selectivity}%.6f}""")
+          f""""pi_planned_selectivity":${pi.selectivity}%.6f,""" +
+          f""""v2_ms":${v2Op._1}%.2f,"v2_footer_misses":${v2Op._2}}""")
+      v2Op
     }
+    val warm = v2Ops.tail.map(_._1).sorted
+    println(f"""{"v2_cold_ms":${v2Ops.head._1}%.2f,"v2_cold_footer_misses":${v2Ops.head._2},""" +
+      f""""v2_warm_p50_ms":${warm(warm.size / 2)}%.2f,""" +
+      s""""v2_warm_footer_misses":${v2Ops.tail.map(_._2).sum},"v2_warm_ops":${warm.size}}""")
     spark.stop()
   }
 }

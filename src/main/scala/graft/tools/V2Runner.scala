@@ -29,36 +29,12 @@ object V2Runner {
     val threads = opts.getOrElse("-t", "16").toInt
     val columns = opts.get("-cols").map(_.split(",").toSeq).getOrElse(Nil)
 
-    // BytePlanner's recursive listing, so the runner and the planner it
-    // reports parity against always agree on the file set (review r15)
-    val files = graft.metrics.BytePlanner.listParquet(new java.io.File(path))
-    require(files.nonEmpty, s"no parquet files under $path")
-
     val w: Double = opts.getOrElse("-w", "0") match {
       case t @ ("best" | "10" | "25" | "50" | "75" | "worst") =>
         // footer min/max of the filter column re-create the reference's
         // named tiers on arbitrary data without scanning any rows
-        val mins = Seq.newBuilder[Double]
-        val maxs = Seq.newBuilder[Double]
-        import org.apache.hadoop.conf.Configuration
-        import org.apache.hadoop.fs.{Path => HPath}
-        import org.apache.parquet.hadoop.ParquetFileReader
-        import org.apache.parquet.hadoop.util.HadoopInputFile
-        import scala.jdk.CollectionConverters._
-        files.foreach { f =>
-          val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f), new Configuration()))
-          try r.getFooter.getBlocks.asScala.foreach { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == colName).foreach { c =>
-              val s = c.getStatistics
-              if (s != null && s.hasNonNullValue) {
-                mins += s.genericGetMin.toString.toDouble
-                maxs += s.genericGetMax.toString.toDouble
-              }
-            }
-          } finally r.close()
-        }
-        val lo = mins.result().min
-        val hi = maxs.result().max
+        val (lo, hi) = BytePlanner.columnRange(path, colName)
+          .getOrElse(sys.error(s"no parquet min/max for $colName under $path"))
         t match {
           case "worst" => lo - 1.0 // retain everything
           case "best" => hi + 1.0 // prune everything
@@ -71,18 +47,20 @@ object V2Runner {
     }
 
     val pred = Some(s"$colName > $w")
-    println(s"Reading metadata... (${files.size} files, predicate $colName > $w)")
     val t0 = System.nanoTime()
+    val plan = BytePlanner.plan(path, columns, pred)
+    require(plan.files.nonEmpty, s"no parquet files under $path")
+    println(s"Reading metadata... (${plan.files.size} files, predicate $colName > $w)")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
     val rangeCount = new java.util.concurrent.atomic.AtomicLong(0L)
     try {
-      val futures = files.map { f =>
+      val futures = plan.files.map { f =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
-            val ranges = RangedReader.planRanges(f, columns, pred)
+            val ranges = RangedReader.coalesce(f.ranges)
             rangeCount.addAndGet(ranges.size.toLong)
-            bytesRead.addAndGet(RangedReader.readRanges(f, ranges))
+            bytesRead.addAndGet(RangedReader.readRanges(f.path, ranges))
           }
         })
       }
@@ -90,7 +68,6 @@ object V2Runner {
     } finally pool.shutdown()
     val secs = (System.nanoTime() - t0) / 1e9
 
-    val plan = BytePlanner.plan(path, columns, pred)
     val gb = bytesRead.get() / 1e9
     println(f"Bytes read: $gb%.3f GB (planned ${plan.plannedBytes / 1e9}%.3f GB, " +
       s"match=${bytesRead.get() == plan.plannedBytes})")

@@ -347,4 +347,90 @@ class BytePlannerSpec extends AnyFunSuite with Matchers {
       }
     }
   }
+
+  // ---- the footer-stats cache
+
+  /** One single-file parquet dir of `v` = `values`, the file's path. */
+  private def oneFile(values: Seq[Long]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("footercache").toString
+    values.toDF("v").coalesce(1).write.mode("overwrite").parquet(dir)
+    BytePlanner.listParquet(new java.io.File(dir)).head
+  }
+
+  /** Move `src` over `dst`, with the Hadoop local checksum file beside it. */
+  private def replaceFile(src: String, dst: String): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    def crc(f: String) = Paths.get(new java.io.File(f).getParent, s".${new java.io.File(f).getName}.crc")
+    Files.move(Paths.get(src), Paths.get(dst), StandardCopyOption.REPLACE_EXISTING)
+    Files.move(crc(src), crc(dst), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("rewriting a file in place with different stats changes the plan") {
+    val file = oneFile(1L to 100L)
+    val dir = new java.io.File(file).getParent
+    BytePlanner.plan(dir, Seq("v"), Some("v > 50")).survivingGroups shouldBe 1
+    // same path, new content: v now tops out at 10
+    replaceFile(oneFile(1L to 10L), file)
+    val misses = BytePlanner.footerMisses
+    BytePlanner.plan(dir, Seq("v"), Some("v > 50")).survivingGroups shouldBe 0
+    BytePlanner.footerMisses shouldBe misses + 1
+  }
+
+  test("adding or removing a file in the directory changes the plan") {
+    val file = oneFile(1L to 100L)
+    val dir = new java.io.File(file).getParent
+    val one = BytePlanner.plan(dir, Seq("v"), Some("v > 50"))
+    one.files.map(_.path) shouldBe Seq(file)
+    val added = s"$dir/part-added.parquet"
+    java.nio.file.Files.copy(java.nio.file.Paths.get(oneFile(200L to 300L)),
+      java.nio.file.Paths.get(added))
+    val two = BytePlanner.plan(dir, Seq("v"), Some("v > 50"))
+    two.files.map(_.path).toSet shouldBe Set(file, added)
+    two.survivingGroups shouldBe 2
+    two.plannedBytes should be > one.plannedBytes
+    java.nio.file.Files.delete(java.nio.file.Paths.get(file))
+    BytePlanner.plan(dir, Seq("v"), Some("v > 50")).files.map(_.path) shouldBe Seq(added)
+  }
+
+  test("4 threads planning the same predicates at once get identical plans") {
+    // a fresh copy, so the threads race on cold entries too
+    val dir = java.nio.file.Files.createTempDirectory("footercache-mt")
+    BytePlanner.listParquet(new java.io.File(staged)).foreach { f =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(f), dir.resolve(new java.io.File(f).getName))
+    }
+    val preds = Seq(None, Some("l_quantity > 25.0"), Some("l_quantity <= 10.0"),
+      Some("NOT ( l_quantity <= 20.0 OR l_quantity >= 30.0 )"), Some("l_quantity > 9999.0"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val plans = try {
+      val futures = (0 until 4).map { _ =>
+        pool.submit[Seq[BytePlanner.Plan]] { () =>
+          start.await()
+          (0 until 5).flatMap(_ => preds.map(p => BytePlanner.plan(dir.toString, Seq("l_quantity"), p)))
+        }
+      }
+      start.countDown()
+      futures.map(_.get())
+    } finally pool.shutdown()
+    val serial = (0 until 5).flatMap(_ => preds.map(p => BytePlanner.plan(dir.toString, Seq("l_quantity"), p)))
+    plans.foreach(_ shouldBe serial)
+  }
+
+  test("the cache's byte bound evicts the least recently used footer") {
+    val (a, b) = (oneFile(1L to 100L), oneFile(1L to 100L))
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val one = new BytePlanner.FooterCache(Long.MaxValue).get(a, conf)._2.estBytes
+    // room for one of the two (equal-sized) footers, not both
+    val cache = new BytePlanner.FooterCache(one * 3 / 2)
+    cache.get(a, conf)
+    cache.get(b, conf) // evicts a
+    cache.estBytes shouldBe one
+    cache.get(b, conf)
+    cache.misses shouldBe 2 // b stayed
+    cache.get(a, conf) // evicts b
+    cache.misses shouldBe 3
+    cache.get(b, conf)
+    cache.misses shouldBe 4
+  }
 }

@@ -55,12 +55,11 @@ class RangedReaderSpec extends AnyFunSuite with Matchers {
   }
 
   test("coalescing collapses per-chunk ranges into at most one seek per surviving group + footer") {
-    val f = new java.io.File(staged).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head.getPath
     // full-width scan: chunks within a group are back-to-back, so ranges
     // collapse to ~one per group (plus footer), far fewer than chunk count
     val plan = BytePlanner.plan(staged, Nil, None)
-    val ranges = RangedReader.planRanges(f, Nil, None)
+    plan.files.size shouldBe 1
+    val ranges = RangedReader.coalesce(plan.files.head.ranges)
     val columnsPerGroup = 16 // lineitem width
     ranges.size should be < plan.rowGroups * columnsPerGroup
     ranges.size should be <= plan.rowGroups + 1
@@ -78,5 +77,14 @@ class RangedReaderSpec extends AnyFunSuite with Matchers {
     val plan = BytePlanner.plan(staged, Seq("l_quantity"), Some("l_quantity > 9999.0"))
     report.bytesRead shouldBe plan.files.map(_.footerBytes).sum
     report.ranges shouldBe plan.files.size // one footer range per file
+  }
+
+  test("a warm run parses no footer") {
+    val pred = Some("l_quantity > 25.0")
+    RangedReader.run(staged, Seq("l_quantity"), pred)
+    val misses = BytePlanner.footerMisses
+    val report = RangedReader.run(staged, Seq("l_quantity"), Some("l_quantity <= 10.0"))
+    BytePlanner.footerMisses shouldBe misses
+    report.bytesRead should be > 0L
   }
 }
