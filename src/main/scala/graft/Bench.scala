@@ -1,4 +1,5 @@
 package graft
+import graft.metrics.RowProbe.Row
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every catalog query against SPARK_GRAFT_SF_DIR,
@@ -24,9 +25,6 @@ import org.apache.spark.sql.SparkSession
   * analog of /root/reference/microbenchmarks/src/disk/read.rs:21-82).
   */
 object Bench {
-
-  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
   /** Dead-code-elimination guard for the preamble spin loop (see
     * [[graft.metrics.Telemetry]]'s spinSink).
@@ -112,12 +110,12 @@ object Bench {
     // and drops the launch transient
     val otherCores = (0 until 3).map { _ =>
       val (b0, t0, ncpus) = graft.metrics.Telemetry.busyTotalCpus()
-      val c0 = osBean.getProcessCpuTime
+      val c0 = graft.metrics.Telemetry.osBean.getProcessCpuTime
       val n0 = System.nanoTime()
       try Thread.sleep(600) catch { case _: InterruptedException => }
       val (b1, t1, _) = graft.metrics.Telemetry.busyTotalCpus()
       val elapsed = (System.nanoTime() - n0) / 1e9
-      val selfCores = (osBean.getProcessCpuTime - c0) / 1e9 / elapsed
+      val selfCores = (graft.metrics.Telemetry.osBean.getProcessCpuTime - c0) / 1e9 / elapsed
       if (t1 <= t0 || ncpus == 0) 0.0
       else math.max(0.0,
         (b1 - b0).toDouble / (t1 - t0) * ncpus - selfCores)
@@ -169,19 +167,6 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => (Map.empty, Map.empty, "none") }
   }
 
-  private def rssMb(): Double = {
-    try {
-      val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/self/status"))
-      val it = lines.iterator()
-      while (it.hasNext) {
-        val l = it.next()
-        if (l.startsWith("VmRSS:"))
-          return l.split("\\s+")(1).toDouble / 1024.0
-      }
-      0.0
-    } catch { case _: Throwable => 0.0 }
-  }
-
   /** WARM sequential full-file read throughput over every parquet file in
     * `dir`, looped for ~1 s of wall time. At fixture scale this is
     * page-cache bandwidth — the key says `warm` because that is what it
@@ -229,108 +214,13 @@ object Bench {
     // disk_util_pct and net_rx/tx_mbps tell an operator whether a slow
     // query was I/O-bound or CPU-bound without re-running it.
     val telem = new graft.metrics.Telemetry().start()
-    val rssMax = telem.rssMaxMilliMb
 
-    // Per-query scan-input accounting: task-end input bytes accumulated on
-    // the listener bus, read-and-reset around each query. This is the
-    // attribution the round-11 postmortem lacked — the staged-probe rows
-    // (x101/x117/x139/x144/x145) were 5-6x slower at the driver and only
-    // the host's cold-read probe hinted why; with bytes per query the
-    // artifact itself separates "read more" from "read slower".
-    val inputBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    // ... and written bytes (VERDICT r13 #5): the staged-index builds are
-    // write-bound rows, and without MB-written on each one a collapsed
-    // scratch device reads as a build regression (r13's builds doubled on
-    // a 0.34 GB/s device and attributing it took ledger archaeology).
-    val outputBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    // ... and shuffle-write bytes: this round's write billing showed the
-    // index builds emit only ~MBs of FINAL output, so their cost is the
-    // shuffle leg — which writes through the same local device and
-    // deserves its own per-row attribution
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          inputBytes.addAndGet(m.inputMetrics.bytesRead)
-          outputBytes.addAndGet(m.outputMetrics.bytesWritten)
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
-    // Per-trigger latency for the streaming serving rows (VERDICT r13 #4):
-    // their total wall is ~fixed Structured Streaming setup at sf0.1 and
-    // reads as a false regression forever; the per-trigger execution time
-    // is the number a serving deployment would grade. Collected from the
-    // engine's own progress events; zero-input triggers (the tail poll
-    // processAllAvailable drains on) are excluded.
-    val triggerSecs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.numInputRows > 0) {
-          val d = p.durationMs.get("triggerExecution")
-          if (d != null) triggerSecs.add(d.toDouble / 1e3)
-        }
-      }
-    })
-
-    case class R(wallSec: Double, cpuSec: Double, rssMaxMb: Double,
-        inputMb: Double, outputMb: Double, shuffleMb: Double, gcSec: Double,
-        failed: Boolean, spinMedMops: Double)
-    def runThunk(label: String)(body: => Unit): R = {
-      // start clean: previous query's staged caches and garbage must not
-      // bill to this query
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-      telem.mark(label) // phase boundary row in the timeline CSV
-      rssMax.set((rssMb() * 1000).toLong)
-      inputBytes.set(0L)
-      outputBytes.set(0L)
-      shuffleBytes.set(0L)
-      val g0 = graft.metrics.Telemetry.gcMillis()
-      val c0 = osBean.getProcessCpuTime
-      val phaseFrom = telem.nowSec
-      val t0 = System.nanoTime()
-      // NonFatal only: an OOM/VM error must crash the run (rc != 0), not
-      // produce a silently short bench that reads as a speedup. Recoverable
-      // per-query failures are counted and reported as failed_queries.
-      val failed =
-        try { body; false }
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] $label FAILED: $e"); true
-        }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-      // listener events post asynchronously; wait for the bus to go quiet
-      // (two consecutive equal reads) so straggler task-end bytes bill to
-      // this query, not the next — capped so a busy bus can't stall the
-      // run, and typically one 10 ms beat instead of a flat 50 ms × 171
-      // thunks (~8.5 s of dead wall time per bench run)
-      // ... on ALL the billed counters: a final stage that only writes
-      // (inputs zero, e.g. an index build's commit stage) would otherwise
-      // read as drained while its output/shuffle events are still queued
-      var drained = false
-      var waited = 0
-      while (!drained && waited < 100) {
-        val before = (inputBytes.get(), outputBytes.get(), shuffleBytes.get())
-        Thread.sleep(10); waited += 10
-        drained = (inputBytes.get(), outputBytes.get(), shuffleBytes.get()) == before
-      }
-      R(wall, cpu, math.max(rssMax.get() / 1000.0, rssMb()),
-        inputBytes.get() / 1e6, outputBytes.get() / 1e6,
-        shuffleBytes.get() / 1e6,
-        (graft.metrics.Telemetry.gcMillis() - g0) / 1e3, failed,
-        // the row's OWN weather sample: median spin during exactly this
-        // phase (0.0 when the row outran the 1 Hz tick) — what the retry
-        // pass keys on, so only weather-coincident slow rows re-run
-        telem.spinMedian(phaseFrom, telem.nowSec))
-    }
-    def run(name: String): R = runThunk(name) {
+    // Per-row billing (wall, cpu, RSS max, gc, phase spin, and the task-end
+    // input/output/shuffle-write bytes that separate "read more" from "read
+    // slower" and a collapsed scratch device from a build regression) is
+    // one shared measurement, also behind graft.tools.Profile.
+    val probe = new graft.metrics.RowProbe(spark, telem)
+    def run(name: String): Row = probe.run(name) {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     }
@@ -430,27 +320,20 @@ object Bench {
     // reference's own metadata-phase / query-phase split
     // (v1/src/main.rs:118-133 vs 137-156).
     val buildResults = graft.queries.ExtensionCatalog.stagedBuilds
-      .map(b => b.label -> runThunk(b.label)(b(spark, sfDir)))
+      .map(b => b.label -> probe.run(b.label)(b(spark, sfDir)))
     val queryResults = names.map(n => n -> run(n))
     // Steady-state streaming serving rows AFTER the batch sweep (VERDICT
     // r12 #6): real Structured Streaming queries (ANN serving against the
     // staged IVF index, PSI + CUSUM monitors) run to completion, each as
     // its own row, excluded from steady_sec_per_query like the builds —
     // their wall includes feed landing + stream startup by design.
+    // Streaming rows are graded on per-trigger latency (their total wall is
+    // ~fixed Structured Streaming setup at sf0.1): the engine's own
+    // triggerExecution time of every trigger that read input.
     def runStream(label: String, f: (SparkSession, String) => Unit)
-        : (String, R, Double, Double) = {
-      triggerSecs.clear()
-      val r = runThunk(label)(f(spark, sfDir))
-      // progress events post asynchronously; wait for quiescence like
-      // the input-bytes drain above
-      var last = -1
-      var waited = 0
-      while (waited < 100 && triggerSecs.size != last) {
-        last = triggerSecs.size
-        Thread.sleep(10); waited += 10
-      }
-      import scala.jdk.CollectionConverters._
-      val ds = triggerSecs.asScala.map(_.doubleValue).toSeq.sorted
+        : (String, Row, Double, Double) = {
+      val r = probe.run(label)(f(spark, sfDir))
+      val ds = r.triggerSecs.sorted
       val p50 = graft.metrics.Telemetry.median(ds)
       val p95 = if (ds.isEmpty) 0.0 else ds(math.min(ds.size - 1,
         math.ceil(ds.size * 0.95).toInt - 1))
@@ -602,7 +485,7 @@ object Bench {
     val streamResults = streamRows.map { case (l, r, _, _) => l -> r }
     val results = buildResults ++ queryResultsRecord ++ streamResults
     def round(x: Double, p: Double): Double = math.round(x * p) / p
-    def col(f: R => Double, p: Double): String = results
+    def col(f: Row => Double, p: Double): String = results
       .map { case (k, r) => "\"" + k + "\":" + round(f(r), p) }.mkString("{", ",", "}")
     val total = round(results.map(_._2.wallSec).sum, 1000)
     // Telemetry goes to a file, not stdout: the driver captures only a
@@ -722,7 +605,7 @@ object Bench {
     // build rows billed with their write volume (VERDICT r13 #5): MB
     // written through the committers plus the effective write rate — a
     // slow build on a collapsed device is attributable from the artifact
-    def buildMap(f: (String, R) => Double, p: Double): String = buildResults
+    def buildMap(f: (String, Row) => Double, p: Double): String = buildResults
       .map { case (k, r) => "\"" + k.stripPrefix("build_") + "\":" + round(f(k, r), p) }
       .mkString("{", ",", "}")
     val buildWriteMb = buildMap((_, r) => r.outputMb, 10)
@@ -750,7 +633,7 @@ object Bench {
     val retriedJsonLine = auditJson(retriedRows, 4)
     val retriedStreamsJsonLine = auditJson(retriedStreams, 4)
     val retriedCount = retriedRows.size + retriedStreams.size
-    def streamMap(f: ((String, R, Double, Double)) => Double, p: Double): String =
+    def streamMap(f: ((String, Row, Double, Double)) => Double, p: Double): String =
       streamRows.map { t =>
         "\"" + t._1.stripPrefix("stream_") + "\":" + round(f(t), p)
       }.mkString("{", ",", "}")

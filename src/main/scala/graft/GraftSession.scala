@@ -75,32 +75,18 @@ object GraftSession {
       case _ => df // already BIGINT nanos (or no ts column)
     }
 
-  /** Fixture tables live at `{dir}/{name}.parquet` (TESTDATA.md). */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalizeEventTs(spark.read.parquet(s"$dir/$name.parquet"))
-
-  // S3 metadata cache: the reference prefetches all 640 footers once and
-  // runs every query against them (v1/src/main.rs:118-133). The Spark
-  // analog of "cached footers" is a cached *analyzed plan* — schema
-  // inference (footer reads) happens once per path, later queries reuse it.
-  // Keyed by the session instance, with STOPPED sessions purged lazily on
-  // every access. (A WeakHashMap cannot work here: the cached Dataset
-  // values strongly reference their owning SparkSession — the key — so
-  // the value chain would pin the weak key forever, the exact leak weak
-  // keying was meant to prevent.)
-  private val tableCache =
-    new java.util.IdentityHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()
-
-  /** `table` with the analyzed plan memoized per (live session, path). */
-  def cachedTable(spark: SparkSession, dir: String, name: String): DataFrame =
-    tableCache.synchronized {
-      val it = tableCache.keySet().iterator()
-      while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
-      tableCache
-        .computeIfAbsent(spark, _ => new java.util.HashMap[String, DataFrame]())
-        .computeIfAbsent(s"$dir/$name.parquet",
-          path => normalizeEventTs(spark.read.parquet(path)))
-    }
+  /** Fixture tables live at `{dir}/{name}.parquet` (TESTDATA.md). The one
+    * loader every catalog query and view reads through. The schema comes
+    * from [[graft.operators.ParquetQuery.schemaOf]], which re-infers only
+    * when a file's version or an inference conf changed, so a rewritten
+    * table is read with its new schema and files while an unchanged one
+    * runs no inference job. No DataFrame or plan is kept across calls.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    normalizeEventTs(spark.read
+      .schema(graft.operators.ParquetQuery.schemaOf(spark, path)).parquet(path))
+  }
 
   /** All fixture table names (TESTDATA.md). */
   val tableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
@@ -114,7 +100,7 @@ object GraftSession {
   def registerViews(spark: SparkSession, dir: String): Unit = {
     tableNames.foreach { n =>
       val f = new java.io.File(s"$dir/$n.parquet")
-      if (f.exists()) cachedTable(spark, dir, n).createOrReplaceTempView(n)
+      if (f.exists()) table(spark, dir, n).createOrReplaceTempView(n)
     }
   }
 }

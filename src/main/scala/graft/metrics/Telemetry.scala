@@ -38,7 +38,7 @@ final class Telemetry {
   import Telemetry._
 
   /** Per-phase RSS high-water mark in milli-MB: read-and-reset by callers
-    * ([[graft.Bench]] resets before each query via [[resetRssMax]]).
+    * ([[RowProbe]] resets it before each row via [[resetRssMax]]).
     */
   val rssMaxMilliMb = new java.util.concurrent.atomic.AtomicLong(0L)
 

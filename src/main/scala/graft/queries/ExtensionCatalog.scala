@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object ExtensionCatalog {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    GraftSession.cachedTable(s, dir, name)
+    GraftSession.table(s, dir, name)
 
   /** DuckDB fragment: polyhash of an expression (mirrors
     * [[TextFunctions.fingerprintExpr]]).

@@ -30,7 +30,7 @@ object QueryCatalog {
   def all: Seq[CatalogEntry] = referenceParity ++ ExtensionCatalog.all
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    GraftSession.cachedTable(s, dir, name)
+    GraftSession.table(s, dir, name)
 
   private def li(dir: String) = s"$dir/lineitem.parquet"
 

@@ -8,15 +8,17 @@ import org.apache.spark.sql.functions._
   * times ONLY the minhashCompact rebase over a per-rep fresh x155-shaped
   * grown index (gen-0 build + gen-1 ADMITTED append, both untimed);
   * `rebuild_grown` times the from-scratch build over the same grown
-  * corpus. Prints per-rep walls and the median, Bench-style (cache-clear
-  * + GC between reps). To re-time a bench build row, use
-  * `StageProfile <sfDir> build_… [reps]`, which runs the real staged node.
+  * corpus. Prints per-rep walls and the median; each rep's timed part is
+  * one [[graft.metrics.RowProbe]] row, the bench's own measurement. To
+  * re-time a bench build row, use `Profile build <sfDir> build_… [reps]`,
+  * which runs the real staged node.
   */
 object BuildTimer {
   def main(args: Array[String]): Unit = {
     val which = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 5
+    require(which == "compact" || which == "rebuild_grown", s"unknown build '$which'")
     val spark = GraftSession.build("graft-buildtimer")
     spark.sparkContext.setLogLevel("ERROR")
     val docs = GraftSession.table(spark, sfDir, "documents")
@@ -26,9 +28,9 @@ object BuildTimer {
     // base plus a gen-1 batch, the x153/x155 staging split
     val g0 = docs.where(col("doc_id") % 3 === 0)
     val g1 = docs.where(col("doc_id") % 3 === 1)
+    val telem = new graft.metrics.Telemetry().start()
+    val probe = new graft.metrics.RowProbe(spark, telem)
     val walls = (1 to reps).map { i =>
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
       val out = freshOut()
       // UNTIMED staging for the compact mode: the measurement is the
       // rebase alone, over a grown index prepared fresh per rep with
@@ -38,7 +40,7 @@ object BuildTimer {
       var rebuildInput: org.apache.spark.sql.DataFrame = null
       // checkpointed blocks accumulate across reps unless released (the
       // heap pressure the between-rep cache-clear exists to avoid —
-      // ADVICE r15); collected at rep end, PageRank's LogicalRDD pattern
+      // ADVICE r15); released at rep end
       val repCheckpoints = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.spark.sql.DataFrame]
       if (which == "compact") {
@@ -69,28 +71,25 @@ object BuildTimer {
         repCheckpoints += rebuildInput
         scala.reflect.io.Directory(new java.io.File(probeIdx)).deleteRecursively()
       }
-      val t0 = System.nanoTime()
-      which match {
-        // the x155 A/B pair: the rebase alone (corpus never rescanned)
-        // vs the from-scratch rebuild over the same grown corpus — the
-        // measured form of SCALING.md's O(index) vs O(corpus) claim
-        case "compact" => graft.sources.Layouts.minhashCompact(out,
-          groupBytes = 256L * 1024, pageRows = 2000)(spark)
-        case "rebuild_grown" => graft.sources.Layouts.minhashIndex(
-          rebuildInput, out, groupBytes = 256L * 1024, pageRows = 2000)
-        case other => sys.error(s"unknown build '$other'")
+      val r = probe.run(s"$which rep $i") {
+        which match {
+          // the x155 A/B pair: the rebase alone (corpus never rescanned)
+          // vs the from-scratch rebuild over the same grown corpus — the
+          // measured form of SCALING.md's O(index) vs O(corpus) claim
+          case "compact" => graft.sources.Layouts.minhashCompact(out,
+            groupBytes = 256L * 1024, pageRows = 2000)(spark)
+          case "rebuild_grown" => graft.sources.Layouts.minhashIndex(
+            rebuildInput, out, groupBytes = 256L * 1024, pageRows = 2000)
+        }
       }
-      val w = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[buildtimer] rep $i: $w%.2f s")
+      require(!r.failed, s"$which rep $i failed")
+      System.err.println(f"[buildtimer] rep $i: ${r.wallSec}%.2f s")
       scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-      repCheckpoints.foreach(_.queryExecution.optimizedPlan.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-      })
-      w
+      repCheckpoints.foreach(graft.metrics.RowProbe.releaseCheckpoint)
+      r.wallSec
     }
     val med = graft.metrics.Telemetry.median(walls)
-    println(f"""{"build":"$which","median_sec":$med%.3f,"runs":[${walls.map(w => f"$w%.2f").mkString(",")}]}""")
+    println(graft.Bench.checkedLine(f"""{"build":"$which","median_sec":$med%.3f,"runs":[${walls.map(w => f"$w%.2f").mkString(",")}]}"""))
     spark.stop()
   }
 }

@@ -62,16 +62,6 @@ object ScaleSweep {
         (col("value") + col("i") * lit(1000.0)).as("value"))
       .repartition(parallelism).localCheckpoint()
 
-  /** localCheckpoint blocks live behind the LogicalRDD, not the DF cache —
-    * drop them so scale c's corpus doesn't bill to (or OOM) scale c+1
-    * (the BuildTimer rep discipline, ADVICE r15).
-    */
-  private def dropReplicated(df: DataFrame): Unit =
-    df.queryExecution.optimizedPlan.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-    }
-
   private def replicateDocs(base: DataFrame, copies: Int, parallelism: Int): DataFrame =
     base
       .select(col("doc_id"), substring(col("text"), 1, 300).as("t"),
@@ -662,7 +652,7 @@ object ScaleSweep {
               (greatest(col("mx"), lit(0L)) - col("p")).as("cusum_down"))
             .count()
         }
-        dropReplicated(ev)
+        graft.metrics.RowProbe.releaseCheckpoint(ev)
       }
       // Round-16 families. zorder_write: the Morton layout rewrite over
       // the replicated events plane (user_id × value) — one range shuffle
@@ -695,7 +685,7 @@ object ScaleSweep {
         if (want("stream_attribution")) record("stream_attribution", c)(
           graft.streaming.EventsStream.attribution(ev, windowSec = 21600L)
             .count())
-        dropReplicated(ev)
+        graft.metrics.RowProbe.releaseCheckpoint(ev)
       }
       // Streaming serving: c one-file micro-batches of the same 1000-query
       // feed against the base-size staged IVF index. The recorded count is

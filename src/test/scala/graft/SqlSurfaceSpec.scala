@@ -49,4 +49,24 @@ class SqlSurfaceSpec extends AnyFunSuite with Matchers {
     df.queryExecution.optimizedPlan.toString.toLowerCase should
       include("charngramdistinctcount")
   }
+
+  test("a table rewritten in a live session is read with its new schema and rows") {
+    val session = spark
+    import session.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-rewrite").toString
+    try {
+      Seq(1L, 2L).toDF("r_regionkey").write.parquet(s"$dir/region.parquet")
+      GraftSession.registerViews(spark, dir)
+      spark.table("region").columns shouldBe Array("r_regionkey")
+      Seq((3L, "c"), (4L, "d"), (5L, "e")).toDF("r_regionkey", "r_name")
+        .write.mode("overwrite").parquet(s"$dir/region.parquet")
+      GraftSession.registerViews(spark, dir)
+      spark.table("region").columns shouldBe Array("r_regionkey", "r_name")
+      spark.sql("SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey")
+        .as[(Long, String)].collect() shouldBe Array((3L, "c"), (4L, "d"), (5L, "e"))
+    } finally {
+      spark.catalog.dropTempView("region")
+      scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    }
+  }
 }
