@@ -639,7 +639,7 @@ object Bench {
       }.mkString("{", ",", "}")
     val streamP50 = streamMap(_._3, 1000)
     val streamP95 = streamMap(_._4, 1000)
-    val telemetry = s"""{"cpu_sec":${col(_.cpuSec, 1000)},"rss_max_mb":${col(_.rssMaxMb, 10)},"wall_sec":${col(_.wallSec, 1000)},"input_mb":${col(_.inputMb, 10)},"output_mb":${col(_.outputMb, 10)},"shuffle_mb":${col(_.shuffleMb, 10)},"gc_sec":${col(_.gcSec, 1000)},"staged_index_mb":$indexMb,"stream_trigger_p50_sec":$streamP50,"stream_trigger_p95_sec":$streamP95,"host_degraded":$hostDegraded,"idle_other_cores":${round(idleOtherCores, 100)},"spin_preamble_mops":${round(preSpinMops, 10)},"cpu_median_pct":${round(cpuMedPct, 10)},"disk_util_median_pct":${round(diskMedPct, 10)},"steal_max_pct":${round(stealMaxPct, 10)},"spin_med_mops":${round(spinMedMops, 10)},"spin_p10_mops":${round(spinP10Mops, 10)},"seq_read_warm_gbps":$gbps,"seq_read_cold_gbps":$coldGbps,"net_gbps":$netGbps,"http_gbps":$httpGbps,"write_gbps":$writeGbps,"netdisk_gbps":$netDiskGbps,"retried_rows":$retriedJson,"retried_streams":$retriedStreamsJson,"retry_overhead_sec":${round(retryOverheadSec, 100)},"retry_ref":"$retryRefSource","retry_run_weather":$retryRunWeather,"host_norm_cpu_factor":${round(hostNormCpuFactor, 1000)},"steady_repass":$repassTriggered,"steady_first_pass_sec":${round(steadyFirstPassSec, 100)},"steady_repass_overhead_sec":${round(steadyRepassOverheadSec, 100)},"steady_repass_rows":${auditJson(repassRows)},"scratch_dir":"$scratchDir","sf":"$sfDir","timeline_csv":"target/bench-timeline.csv"}"""
+    val telemetry = s"""{"cpu_sec":${col(_.cpuSec, 1000)},"rss_max_mb":${col(_.rssMaxMb, 10)},"wall_sec":${col(_.wallSec, 1000)},"input_mb":${col(_.inputMb, 10)},"output_mb":${col(_.outputMb, 10)},"shuffle_mb":${col(_.shuffleMb, 10)},"gc_sec":${col(_.gcSec, 1000)},"compiles":${col(_.compiles.toDouble, 1)},"codegen_ms":${col(_.codegenMs, 1)},"staged_index_mb":$indexMb,"stream_trigger_p50_sec":$streamP50,"stream_trigger_p95_sec":$streamP95,"host_degraded":$hostDegraded,"idle_other_cores":${round(idleOtherCores, 100)},"spin_preamble_mops":${round(preSpinMops, 10)},"cpu_median_pct":${round(cpuMedPct, 10)},"disk_util_median_pct":${round(diskMedPct, 10)},"steal_max_pct":${round(stealMaxPct, 10)},"spin_med_mops":${round(spinMedMops, 10)},"spin_p10_mops":${round(spinP10Mops, 10)},"seq_read_warm_gbps":$gbps,"seq_read_cold_gbps":$coldGbps,"net_gbps":$netGbps,"http_gbps":$httpGbps,"write_gbps":$writeGbps,"netdisk_gbps":$netDiskGbps,"retried_rows":$retriedJson,"retried_streams":$retriedStreamsJson,"retry_overhead_sec":${round(retryOverheadSec, 100)},"retry_ref":"$retryRefSource","retry_run_weather":$retryRunWeather,"host_norm_cpu_factor":${round(hostNormCpuFactor, 1000)},"steady_repass":$repassTriggered,"steady_first_pass_sec":${round(steadyFirstPassSec, 100)},"steady_repass_overhead_sec":${round(steadyRepassOverheadSec, 100)},"steady_repass_rows":${auditJson(repassRows)},"scratch_dir":"$scratchDir","sf":"$sfDir","timeline_csv":"target/bench-timeline.csv"}"""
     // A telemetry failure (read-only cwd under spark-submit, missing target/)
     // must never suppress the stdout result line below. bench_full.json is
     // the per-round full artifact (VERDICT r11 #6): every query's wall/cpu/

@@ -14,6 +14,9 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   */
 object GraftSession {
 
+  /** `spark.sql.codegen.cache.maxEntries` of every graft session. */
+  val CodegenCacheEntries = 1000
+
   /** Tuned local session carrying [[GraftExtensions]] (graft's functions,
     * optimizer rule and planner strategy). `cores` drives both parallelism and
     * shuffle width — on a real cluster shuffle.partitions would instead track
@@ -49,6 +52,18 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Generated classes are cached JVM-wide by their source text. Spark's
+      // default of 100 entries is smaller than one BM25 append → probe →
+      // probe → serve cycle (~120 distinct classes), so the LRU evicted
+      // each class before its reuse and an append recompiled 52–60.
+      // The working set follows plan shapes, not data size. A static conf:
+      // read once, when the cache is created, so it belongs here and not in
+      // a runtime `spark.conf.set`.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // ...and that source text must not carry a plan position: with the
+      // stage id in the class name, one pipeline numbered 3 in one run and
+      // 5 in the next (AQE numbers stages as they complete) is two classes
+      .config("spark.sql.codegen.useIdInClassName", "false")
     extraConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     if (!spark.catalog.functionExists("graft_poly_hash"))

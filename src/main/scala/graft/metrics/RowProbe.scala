@@ -12,13 +12,13 @@ import scala.jdk.CollectionConverters._
   * row's number are the same measurement.
   *
   * [[run]] starts clean (drops cached tables, collects garbage, resets the
-  * RSS high-water mark), then takes wall, process CPU and GC time around
-  * the body, drains the listener bus so straggler task-end events bill to
-  * this row and not the next, and reads the row's own weather sample (the
-  * median spin during exactly this phase, 0.0 when the row outran the
-  * 1 Hz tick). A recoverable failure (NonFatal) becomes `failed = true`;
-  * an OOM or VM error propagates, so a run can never end short and read
-  * as a speedup.
+  * RSS high-water mark), then takes wall, process CPU, GC time and the
+  * classes compiled around the body, drains the listener bus so straggler
+  * task-end events bill to this row and not the next, and reads the row's
+  * own weather sample (the median spin during exactly this phase, 0.0
+  * when the row outran the 1 Hz tick). A recoverable failure (NonFatal)
+  * becomes `failed = true`; an OOM or VM error propagates, so a run can
+  * never end short and read as a speedup.
   *
   * Two listeners live as long as the probe: one sums task-end input,
   * output and shuffle-write bytes and keeps a row per completed stage; one
@@ -79,6 +79,7 @@ final class RowProbe(spark: SparkSession, telem: Telemetry) extends AutoCloseabl
     stages.clear()
     triggers.clear()
     val g0 = Telemetry.gcMillis()
+    val (n0, cg0) = codegen()
     val c0 = Telemetry.osBean.getProcessCpuTime
     val phaseFrom = telem.nowSec
     val t0 = System.nanoTime()
@@ -90,12 +91,13 @@ final class RowProbe(spark: SparkSession, telem: Telemetry) extends AutoCloseabl
       }
     val wall = (System.nanoTime() - t0) / 1e9
     val cpu = (Telemetry.osBean.getProcessCpuTime - c0) / 1e9
+    val (n1, cg1) = codegen()
     drain()
     Row(wall, cpu, math.max(telem.rssMaxMilliMb.get() / 1000.0, Telemetry.rssMb()),
       inputBytes.get() / 1e6, outputBytes.get() / 1e6, shuffleBytes.get() / 1e6,
       (Telemetry.gcMillis() - g0) / 1e3, failed,
       telem.spinMedian(phaseFrom, telem.nowSec),
-      stages.asScala.toSeq, triggers.asScala.toSeq)
+      stages.asScala.toSeq, triggers.asScala.toSeq, n1 - n0, (cg1 - cg0) / 1e6)
   }
 
   /** Listener events post asynchronously: wait until every queued event
@@ -114,6 +116,14 @@ final class RowProbe(spark: SparkSession, telem: Telemetry) extends AutoCloseabl
 
 object RowProbe {
 
+  /** (classes compiled, compile ns) so far in this JVM. Both grow only on
+    * a miss of Spark's generated-class cache; the count is deterministic
+    * for a given plan sequence, the time is not.
+    */
+  def codegen(): (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
   /** One completed stage: wall span, executor run and CPU time (ms), task
     * count, shuffle written and read and input read (MB), and the first
     * line of its call site.
@@ -122,12 +132,15 @@ object RowProbe {
       tasks: Int, shuffleWriteMb: Double, shuffleReadMb: Double, inputMb: Double)
 
   /** One measured row. `triggers` holds the progress of every trigger that
-    * read input, in completion order.
+    * read input, in completion order; `compiles` and `codegenMs` are the
+    * classes Spark generated and compiled during the row, and their
+    * compile time ([[codegen]] deltas).
     */
   final case class Row(wallSec: Double, cpuSec: Double, rssMaxMb: Double,
       inputMb: Double, outputMb: Double, shuffleMb: Double, gcSec: Double,
       failed: Boolean, spinMedMops: Double,
-      stages: Seq[Stage], triggers: Seq[StreamingQueryProgress]) {
+      stages: Seq[Stage], triggers: Seq[StreamingQueryProgress],
+      compiles: Long, codegenMs: Double) {
     /** Each trigger's `triggerExecution` time, in seconds. */
     def triggerSecs: Seq[Double] =
       triggers.flatMap(p => Option(p.durationMs.get("triggerExecution"))).map(_.toDouble / 1e3)

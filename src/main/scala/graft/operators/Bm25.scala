@@ -1,13 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftFunctions
+import org.apache.spark.unsafe.types.UTF8String
 
 /** BM25 serving over the persisted term-posting index
   * ([[graft.sources.Layouts.bm25Index]]): the probe reads only the query
-  * terms' posting ranges (the literal `In(term, ...)` predicate is what
-  * gives the term-sorted postings their row-group pruning), MERGES the
-  * corpus statistics on read from the batch-sliced `deltas` table
+  * terms' posting ranges (the pushed `In(term, ...)` filter of
+  * [[termIn]] gives the term-sorted postings their row-group pruning),
+  * MERGES the corpus statistics on read from the batch-sliced `deltas` table
   * (df = SUM over the query terms' delta rows, (n, total) = the sum of
   * the per-batch global rows — O(query terms + slices), never an
   * index-sized aggregate and never a sidecar swap to race), and scores
@@ -36,6 +39,19 @@ object Bm25 {
         (dl.cast("double") / avgdl))))
   }
 
+  /** `term IN (terms)` as data, not code: one `InSet` over an
+    * `immutable.HashSet`, whose generated class is the same for every term
+    * list, so a probe reuses the compiled scan and filter whatever its
+    * terms and their count. `isin` instead compiles per term count (an
+    * `EqualTo` for one term, an unrolled `In` below the InSet threshold),
+    * and a Scala `Set1`–`Set4` would bake its own class into the cast.
+    * It still pushes down as `In(term, …)`, which is what prunes the
+    * term-sorted row groups.
+    */
+  def termIn(terms: Seq[String]): Column =
+    GraftFunctions.column(InSet(GraftFunctions.expression(col("term")),
+      scala.collection.immutable.HashSet.empty[Any] ++ terms.map(UTF8String.fromString)))
+
   /** (per-term df, 1-row (n, total)) for the query terms, merged on
     * read from the delta slices — one parquet listing, one immutable
     * generation root when managed.
@@ -45,7 +61,7 @@ object Bm25 {
     implicit val s: SparkSession = spark
     val deltas = spark.read
       .parquet(graft.sources.Layouts.indexRoot(s"$indexPath/deltas"))
-    val dfreq = deltas.where(col("term").isin(terms: _*))
+    val dfreq = deltas.where(termIn(terms))
       .groupBy("term").agg(sum("df").as("df"))
     val stats = deltas.where(col("term").isNull)
       .agg(sum("n").as("n"), sum("total").as("total"))
@@ -74,7 +90,7 @@ object Bm25 {
     implicit val s: SparkSession = spark
     val post = spark.read
       .parquet(graft.sources.Layouts.indexRoot(s"$indexPath/postings"))
-      .where(col("term").isin(terms: _*))
+      .where(termIn(terms))
       .select("term", "doc_id", "tf", "dl")
     scoreRows(spark, indexPath, post, terms)
   }
@@ -117,7 +133,7 @@ object Bm25 {
       .partitionBy("term").orderBy(desc("tf"), asc("doc_id"))
     val tier = spark.read
       .parquet(graft.sources.Layouts.indexRoot(s"$indexPath/champions"))
-      .where(col("term").isin(terms: _*))
+      .where(termIn(terms))
       .select("term", "doc_id", "tf", "dl")
       .withColumn("__cr", row_number().over(cw))
       .where(col("__cr") <= c).drop("__cr")

@@ -1787,7 +1787,13 @@ object Layouts {
     /** Writer-side authoritative copy of the writer's OWN slice `bid`. */
     def forceCopySlice(oldGen: String, newGen: String, bid: String,
         conf: org.apache.hadoop.conf.Configuration): Unit
-    /** Rewrite `foldIds`' rows from `oldGen` into `newGen`'s `base`. */
+    /** Rewrite `foldIds`' rows from `oldGen` into `newGen`'s `base`. The
+      * folds select slices with `col("batch_id").isin(ids)`: `batch_id` is
+      * a partition column, so that filter prunes directories before the
+      * scan and never reaches generated code (a BM25 compact folding 4
+      * slices after one folding 2 compiles 0 classes), and `isin` keeps
+      * the type coercion an id column inferred as integers would need.
+      */
     def fold(oldGen: String, newGen: String, foldIds: Set[String]): Unit
   }
 

@@ -33,8 +33,9 @@ object StreamBm25 {
     * DISTINCT terms are collected to the driver: a query batch is the
     * bounded serving request, never the corpus, and the literal term
     * list is exactly what gives the postings scan its `In(term, ...)`
-    * row-group pruning — the same reason [[StreamAnn.probeBatch]]
-    * dedups its query vectors before probing.
+    * row-group pruning ([[graft.operators.Bm25.termIn]]) — the same
+    * reason [[StreamAnn.probeBatch]] dedups its query vectors before
+    * probing.
     */
   def probeBatch(
       batch: DataFrame,
@@ -46,7 +47,10 @@ object StreamBm25 {
       .collect().map(_.getString(0)).toSeq.sorted
     if (terms.nonEmpty)
       graft.operators.Bm25.topK(batch.sparkSession, indexPath, terms, k)
-        .withColumn("batch_id", lit(batchId))
+        // a String literal is a reference object in generated code, a Long
+        // one is inlined into it: the directory (`batch_id=N`) is the same,
+        // but only the String form compiles once, not once per micro-batch
+        .withColumn("batch_id", lit(batchId.toString))
         .write
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")

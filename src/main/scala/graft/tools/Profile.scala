@@ -19,12 +19,13 @@ import scala.jdk.CollectionConverters._
   *  - `stream`: a streaming serving row (`stream_…`); each trigger that
   *    read input prints its `durationMs` map and state-operator commits.
   *
-  * Each rep of these three prints its wall and the input, output and
-  * shuffle MB Bench bills, then a per-stage table (stage wall span,
-  * executor run and CPU time, tasks, shuffle and input MB, call site), so
-  * it says where a row's time goes; each name then prints one
-  * JSON line with the per-rep walls and their median. Earlier names double
-  * as in-JVM warm-up for later ones.
+  * Each rep of these three prints its wall, the input, output and
+  * shuffle MB Bench bills and the classes Spark compiled (count and ms),
+  * then a per-stage table (stage wall span, executor run and CPU time,
+  * tasks, shuffle and input MB, call site), so it says where a row's
+  * time goes; each name then prints one JSON line with the per-rep walls
+  * and their median. Earlier names double as in-JVM warm-up for later
+  * ones.
   *
   *  - `plan`: prints each query's `explain("formatted")` plan; the name
   *    `all` instead regenerates PLANS.md (every catalog query's plan) in
@@ -82,7 +83,8 @@ object Profile {
           f"in ${r.inputMb}%.1f MB, out ${r.outputMb}%.1f MB, shuffle ${r.shuffleMb}%.1f MB, " +
           f"sum(stage wall) ${ss.map(_.wallMs).sum / 1e3}%.2f s, " +
           f"sum(run) ${ss.map(_.runMs).sum / 1e3}%.2f s, " +
-          f"sum(cpu) ${ss.map(_.cpuMs).sum / 1e3}%.2f s")
+          f"sum(cpu) ${ss.map(_.cpuMs).sum / 1e3}%.2f s, " +
+          f"${r.compiles}%d classes compiled in ${r.codegenMs}%.0f ms")
         ss.sortBy(-_.runMs).take(25).foreach { s =>
           println(f"  wall ${s.wallMs / 1e3}%6.2f run ${s.runMs / 1e3}%7.2f " +
             f"cpu ${s.cpuMs / 1e3}%7.2f ${s.tasks}%4d tasks " +

@@ -58,6 +58,18 @@ class RowProbeSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
+  test("a row bills the classes it compiles, and its repeat compiles none") {
+    // a Long literal is inlined into generated code: this plan is new here
+    def body(): Unit =
+      spark.range(5).select((col("id") * 7777L + 31337L).as("x")).collect()
+    val first = probe.run("codegen")(body())
+    first.compiles should be > 0L
+    first.codegenMs should be > 0.0
+    val again = probe.run("codegen")(body())
+    again.compiles shouldBe 0L
+    again.codegenMs shouldBe 0.0
+  }
+
   test("a throwing body returns failed without throwing") {
     val r = probe.run("boom")(throw new IllegalStateException("boom"))
     r.failed shouldBe true

@@ -404,11 +404,12 @@ class ExtensionRound17Spec extends AnyFunSuite with Matchers {
     }
     // records MATERIALIZED from parquet is the pruning observable
     // (bytesRead double-counts footer/page-index ranges per split): the
-    // probe's In(term, ...) must skip whole row groups, so it reads far
-    // fewer rows than a scan under a NON-prunable predicate over the
-    // same column (length() defeats min/max stats)
+    // probe's own term predicate (Bm25.termIn, pushed as In(term, ...))
+    // must skip whole row groups, so it reads far fewer rows than a scan
+    // under a NON-prunable predicate over the same column (length()
+    // defeats min/max stats)
     val probe = recordsFor(_.where(
-      org.apache.spark.sql.functions.col("term").isin("t1", "t2", "t3")))
+      graft.operators.Bm25.termIn(Seq("t1", "t2", "t3"))))
     val full = recordsFor(_.where(org.apache.spark.sql.functions
       .length(org.apache.spark.sql.functions.col("term")) > 0))
     full shouldBe 60000L
