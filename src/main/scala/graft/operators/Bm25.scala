@@ -114,8 +114,8 @@ object Bm25 {
 
   /** Champion-list (impact-ordered) pruned serving: score only the
     * PERSISTED top-C-by-tf tier ([[graft.sources.Layouts.bm25Index]]'s
-    * `champions` table, C from the index meta), re-selected across the
-    * merged slices — probe cost O(C · slices) per term, independent of
+    * `champions` table, C from the index's `_params`), re-selected across
+    * the merged slices — probe cost O(C · slices) per term, independent of
     * the term's document frequency, which is what makes stop-word-class
     * terms affordable. Scores still use the FULL corpus statistics, so
     * a championed posting's score equals its full-serving score exactly;
@@ -128,11 +128,11 @@ object Bm25 {
       terms: Seq[String],
       k: Int = 10): DataFrame = {
     implicit val s: SparkSession = spark
-    val c = spark.read.parquet(s"$indexPath/meta").head().getAs[Int]("champions")
+    val champRoot = graft.sources.Layouts.indexRoot(s"$indexPath/champions")
+    val c = graft.sources.Layouts.bm25Champions(indexPath)
     val cw = org.apache.spark.sql.expressions.Window
       .partitionBy("term").orderBy(desc("tf"), asc("doc_id"))
-    val tier = spark.read
-      .parquet(graft.sources.Layouts.indexRoot(s"$indexPath/champions"))
+    val tier = spark.read.parquet(champRoot)
       .where(termIn(terms))
       .select("term", "doc_id", "tf", "dl")
       .withColumn("__cr", row_number().over(cw))

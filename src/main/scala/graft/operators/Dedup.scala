@@ -183,10 +183,10 @@ object Dedup {
   }
 
   /** Path form of [[incrementalDedupStaged]]: reads the persisted index's
-    * `meta` row and probes with the BUILD's (k, bands, shingle_n) — a probe
+    * `_params` and probes with the BUILD's (k, bands, shingle_n) — a probe
     * hashed with different parameters joins a disjoint hash space and every
     * true near-dup silently classifies as "kept", the failure mode the
-    * meta table exists to close (same contract as the exact index's
+    * recorded parameters exist to close (same contract as the exact index's
     * threshold guard).
     */
   def incrementalDedupStaged(
@@ -196,20 +196,16 @@ object Dedup {
       textCol: String,
       threshold: Double): DataFrame = {
     implicit val spark: org.apache.spark.sql.SparkSession = incoming.sparkSession
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
     // resolve the current immutable generation ONCE, so all three table
-    // reads see one consistent root even while a compact publishes; meta
-    // stays at the index path
+    // reads see one consistent root even while a compact publishes; the
+    // parameters stay at the index path
     val root = graft.sources.Layouts.indexRoot(indexPath)
+    val (k, bands, shingleN) = graft.sources.Layouts.minhashParams(indexPath)
     incrementalDedupStaged(incoming,
       spark.read.parquet(s"$root/fp"),
       spark.read.parquet(s"$root/banded"),
       spark.read.parquet(s"$root/shingles"),
-      idCol, textCol,
-      k = meta.getAs[Int]("k"),
-      bands = meta.getAs[Int]("bands"),
-      shingleN = meta.getAs[Int]("shingle_n"),
-      threshold = threshold)
+      idCol, textCol, k, bands, shingleN, threshold)
   }
 
   /** [[incrementalDedup]] against a PRE-STAGED existing side — the three
@@ -545,11 +541,11 @@ object Dedup {
 
   /** Path form of [[exactJaccardPairsStaged]] over a persisted
     * [[graft.sources.Layouts.jaccardIndex]] directory. Reads the index's
-    * `meta` table and REFUSES a probe threshold below the build threshold:
+    * `_params` and REFUSES a probe threshold below the build threshold:
     * the persisted prefix rows were truncated for the build threshold, so a
     * lower-threshold probe would need candidate rows that no longer exist —
     * it would return a silently incomplete pair set, the one failure mode a
-    * no-miss contract cannot have. Shingle width comes from the meta row
+    * no-miss contract cannot have. Shingle width comes from `_params`
     * too (a probe shingled differently from the index never matches).
     */
   def exactJaccardPairsStaged(
@@ -558,10 +554,8 @@ object Dedup {
       idCol: String,
       textCol: String,
       threshold: Double): DataFrame = {
-    val spark = incoming.sparkSession
-    val meta = spark.read.parquet(s"$indexPath/meta").collect().head
-    val buildThreshold = meta.getAs[Double]("threshold")
-    val shingleN = meta.getAs[Int]("shingle_n")
+    implicit val spark: org.apache.spark.sql.SparkSession = incoming.sparkSession
+    val (buildThreshold, shingleN) = graft.sources.Layouts.jaccardParams(indexPath)
     require(threshold >= buildThreshold - 1e-9,
       s"probe threshold $threshold < index build threshold $buildThreshold: " +
         s"the persisted prefix rows at $indexPath cannot guarantee no-miss " +

@@ -99,7 +99,7 @@ object PageRank {
     val e = bridge.rebind(eC, spark)
     val nodes = bridge.rebind(nodesC, spark)
     // 1-row invariant folded to a literal: node count collected ONCE on
-    // the driver (O(1) bytes — same class as the index-meta read) instead
+    // the driver (O(1) bytes) instead
     // of a checkpoint job plus a broadcast cross join in init and every
     // iteration; at bench scale those were ~5 extra jobs of pure overhead,
     // and at cluster scale a literal beats shipping a 1-row broadcast per

@@ -33,7 +33,7 @@ object Phrase {
     * commonest (the positional analog of the BM25 champion tier). The
     * per-term df feeding the choice is an aggregate over the
     * already-pruned rows whose result is ≤ |phrase| rows (a bounded
-    * collect, like the probes' 1-row meta reads) — never an index pass;
+    * collect) — never an index pass;
     * a phrase term absent from the corpus short-circuits to the empty
     * result before any shuffle runs.
     */

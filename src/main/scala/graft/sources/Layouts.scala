@@ -82,26 +82,6 @@ object Layouts {
       } finally pool.shutdownNow()
     }
 
-  /** Publish a staged one-row meta table: rename `<metaPath>.__stage`
-    * into place. Pairs with a meta write INSIDE the build's [[inParallel]]
-    * overlap targeting the staged name: the write overlaps the data
-    * tables (it measured ~0.2–0.4 s of sequential commit wall per build
-    * on the bench scratch when ordered after them), while the sentinel
-    * property ADVICE r18 asked for still holds — `meta` only becomes
-    * VISIBLE at its canonical path after every data table committed,
-    * because the caller renames it after inParallel returns. On a
-    * rebuild the previous meta is deleted first; the gap is equivalent
-    * to a crash-mid-rebuild, which the layout already tolerates.
-    */
-  private def publishMeta(metaPath: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = new org.apache.hadoop.fs.Path(metaPath)
-    val tmp = new org.apache.hadoop.fs.Path(s"$metaPath.__stage")
-    val fs = p.getFileSystem(conf)
-    fs.delete(p, true)
-    require(fs.rename(tmp, p), s"could not publish staged meta at $metaPath")
-  }
-
   /** Recursive tree copy that HARDLINKS file contents when source and
     * destination live on the same local filesystem, falling back to a
     * per-file stream copy when the link fails (cross-device move,
@@ -502,10 +482,11 @@ object Layouts {
     * staleness, gone when the delta commits). There is no sidecar swap
     * left to race. Each table is born managed — its own `g=000000000` +
     * manifest v0, like [[sortedTable]] — so retraction and compaction
-    * run against live probes (immutable generations + grace); `meta`
-    * stays at the index path. Tokenization mirrors x52's whitespace split
-    * exactly — the probe must reproduce the full-corpus scoring bit
-    * for bit, which is what the x178 oracle gates.
+    * run against live probes (immutable generations + grace); the tier
+    * width stays in `_params` at the index path. Tokenization mirrors
+    * x52's whitespace split exactly — the probe must reproduce the
+    * full-corpus scoring bit for bit, which is what the x178 oracle
+    * gates.
     */
   def bm25Index(
       docs: DataFrame,
@@ -540,19 +521,12 @@ object Layouts {
         () => sortedStats(bm25ChampionRows(post, champions), champRoot,
           Seq("term"),
           groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
-          batchId = Some("base")),
-        // one-row meta: the champion tier only serves exactly if appends
-        // and compactions re-select with the SAME C the build used (the
-        // minhashIndex meta contract, applied to the tier width). Written
-        // to a STAGED name inside the overlap, published by rename after
-        // the data tables commit (ADVICE r18 sentinel, [[publishMeta]])
-        () => {
-          import spark.implicits._
-          Seq(champions).toDF("champions")
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.__stage")
-        })
-      publishMeta(s"$path/meta", conf)
-      tables.foreach(publishGen0(_, conf))
+          batchId = Some("base")))
+      // the champion tier only serves exactly if appends and compactions
+      // re-select with the SAME C the build used (the minhashIndex
+      // parameter contract, applied to the tier width)
+      writeParams(path, Map("champions" -> champions), conf)
+      tables.foreach(publishGen0(_, Map.empty, provenance = false, conf))
     } finally post.unpersist()
   }
 
@@ -645,7 +619,7 @@ object Layouts {
       enforceNewDocs: Boolean = true): Unit = {
     val spark = docs.sparkSession
     val postRoot = bm25Roots(path, spark.sparkContext.hadoopConfiguration).head
-    val c = spark.read.parquet(s"$path/meta").head().getAs[Int]("champions")
+    val c = bm25Champions(path)(spark)
     val post = bm25PostingRows(docs, idCol, textCol).cache()
     try {
       if (enforceNewDocs) {
@@ -706,7 +680,7 @@ object Layouts {
   }
 
   /** Check that a BM25 index is fully published: each of its three
-    * tables resolves its own manifest generation (`meta` stays at the
+    * tables resolves its own manifest generation (`_params` stays at the
     * index path — parameter identity, not generation state). Every
     * index build already publishes them, so on an index [[bm25Index]] wrote
     * this only reads; it throws `IllegalArgumentException` naming the
@@ -742,8 +716,8 @@ object Layouts {
       graceGenerations: Int = 1)(
       implicit spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.functions.sum
-    manageBm25(path) // refuse an unpublished index before reading meta
-    val c = spark.read.parquet(s"$path/meta").head().getAs[Int]("champions")
+    manageBm25(path) // refuse an unpublished index before reading its parameters
+    val c = bm25Champions(path)
     def aggDeltas(df: DataFrame): DataFrame =
       df.where(col("term").isNotNull)
         .groupBy("term").agg(sum("df").as("df"))
@@ -816,7 +790,7 @@ object Layouts {
     sortedStats(if (provenance) rows.withColumn("src_batch", lit("base")) else rows,
       root, sortCols, groupBytes = groupBytes, pageRows = pageRows,
       partitions = partitions, batchId = Some("base"))
-    publishGen0(path, conf)
+    publishGen0(path, Map.empty, provenance, conf)
   }
 
   /** Append a row batch to a [[sortedTable]] — [[postingAppend]]'s
@@ -843,10 +817,10 @@ object Layouts {
     // first-write-or-never, ENFORCED: mixed provenanced/bare files fork
     // the parquet schema (the non-merged read drops the column for half
     // the rows)
-    val rootCols = spark.read.parquet(root).columns.toSet
-    require(provenance == rootCols.contains("src_batch"),
+    val carries = hasProvenance(path, conf)
+    require(provenance == carries,
       s"provenance mismatch at $path: the table " +
-        (if (rootCols.contains("src_batch")) "carries" else "lacks") +
+        (if (carries) "carries" else "lacks") +
         " src_batch — append with the same provenance setting")
     val bid = batchId.getOrElse("anon-" + java.util.UUID.randomUUID)
     val payload =
@@ -915,8 +889,8 @@ object Layouts {
     * shard-side signatures — the corpus is never re-scanned per ingest,
     * which is the whole case for persisting the index (x101's
     * write-once / probe-many split, applied to dedup). The tables are
-    * born managed under `g=000000000` + manifest v0; `meta` stays at the
-    * index path.
+    * born managed under `g=000000000` + manifest v0; `_params` stays at
+    * the index path.
     */
   def minhashIndex(
       docs: DataFrame,
@@ -972,32 +946,24 @@ object Layouts {
         () => sortedStats(prov(sigs.select(col(idCol), col("shingles"))),
           s"$root/shingles", Seq(idCol),
           groupBytes = groupBytes, pageRows = pageRows, partitions = partitions,
-          batchId = Some("base")),
-        // one-row meta: the banded table only matches probes computed with
-        // the SAME signature family (k), band split, and shingle width — a
-        // probe built with different parameters joins against a disjoint
-        // hash space and every true near-dup silently classifies as
-        // "kept". The path overload of incrementalDedupStaged reads these
-        // instead of trusting the caller to repeat them. Written to a
-        // STAGED name inside the overlap, published by rename after the
-        // data tables commit (ADVICE r18 sentinel, [[publishMeta]])
-        () => {
-          val s = docs.sparkSession
-          import s.implicits._
-          Seq((k, bands, shingleN)).toDF("k", "bands", "shingle_n")
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.__stage")
-        })
-      publishMeta(s"$path/meta", conf)
-      publishGen0(path, conf)
+          batchId = Some("base")))
+      // the banded table only matches probes computed with the SAME
+      // signature family (k), band split, and shingle width — a probe
+      // built with different parameters joins against a disjoint hash
+      // space and every true near-dup silently classifies as "kept". The
+      // path overload of incrementalDedupStaged reads these instead of
+      // trusting the caller to repeat them.
+      publishGen0(path, Map("k" -> k, "bands" -> bands, "shingle_n" -> shingleN),
+        provenance, conf)
     } finally sigs.unpersist()
   }
 
   /** Incremental maintenance of a persisted MinHash index: compute the
     * batch's fingerprints / banded hashes / shingle sets with the
-    * parameters recorded in the index META (a mismatched k/bands/shingleN
-    * would join a disjoint hash space — the exact failure the meta row
-    * exists to prevent) and write them into the three tables. This is
-    * the write half of the probe-then-admit ingest loop x115/x117 run:
+    * parameters recorded in the index's `_params` (a mismatched
+    * k/bands/shingleN would join a disjoint hash space — the exact failure
+    * the recorded parameters exist to prevent) and write them into the
+    * three tables. This is the write half of the probe-then-admit ingest loop x115/x117 run:
     * probe a batch, keep the survivors, append the KEPT docs so the next
     * batch dedups against them — the existing corpus is never re-scanned
     * and the index is never rebuilt.
@@ -1035,15 +1001,13 @@ object Layouts {
     // slices land in the CURRENT generation; the fix-up loop after the
     // writes handles a compact publishing concurrently
     val (v0, root) = currentGeneration(path, conf)
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (k, bands, shingleN) =
-      (m.getAs[Int]("k"), m.getAs[Int]("bands"), m.getAs[Int]("shingle_n"))
-    val fpCols = spark.read.parquet(s"$root/fp").columns.toSet
+    val (k, bands, shingleN) = minhashParams(path)(spark)
     // first-write-or-never, ENFORCED (the sortedTableAppend contract):
     // mixed provenanced/bare slices would fork the parquet schema
-    require(provenance == fpCols.contains("src_batch"),
+    val carries = hasProvenance(path, conf)
+    require(provenance == carries,
       s"provenance mismatch at $path: the index " +
-        (if (fpCols.contains("src_batch")) "carries" else "lacks") +
+        (if (carries) "carries" else "lacks") +
         " src_batch — build and append with the same provenance setting")
     // a batch without an explicit id still needs SOME batch_id
     // directory — draw a unique one (append-mode, so nothing is
@@ -1099,7 +1063,7 @@ object Layouts {
     * Build is corpus-linear (one shingle pass + one count + one rank);
     * per-batch probes then touch the corpus only through equi-joins.
     *
-    * A fourth one-row table `meta` records (threshold, shingle_n): the
+    * The parameter file `_params` records (threshold, shingle_n): the
     * prefix rows are only lossless for probes at threshold ≥ the BUILD
     * threshold (a shorter build prefix has already dropped the candidate
     * rows a lower-threshold probe would need), so
@@ -1129,7 +1093,7 @@ object Layouts {
     try {
       val freq = sorted.select(explode(col("s")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("f"))
-      // all four tables land concurrently ([[inParallel]], guide §2.6):
+      // all three tables land concurrently ([[inParallel]], guide §2.6):
       // pref consumes the freq FRAME (recomputed off the cached sets, one
       // cheap groupBy), not the freq table write, so nothing orders the
       // writes against each other
@@ -1144,24 +1108,15 @@ object Layouts {
           s"$path/pref", Seq("tok"),
           groupBytes = groupBytes, pageRows = pageRows, partitions = partitions),
         () => sortedStats(sorted, s"$path/sets", Seq(idCol),
-          groupBytes = groupBytes, pageRows = pageRows, partitions = partitions),
-        // meta written to a STAGED name inside the overlap, published by
-        // rename after the data tables commit (ADVICE r18 sentinel for
-        // exactJaccardPairsStaged's path overload — [[publishMeta]])
-        () => {
-          val s = docs.sparkSession
-          import s.implicits._
-          Seq((threshold, shingleN)).toDF("threshold", "shingle_n")
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.__stage")
-        })
-      publishMeta(s"$path/meta",
+          groupBytes = groupBytes, pageRows = pageRows, partitions = partitions))
+      writeParams(path, Map("threshold" -> threshold, "shingle_n" -> shingleN),
         docs.sparkSession.sparkContext.hadoopConfiguration)
     } finally sorted.unpersist()
   }
 
   /** Persisted IVF ANN index, consumed by
     * [[graft.operators.SimilaritySearch.ivfTopKStaged]]. Two tables plus
-    * meta:
+    * parameters:
     *   `cent/`   (cent_id, centv)            — the (small) centroid set,
     *                                           deterministically sampled
     *                                           as id % centModulo == 0;
@@ -1171,8 +1126,7 @@ object Layouts {
     *                                           probe's cell equi-join
     *                                           dynamic-partition-prunes
     *                                           to the probed cells only;
-    *   `meta`    one row (cent_modulo,
-    *             two_level)                  — how the centroids were
+    *   `_params` cent_modulo, two_level      — how the centroids were
     *                                           drawn and which assignment
     *                                           built the lists, so a
     *                                           rebuild at the next corpus
@@ -1184,8 +1138,9 @@ object Layouts {
     * [[graft.operators.SimilaritySearch.kmeansIterate]] output; the index
     * contract (cell-partitioned lists + broadcast centroid table) is
     * identical. `assign` is born managed under `g=000000000` + manifest
-    * v0; `cent` and `meta` stay at the index path (centroids are frozen
-    * by the append contract — parameter identity, like the MinHash meta).
+    * v0; `cent` and `_params` stay at the index path (centroids are
+    * frozen by the append contract — parameter identity, like the MinHash
+    * parameters).
     */
   /** Centroid count above which [[ivfIndex]]'s default (auto) build
     * switches from the flat n·k assignment to the two-level n·√k coarse
@@ -1232,7 +1187,7 @@ object Layouts {
     // centroid table (a one-file read, not a corpus scan): a naive
     // 100 TB user gets the scale-safe path without knowing the knob
     // exists (VERDICT r12 watch-item #1); the persisted layout and the
-    // probe are identical either way, and meta records the RESOLVED
+    // probe are identical either way, and _params records the RESOLVED
     // choice so a rebuild is reproducible.
     // the assignment pass reads the centroids BACK from the just-written
     // one-file table instead of re-deriving them with a second full
@@ -1270,22 +1225,12 @@ object Layouts {
     // fragmentation [[ivfFamily]]'s fold already removes on compact;
     // guide §6 "small files hurt twice"). Same trade as the fold: a hot
     // cell serializes into one write task, which compact accepts too.
-    inParallel(
-      () => listed.withColumn("batch_id", lit("base"))
-        .repartition(col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id", "batch_id")
-        .parquet(s"$root/assign"),
-      // meta written to a STAGED name inside the overlap, published by
-      // rename after the assign tree commits (the ADVICE r18 sentinel
-      // applied to the IVF family — ivfAppend/probes read meta for
-      // two_level and must not find it over a partial assign tree)
-      () => {
-        import spark.implicits._
-        Seq((centModulo, useTwoLevel)).toDF("cent_modulo", "two_level")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.__stage")
-      })
-    publishMeta(s"$path/meta", conf)
-    publishGen0(path, conf)
+    listed.withColumn("batch_id", lit("base"))
+      .repartition(col("cent_id"))
+      .write.mode("overwrite").partitionBy("cent_id", "batch_id")
+      .parquet(s"$root/assign")
+    publishGen0(path, Map("cent_modulo" -> centModulo, "two_level" -> useTwoLevel),
+      provenance, conf)
   }
 
   /** Incremental maintenance of a persisted IVF index: assign ONLY the
@@ -1306,7 +1251,8 @@ object Layouts {
     * skew from drift warrants it (x131's balance audit is the monitor).
     *
     * The assignment pass reuses the build's RESOLVED flat/two-level
-    * choice from the index meta, so append and build shard the same way.
+    * choice from the index's `_params`, so append and build shard the
+    * same way.
     *
     * Replay safety: pass `batchId` and the batch writes `(cent_id,
     * batch_id)` leaf partitions via a dynamic partition overwrite — a
@@ -1335,19 +1281,18 @@ object Layouts {
     val assign = s"$root/assign"
     val centsFor = spark.read.parquet(s"$path/cent")
       .select(col("cent_id").as(idCol), col("centv").as(vecCol))
-    val useTwoLevel =
-      spark.read.parquet(s"$path/meta").head().getAs[Boolean]("two_level")
     val lists =
-      if (useTwoLevel) SimilaritySearch.invertedListsTwoLevel(batch, centsFor, idCol, vecCol)
+      if (params(path, conf)("two_level").toBoolean)
+        SimilaritySearch.invertedListsTwoLevel(batch, centsFor, idCol, vecCol)
       else SimilaritySearch.invertedLists(batch, centsFor, idCol, vecCol)
     // provenance must MATCH the table (first-write-or-never): a bare
     // append into a provenanced assign tree (or vice versa) forks the
     // parquet schema — the non-merged read would drop the column for
     // half the rows
-    val existingCols = spark.read.parquet(assign).columns.toSet
-    require(provenance == existingCols.contains("src_batch"),
+    val carries = hasProvenance(path, conf)
+    require(provenance == carries,
       s"provenance mismatch at $path: the assign table " +
-        (if (existingCols.contains("src_batch")) "carries" else "lacks") +
+        (if (carries) "carries" else "lacks") +
         " src_batch — build with the same provenance setting")
     val bid = batchId.getOrElse("anon-" + java.util.UUID.randomUUID)
     // NOT cell-colocated like the build/fold: an append batch is bounded
@@ -1468,8 +1413,9 @@ object Layouts {
   //
   // Build/writer/compactor protocol (no locks, single compactor
   // assumed):
-  //   - a BUILD writes generation 0 (`g=000000000`) and publishes v0 as
-  //     its LAST step, so "a manifest exists" means "the index is
+  //   - a BUILD writes generation 0 (`g=000000000`), records its fixed
+  //     parameters in `<path>/_params` ([[writeParams]]) and publishes v0
+  //     as its LAST step, so "a manifest exists" means "the index is
   //     complete". A build refuses a path that already holds a manifest
   //     (see [[gen0Root]]); one that crashed before its publish left only
   //     an unpublished `g=000000000`, which the re-run clears.
@@ -1501,6 +1447,9 @@ object Layouts {
   private val ManifestDirName = "_manifest"
   private val SealName = "_SEALED"
   private def genName(v: Long): String = f"g=$v%09d"
+  /** The pointer file of manifest version `v`. */
+  private def pointerFile(path: String, v: Long): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(f"$path/$ManifestDirName/v$v%09d")
 
   /** Highest published (version, generation root) of the table or index
     * at `path`, or None when nothing is published there yet — the lookup
@@ -1536,7 +1485,7 @@ object Layouts {
 
   /** Resolve the directory the index's TABLES live under: the current
     * generation. Probes resolve ONCE and read all tables from the same
-    * immutable root — `meta` stays at the index path (it is parameter
+    * immutable root — `_params` stays at the index path (it is parameter
     * identity, not generation state).
     */
   def indexRoot(path: String)(
@@ -1561,24 +1510,109 @@ object Layouts {
     root
   }
 
-  /** An index build's last step: publish manifest v0 over `g=000000000`. */
-  private def publishGen0(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit =
+  /** An index build's last steps: record its parameters, with the
+    * first-write-or-never `provenance` fact every append and retraction
+    * checks ([[writeParams]]), then publish manifest v0 over
+    * `g=000000000`.
+    */
+  private def publishGen0(path: String, params: Map[String, Any],
+      provenance: Boolean, conf: org.apache.hadoop.conf.Configuration): Unit = {
+    writeParams(path, params + ("provenance" -> provenance), conf)
     publishGeneration(path, 0L, genName(0L), conf)
+  }
 
   /** Publish manifest version `v` pointing at generation dir `gen`
     * (name relative to the index path). Create-once: two racing
     * compactors cannot both win a version.
     */
   private def publishGeneration(path: String, v: Long, gen: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val target = new org.apache.hadoop.fs.Path(
-      s"$path/$ManifestDirName/v${"%09d".format(v)}")
-    val fs = target.getFileSystem(conf)
-    fs.mkdirs(target.getParent)
-    val out = fs.create(target, /*overwrite=*/ false)
-    try out.write(gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      conf: org.apache.hadoop.conf.Configuration): Unit =
+    writeText(pointerFile(path, v), gen, overwrite = false, conf)
+
+  /** Write `text` as the whole of file `p`; `overwrite = false` fails when
+    * `p` exists (create-once). The one write path of the small text files
+    * the layout keeps: manifest pointers, fold sets, parameters.
+    */
+  private def writeText(p: org.apache.hadoop.fs.Path, text: String,
+      overwrite: Boolean, conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val out = p.getFileSystem(conf).create(p, overwrite)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  /** The whole of file `p`, or None when it does not exist. */
+  private def readText(p: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): Option[String] = {
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    }
+  }
+
+  private val ParamsName = "_params"
+
+  /** Record an index's fixed build parameters at `<path>/_params`, one
+    * `key=value` line each. Written after the data tables commit and
+    * before the publish, to a temporary name renamed into place, so a
+    * reader never finds parameters over a partial index. A `_params` left
+    * by a crashed build is replaced. Read back by [[params]] — no Spark
+    * job on either side.
+    */
+  private[graft] def writeParams(path: String, params: Map[String, Any],
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/$ParamsName")
+    val tmp = new org.apache.hadoop.fs.Path(
+      s"$path/.$ParamsName-${java.util.UUID.randomUUID}")
+    writeText(tmp, params.toSeq.map { case (k, v) => s"$k=$v\n" }.sorted.mkString,
+      overwrite = true, conf)
+    val fs = p.getFileSystem(conf)
+    fs.delete(p, false)
+    require(fs.rename(tmp, p), s"could not publish index parameters at $p")
+  }
+
+  /** The fixed build parameters of the index at `path` ([[writeParams]]).
+    * Throws `IllegalArgumentException` naming the path when it has none.
+    * Callers resolve the manifest first, so an unpublished directory is
+    * refused by [[currentGeneration]]'s message.
+    */
+  private[graft] def params(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Map[String, String] =
+    readText(new org.apache.hadoop.fs.Path(s"$path/$ParamsName"), conf)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no index parameters ($ParamsName) at $path — build the index " +
+          "with this library first"))
+      .linesIterator.filter(_.nonEmpty).map { l =>
+        val i = l.indexOf('=')
+        l.take(i) -> l.drop(i + 1)
+      }.toMap
+
+  /** Whether the managed table or index at `path` carries `src_batch`
+    * provenance — fixed by its build (first write or never).
+    */
+  private def hasProvenance(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Boolean =
+    params(path, conf)("provenance").toBoolean
+
+  /** The champion tier width C a BM25 index was built with. */
+  private[graft] def bm25Champions(path: String)(
+      implicit spark: org.apache.spark.sql.SparkSession): Int =
+    params(path, spark.sparkContext.hadoopConfiguration)("champions").toInt
+
+  /** A MinHash index's build (k, bands, shingle_n). */
+  private[graft] def minhashParams(path: String)(
+      implicit spark: org.apache.spark.sql.SparkSession): (Int, Int, Int) = {
+    val m = params(path, spark.sparkContext.hadoopConfiguration)
+    (m("k").toInt, m("bands").toInt, m("shingle_n").toInt)
+  }
+
+  /** An exact-Jaccard index's build (threshold, shingle_n). */
+  private[graft] def jaccardParams(path: String)(
+      implicit spark: org.apache.spark.sql.SparkSession): (Double, Int) = {
+    val m = params(path, spark.sparkContext.hadoopConfiguration)
+    (m("threshold").toDouble, m("shingle_n").toInt)
   }
 
   /** Batch slice directories (`batch_id=X`) of one table; (id, sealed). */
@@ -1699,44 +1733,22 @@ object Layouts {
     * banded/shingles would inflate candidate pairs — review r16).
     */
   private def writeFolded(genRoot: String, ids: Set[String],
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$genRoot/_FOLDED")
-    val fs = p.getFileSystem(conf)
-    val out = fs.create(p, true)
-    try out.write(ids.toSeq.sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      conf: org.apache.hadoop.conf.Configuration): Unit =
+    writeText(new org.apache.hadoop.fs.Path(s"$genRoot/_FOLDED"),
+      ids.toSeq.sorted.mkString("\n"), overwrite = true, conf)
 
   private def readFolded(genRoot: String,
-      conf: org.apache.hadoop.conf.Configuration): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$genRoot/_FOLDED")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().map(_.trim).filter(_.nonEmpty).toSet
-      finally in.close()
-    }
-  }
+      conf: org.apache.hadoop.conf.Configuration): Set[String] =
+    readText(new org.apache.hadoop.fs.Path(s"$genRoot/_FOLDED"), conf)
+      .fold(Set.empty[String])(
+        _.linesIterator.map(_.trim).filter(_.nonEmpty).toSet)
 
   /** Generation root recorded at one SPECIFIC manifest version, if that
     * pointer file still exists (grace pruning retires old ones).
     */
   private def generationAt(path: String, v: Long,
-      conf: org.apache.hadoop.conf.Configuration): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$path/$ManifestDirName/v${"%09d".format(v)}")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val gen = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-      Some(s"$path/$gen")
-    }
-  }
+      conf: org.apache.hadoop.conf.Configuration): Option[String] =
+    readText(pointerFile(path, v), conf).map(gen => s"$path/${gen.trim}")
 
   /** Union of `_FOLDED` across every generation published after `vFrom`
     * up to and including `vTo`. A generation's `_FOLDED` is NOT
@@ -1801,11 +1813,13 @@ object Layouts {
     * above [[currentGeneration]]): seal snapshot → live-tail split →
     * fold → pre-publish live copy (required) → `_FOLDED` → pointer
     * publish → post-publish re-list (slices sealed after the snapshot)
-    * → grace prune.
+    * → grace prune. Neither copy carries a slice in `exclude` into the
+    * new generation (a retraction's own batch, [[retractRefold]]).
     */
   private def managedCompact(path: String, v: Long, rootG: String,
       fam: ManifestFamily, graceGenerations: Int,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
+      conf: org.apache.hadoop.conf.Configuration,
+      exclude: Set[String] = Set.empty): Unit = {
     val sealedIds = fam.sliceStates(rootG, conf)
       .collect { case (id, true) => id }.toSet - "base"
     val live = liveTail(sealedIds)
@@ -1813,11 +1827,12 @@ object Layouts {
     val newGen = genName(v + 1)
     val newRoot = s"$path/$newGen"
     fam.fold(rootG, newRoot, foldIds)
-    live.foreach(b => fam.copySlice(rootG, newRoot, b, conf, required = true))
+    (live -- exclude).foreach(b =>
+      fam.copySlice(rootG, newRoot, b, conf, required = true))
     writeFolded(newRoot, foldIds, conf)
     publishGeneration(path, v + 1, newGen, conf)
     (fam.sliceStates(rootG, conf)
-      .collect { case (id, true) => id }.toSet -- foldIds -- live)
+      .collect { case (id, true) => id }.toSet -- foldIds -- live -- exclude)
       .foreach(b => fam.copySlice(rootG, newRoot, b, conf, required = false))
     pruneGenerations(path, v, graceGenerations, conf)
   }
@@ -1972,7 +1987,7 @@ object Layouts {
     * the rebase merges them so each cell directory is one tight file
     * again, at O(index) cost: no re-assignment (cent_id is already a
     * column of every row — the one pass is a read+rewrite of the lists,
-    * the centroid table and meta are untouched) and certainly no corpus
+    * the centroid table and `_params` are untouched) and certainly no corpus
     * rescan. Probe results are invariant, including the dynamic
     * partition pruning on cent_id (x156 value-tests both through x152's
     * per-cell oracle; IvfIndexSpec pins probe equality + the pruned
@@ -2009,24 +2024,10 @@ object Layouts {
       pageRows: Int = 20000,
       partitions: Int = 0,
       graceGenerations: Int = 1)(
-      implicit spark: org.apache.spark.sql.SparkSession): Unit = {
-    require(batchId != "base",
-      "refuse to retract the base generation — rebuild the table instead")
-    requireBatchId(batchId)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (v, rootG) = currentGeneration(path, conf)
-    require(spark.read.parquet(rootG).columns.contains("src_batch"),
-      s"$path carries no fold provenance (src_batch) — only slice-" +
-        "level retraction (dropBatch) is possible; build and append with " +
-        "provenance = true to enable this")
-    // null-safe filter: a row with NULL provenance (contract violation —
-    // a bare append into a provenanced table) must be KEPT, not silently
-    // deleted along with the retracted batch
-    retractRefold(path, batchId, v, rootG,
+      implicit spark: org.apache.spark.sql.SparkSession): Unit =
+    retractRefold(path, batchId, "table", graceGenerations)(foldFilter =>
       sortedTableFamily(sortCols, groupBytes, pageRows, partitions,
-        foldFilter = !(col("src_batch") <=> lit(batchId))),
-      graceGenerations, conf)
-  }
+        foldFilter = foldFilter))
 
   /** [[retractFolded]] for the MinHash trio: the same fold-surviving
     * deletion over all three tables at once — requires the index to have
@@ -2043,21 +2044,9 @@ object Layouts {
       pageRows: Int = 20000,
       partitions: Int = 0,
       graceGenerations: Int = 1)(
-      implicit spark: org.apache.spark.sql.SparkSession): Unit = {
-    require(batchId != "base",
-      "refuse to retract the base generation — rebuild the index instead")
-    requireBatchId(batchId)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (v, rootG) = currentGeneration(path, conf)
-    require(spark.read.parquet(s"$rootG/fp").columns.contains("src_batch"),
-      s"$path carries no fold provenance (src_batch) — only slice-" +
-        "level retraction (dropBatch) is possible; build and append " +
-        "with provenance = true to enable this")
-    retractRefold(path, batchId, v, rootG,
-      minhashFamily(groupBytes, pageRows, partitions,
-        foldFilter = !(col("src_batch") <=> lit(batchId))),
-      graceGenerations, conf)
-  }
+      implicit spark: org.apache.spark.sql.SparkSession): Unit =
+    retractRefold(path, batchId, "index", graceGenerations)(foldFilter =>
+      minhashFamily(groupBytes, pageRows, partitions, foldFilter = foldFilter))
 
   /** [[retractFolded]] for the IVF assign tree — the vector-index leg of
     * the GDPR path (embedding batches carry PII too). Requires the index
@@ -2069,49 +2058,36 @@ object Layouts {
       path: String,
       batchId: String,
       graceGenerations: Int = 1)(
+      implicit spark: org.apache.spark.sql.SparkSession): Unit =
+    retractRefold(path, batchId, "index", graceGenerations)(ivfFamily(_))
+
+  /** The RETRACT side of the manifest protocol, shared by the three
+    * `*RetractFolded` entry points: refuse `base` and a bad id, resolve
+    * the current generation, require the `provenance` the build recorded,
+    * then run a managed compact whose family folds WITHOUT the batch's
+    * rows (`family` gets the excluding fold filter) and whose live copies
+    * skip the batch's own slice, followed by physical cleanup of its
+    * surviving slice dirs across retained generations. The grace
+    * generation's folded copy is erased when the next compact/prune cycle
+    * retires it. `what` names the thing to rebuild in the refusal.
+    */
+  private def retractRefold(path: String, batchId: String, what: String,
+      graceGenerations: Int)(family: Column => ManifestFamily)(
       implicit spark: org.apache.spark.sql.SparkSession): Unit = {
     require(batchId != "base",
-      "refuse to retract the base generation — rebuild the index instead")
+      s"refuse to retract the base generation — rebuild the $what instead")
     requireBatchId(batchId)
     val conf = spark.sparkContext.hadoopConfiguration
     val (v, rootG) = currentGeneration(path, conf)
-    require(
-      spark.read.parquet(s"$rootG/assign").columns.contains("src_batch"),
+    require(hasProvenance(path, conf),
       s"$path carries no fold provenance (src_batch) — only slice-" +
-        "level retraction (dropBatch) is possible; build and append " +
-        "with provenance = true to enable this")
-    retractRefold(path, batchId, v, rootG,
-      ivfFamily(foldFilter = !(col("src_batch") <=> lit(batchId))),
-      graceGenerations, conf)
-  }
-
-  /** The RETRACT side of the manifest protocol: a managed compact whose
-    * family folds WITHOUT the batch's rows (the family is constructed
-    * with the excluding fold filter) and whose live-copy skips the
-    * batch's own slice, followed by physical cleanup of its surviving
-    * slice dirs across retained generations. The grace generation's
-    * folded copy is erased when the next compact/prune cycle retires it.
-    */
-  private def retractRefold(path: String, batchId: String, v: Long,
-      rootG: String, fam: ManifestFamily, graceGenerations: Int,
-      conf: org.apache.hadoop.conf.Configuration)(
-      implicit spark: org.apache.spark.sql.SparkSession): Unit = {
-    val wrapped = new ManifestFamily {
-      def sliceStates(g: String, c: org.apache.hadoop.conf.Configuration) =
-        fam.sliceStates(g, c)
-      def sealSlices(g: String, b: String,
-          c: org.apache.hadoop.conf.Configuration): Unit =
-        fam.sealSlices(g, b, c)
-      def copySlice(o: String, n: String, b: String,
-          c: org.apache.hadoop.conf.Configuration, required: Boolean): Unit =
-        if (b != batchId) fam.copySlice(o, n, b, c, required)
-      def forceCopySlice(o: String, n: String, b: String,
-          c: org.apache.hadoop.conf.Configuration): Unit =
-        fam.forceCopySlice(o, n, b, c)
-      def fold(o: String, n: String, ids: Set[String]): Unit =
-        fam.fold(o, n, ids)
-    }
-    managedCompact(path, v, rootG, wrapped, graceGenerations, conf)
+        "level retraction (dropBatch) is possible; build and append with " +
+        "provenance = true to enable this")
+    // null-safe filter: a row with NULL provenance (contract violation —
+    // a bare append into a provenanced table) must be KEPT, not silently
+    // deleted along with the retracted batch
+    managedCompact(path, v, rootG, family(!(col("src_batch") <=> lit(batchId))),
+      graceGenerations, conf, exclude = Set(batchId))
     dropBatch(path, batchId)
     ()
   }

@@ -238,12 +238,12 @@ object StreamDedup {
     val bid = s"$streamId-b$batchId"
     // in-batch re-deliveries collapse first, as in auditBatch
     val docs = batch.dropDuplicates("doc_id").localCheckpoint()
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
     // manifest-managed index: resolve the current immutable generation
     // ONCE for all three probe reads — a compact publishing mid-probe
     // cannot move this batch's root out from under it (the previous
     // generation survives as grace until the next compact)
     val root = graft.sources.Layouts.indexRoot(indexPath)
+    val (k, bands, shingleN) = graft.sources.Layouts.minhashParams(indexPath)
     // self-exclusion: never probe against this batch's own slice (see
     // the replay contract above); first-run batches have no slice and
     // the filter is a no-op
@@ -254,8 +254,7 @@ object StreamDedup {
     // re-probe the GROWN index and misclassify the batch against itself
     val st = graft.operators.Dedup.incrementalDedupStaged(
       docs, tbl("fp"), tbl("banded"), tbl("shingles"), "doc_id", "text",
-      k = meta.getAs[Int]("k"), bands = meta.getAs[Int]("bands"),
-      shingleN = meta.getAs[Int]("shingle_n"), threshold = threshold)
+      k, bands, shingleN, threshold)
       .localCheckpoint()
     // admitted docs materialize once; the append's three table writes
     // would otherwise re-run the probe-derived join per write

@@ -99,21 +99,7 @@ object ScaleSweep {
     val famFilter: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     def want(family: String): Boolean = famFilter.forall(_.contains(family))
-    // SWEEP_NO_COALESCE=1: A/B hook for the AQE partition-coalescing
-    // hypothesis — byte-targeted coalescing under-parallelizes CPU-heavy
-    // per-row stages (dot-product assignment) at middle scales where the
-    // shuffled bytes are small but the compute is not
-    // SWEEP_INIT_PARTITIONS=N: A/B hook for shuffle-width headroom — raise
-    // AQE's initialPartitionNum above the fixed session width so large
-    // shuffles (the 100× prefix join's exploded posting lists) split into
-    // bounded per-partition hash-build state instead of growing with scale
-    val extra =
-      (if (sys.env.get("SWEEP_NO_COALESCE").contains("1"))
-        Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-      else Map.empty[String, String]) ++
-      sys.env.get("SWEEP_INIT_PARTITIONS").map(n =>
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> n)
-    val spark = GraftSession.build("graft-scalesweep", extraConf = extra)
+    val spark = GraftSession.build("graft-scalesweep")
     spark.sparkContext.setLogLevel("ERROR")
     // SWEEP_STAGE_LOG=1: per-stage wall/task attribution on stderr — the
     // probe for "which stage starves the cores" (a cell whose timeline
@@ -581,19 +567,7 @@ object ScaleSweep {
       // SemDeDup with the centroid knob: cells ~50 at EVERY scale
       if (want("semdedup_scaled")) {
         val emb = replicateEmb(baseEmb, c, par).localCheckpoint()
-        // SWEEP_CELL_HISTO=1: print the fine-cell occupancy tail instead of
-        // timing — the diagnosis probe for the hot-cell-skew hypothesis
-        // (one coarse/fine cell attracting a large corpus share turns the
-        // within-cell stages into a single hot task)
-        if (sys.env.get("SWEEP_CELL_HISTO").contains("1")) {
-          val ledger = SimilaritySearch
-            .semDedupScaled(emb, targetCellSize = 50, tau = 0.25)
-          val top = ledger.groupBy("cent_id").count()
-            .orderBy(col("count").desc).limit(10).collect()
-          val tot = ledger.count()
-          println(s"[sweep] c=$c cell histogram: total=$tot top10=" +
-            top.map(r => r.getLong(1)).mkString(","))
-        } else record("semdedup_scaled", c)(
+        record("semdedup_scaled", c)(
           SimilaritySearch.semDedupScaled(emb, targetCellSize = 50, tau = 0.25)
             .where(col("dropped")).count())
       }

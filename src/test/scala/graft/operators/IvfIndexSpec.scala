@@ -21,6 +21,10 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
   private def assignAt(p: String): String =
     s"${graft.sources.Layouts.indexRoot(p)(spark)}/assign"
 
+  /** The index's recorded build parameters. */
+  private def params(p: String): Map[String, String] =
+    graft.sources.Layouts.params(p, spark.sparkContext.hadoopConfiguration)
+
   private lazy val indexDir: String = {
     val out = java.nio.file.Files.createTempDirectory("ivfspec").toString
     graft.sources.Layouts.ivfIndex(
@@ -79,8 +83,8 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
 
   test("a hand-made unmanaged IVF dir is refused by every append") {
     // hand-built x144-era layout: no corpusn column, assign partitioned on
-    // cent_id only, meta carrying ONLY cent_modulo, and no manifest — no
-    // build of this library writes it, so no append may grow it
+    // cent_id only, parameters carrying ONLY cent_modulo, and no manifest
+    // — no build of this library writes it, so no append may grow it
     val corpus = e.where(col("vec_id") >= 10)
     val dir = java.nio.file.Files.createTempDirectory("ivflegacy").toString
     corpus.where(col("vec_id") % 50 === 0)
@@ -92,8 +96,8 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
         corpus.where(col("vec_id") % 2 === 0), centsFor)
       .drop("corpusn")
       .write.partitionBy("cent_id").parquet(s"$dir/assign")
-    import spark.implicits._
-    Seq(50L).toDF("cent_modulo").coalesce(1).write.parquet(s"$dir/meta")
+    graft.sources.Layouts.writeParams(dir, Map("cent_modulo" -> 50L),
+      spark.sparkContext.hadoopConfiguration)
     val odd = corpus.where(col("vec_id") % 2 === 1)
     Seq(Some("b1"), None).foreach { bid =>
       intercept[IllegalArgumentException] {
@@ -212,23 +216,21 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
   }
 
   test("index meta records the centroid sampling and assignment form") {
-    val meta = spark.read.parquet(s"$indexDir/meta").collect()
-    meta.map(r => (r.getAs[Long]("cent_modulo"), r.getAs[Boolean]("two_level")))
-      .toList shouldBe List((50L, false))
+    val m = params(indexDir)
+    (m("cent_modulo").toLong, m("two_level").toBoolean) shouldBe ((50L, false))
   }
 
   test("default build auto-selects two-level above the centroid threshold") {
     // centModulo = 1 → every corpus vector is a centroid: k > 128 on the
     // fixture, so the DEFAULT (no twoLevel arg) must resolve to the
-    // two-level assignment and record it in meta — the scale-safe path a
+    // two-level assignment and record it in _params — the scale-safe path a
     // naive 100 TB user gets without knowing the knob exists. The small-k
-    // flat default is pinned by the meta test above (k ≈ 13 at modulo 50).
+    // flat default is pinned by the parameters test above (k ≈ 13 at modulo 50).
     val out = java.nio.file.Files.createTempDirectory("ivfspecauto").toString
     val corpus = e.where(col("vec_id") >= 10)
     assert(corpus.count() > graft.sources.Layouts.IvfAutoTwoLevelCentroids)
     graft.sources.Layouts.ivfIndex(corpus, out, centModulo = 1)
-    val meta = spark.read.parquet(s"$out/meta").collect()
-    meta.map(_.getAs[Boolean]("two_level")).toList shouldBe List(true)
+    params(out)("two_level").toBoolean shouldBe true
     // layout contract unchanged: every vector listed exactly once
     val assign = spark.read.parquet(assignAt(out))
     assert(assign.count() == corpus.count())
@@ -262,6 +264,6 @@ class IvfIndexSpec extends AnyFunSuite with Matchers {
     val probed = SimilaritySearch.ivfTopKStaged(
       e.where(col("vec_id") < 10), out, k = 5, nprobe = 2)
     probed.count() should be > 0L
-    spark.read.parquet(s"$out/meta").head().getAs[Boolean]("two_level") shouldBe true
+    params(out)("two_level").toBoolean shouldBe true
   }
 }

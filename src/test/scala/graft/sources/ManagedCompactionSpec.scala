@@ -319,12 +319,43 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
       Layouts.indexRoot(t) shouldBe s"$t/g=000000000"
     }
     Layouts.manageBm25(bm) // every table resolves: a no-op check
-    // parameter identity stays at the index path
+    // parameter identity stays at the index path, one small file each
     Seq(bm, mh, ivf).foreach(p =>
-      new java.io.File(s"$p/meta").isDirectory shouldBe true)
+      new java.io.File(s"$p/_params").isFile shouldBe true)
+    // every born-managed table records its first-write-or-never provenance
+    tables.foreach(t => Layouts.params(t, conf)("provenance") shouldBe
+      (t == tbl).toString)
     new java.io.File(s"$ivf/cent").isDirectory shouldBe true
     spark.read.parquet(Layouts.indexRoot(tbl)).columns should contain("src_batch")
     spark.read.parquet(Layouts.indexRoot(post)).count() should be > 0L
+  }
+
+  test("index parameters round-trip through _params for all four families; " +
+      "a missing _params throws naming the path") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val conf = spark.sparkContext.hadoopConfiguration
+    val few = docs.where(col("doc_id") % 8 === 0)
+    val (bm, mh, jac, ivf) =
+      (tmp("params-bm25"), tmp("params-mh"), tmp("params-jac"), tmp("params-ivf"))
+    Layouts.bm25Index(few, bm, groupBytes = 256L * 1024, pageRows = 2000,
+      champions = 7)
+    Layouts.minhashIndex(few, mh, k = 12, bands = 4, shingleN = 2,
+      groupBytes = 256L * 1024, pageRows = 2000, provenance = true)
+    Layouts.jaccardIndex(few, jac, shingleN = 2, threshold = 0.7,
+      groupBytes = 256L * 1024, pageRows = 2000)
+    Layouts.ivfIndex(emb.where(col("vec_id") >= 10), ivf, centModulo = 25,
+      twoLevel = Some(true))
+    Layouts.bm25Champions(bm) shouldBe 7
+    Layouts.minhashParams(mh) shouldBe ((12, 4, 2))
+    Layouts.params(mh, conf)("provenance") shouldBe "true"
+    Layouts.jaccardParams(jac) shouldBe ((0.7, 2))
+    Layouts.params(ivf, conf) shouldBe
+      Map("cent_modulo" -> "25", "two_level" -> "true", "provenance" -> "false")
+    val bare = tmp("params-none")
+    intercept[IllegalArgumentException](Layouts.params(bare, conf))
+      .getMessage should include(bare)
+    intercept[IllegalArgumentException](Layouts.jaccardParams(bare))
+      .getMessage should include(bare)
   }
 
   test("a build that crashed before its publish: indexRoot throws, the re-run " +
@@ -339,10 +370,15 @@ class ManagedCompactionSpec extends AnyFunSuite with Matchers {
     new java.io.File(s"$idx/g=000000000").isDirectory shouldBe true
     val e = intercept[IllegalArgumentException](Layouts.indexRoot(idx))
     e.getMessage should include(idx)
+    // parameters a crashed build left behind (here: an earlier build's
+    // with a provenance the re-run does not use) are replaced, not kept
+    val conf = spark.sparkContext.hadoopConfiguration
+    Layouts.writeParams(idx, Map("provenance" -> true, "stale" -> 1), conf)
     // the re-run (over a different row set) must not keep the debris
     val quarter = docs.where(col("doc_id") % 4 === 0)
     Layouts.postingIndex(quarter, idx, groupBytes = 256L * 1024, pageRows = 2000)
-    Layouts.currentGeneration(idx, spark.sparkContext.hadoopConfiguration)._1 shouldBe 0L
+    Layouts.currentGeneration(idx, conf)._1 shouldBe 0L
+    Layouts.params(idx, conf) shouldBe Map("provenance" -> "false")
     val rebuilt = tmp("crash-ref")
     Layouts.postingIndex(quarter, rebuilt, groupBytes = 256L * 1024, pageRows = 2000)
     def rows(p: String) = spark.read.parquet(Layouts.indexRoot(p))
